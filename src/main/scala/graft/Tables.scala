@@ -43,9 +43,12 @@ object Tables {
 
 /** Session factory with the engine's standard local-mode tuning. */
 object Graft {
-  def session(master: String = s"local[${sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")}]",
+  /** Cores to run on: `SPARK_GRAFT_CPUS`, else every core of this machine. */
+  private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+    Runtime.getRuntime.availableProcessors.toString)
+
+  def session(master: String = s"local[$cpus]",
               appName: String = "graft"): SparkSession = {
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(master)
       .appName(appName)
@@ -53,6 +56,10 @@ object Graft {
       // spark-submit reaches them with the same one-line conf
       .config("spark.sql.extensions", "graft.GraftExtensions")
       .config("spark.sql.shuffle.partitions", cpus)
+      // Spark's 4 MB per-file open cost floors the split size, so an input
+      // of a few MB scans in 1-2 tasks; at 1 MB small local inputs split
+      // into about `cpus` tasks and fill every core
+      .config("spark.sql.files.openCostInBytes", "1m")
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -2522,27 +2522,46 @@ object Loader {
     * file). coalesce(1) serializes the final write through one task — only
     * correct for driver-scale results (the reference's own output is 22k
     * rows); large outputs should use [[writeCsvDir]].
+    * The empty-result guard is part of the write, not an extra action: the
+    * plan runs once, into a temp dir, and a result with no part file or a
+    * header-only part file throws IllegalArgumentException without touching
+    * `path` (two reads of the local part file, no Spark job). The temp dir
+    * is removed on every exit, including a failed write.
     * Returns true on success, like the reference's `write_csv`.
     */
   def writeCsvSingle(df: DataFrame, path: String): Boolean = {
     if (!path.endsWith(".csv"))
       throw new java.io.FileNotFoundException(
         s"Loader.writeCsvSingle: expected a .csv path, got '$path'")
-    if (df.isEmpty)
-      throw new IllegalArgumentException(
-        "Loader.writeCsvSingle: refusing to write an empty result")
-    val tmp = path + ".spark-tmp"
-    df.coalesce(1).write.mode(SaveMode.Overwrite)
-      .option("header", "true").csv(tmp)
-    val part = Files.list(Paths.get(tmp)).filter { p =>
-      val n = p.getFileName.toString
-      n.startsWith("part-") && n.endsWith(".csv")
-    }.findFirst.orElseThrow(() =>
-      new IllegalStateException("no part file produced"))
-    Files.move(part, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
-    // best-effort cleanup of the temp dir
-    Files.walk(Paths.get(tmp)).sorted(java.util.Comparator.reverseOrder())
-      .forEach(p => Files.deleteIfExists(p))
-    true
+    val tmp = Paths.get(path + ".spark-tmp")
+    try {
+      df.coalesce(1).write.mode(SaveMode.Overwrite)
+        .option("header", "true").csv(tmp.toString)
+      val parts = Files.list(tmp)
+      val part = try parts.filter { p =>
+        val n = p.getFileName.toString
+        n.startsWith("part-") && n.endsWith(".csv")
+      }.findFirst finally parts.close()
+      if (part.isEmpty || headerOnly(part.get))
+        throw new IllegalArgumentException(
+          "Loader.writeCsvSingle: refusing to write an empty result")
+      Files.move(part.get, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
+      true
+    } finally deleteTree(tmp)
   }
+
+  /** True when a CSV part file holds no data row: nothing after its first
+    * line (Spark writes the header even for an empty partition). */
+  private def headerOnly(part: java.nio.file.Path): Boolean = {
+    val in = Files.newBufferedReader(part)
+    try { in.readLine(); in.read() == -1 } finally in.close()
+  }
+
+  private def deleteTree(root: java.nio.file.Path): Unit =
+    if (Files.exists(root)) {
+      val walk = Files.walk(root)
+      try walk.sorted(java.util.Comparator.reverseOrder())
+        .forEach(p => Files.deleteIfExists(p))
+      finally walk.close()
+    }
 }

@@ -58,6 +58,41 @@ class ExtractorLoaderSpec extends SparkSpec {
     intercept[IllegalArgumentException] {
       Loader.writeCsvSingle(df.filter($"speed" > 999), s"$dir/none.csv")
     }
+    // the guard leaves no output and no temp dir behind
+    def exists(name: String) = Files.exists(Paths.get(s"$dir/$name"))
+    assert(!exists("none.csv") && !exists("none.csv.spark-tmp"))
+    // an empty result from a multi-partition plan (a header-only part
+    // file) also throws, and a file already at the path keeps its bytes
+    val prior = Files.readAllBytes(Paths.get(out))
+    intercept[IllegalArgumentException] {
+      Loader.writeCsvSingle(
+        spark.range(0, 100, 1, 4).filter($"id" < 0).toDF(), out)
+    }
+    assert(Files.readAllBytes(Paths.get(out)).sameElements(prior))
+    assert(!exists("animals.csv.spark-tmp"))
+    // a plan that fails mid-job propagates its exception, leaves no residue
+    val boom = org.apache.spark.sql.functions.udf { (id: Long) =>
+      if (id == 42) throw new IllegalStateException("boom at 42"); id }
+    val failed = intercept[Exception] {
+      Loader.writeCsvSingle(
+        spark.range(0, 100, 1, 4).select(boom($"id").as("id")),
+        s"$dir/failed.csv")
+    }
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("boom at 42")), failed)
+    assert(!exists("failed.csv") && !exists("failed.csv.spark-tmp"))
+  }
+
+  test("writeCsvSingle evaluates its input plan exactly once") {
+    val out = s"$tmpDir/once.csv"
+    val rows = spark.sparkContext.longAccumulator("writeCsvSingle rows")
+    // unsorted and multi-partition: a separate emptiness action would
+    // evaluate (part of) the plan a second time and count rows twice
+    val df = spark.range(0, 1000, 1, 8)
+      .map { i => rows.add(1); i.longValue }.toDF("id")
+    assert(Loader.writeCsvSingle(df, out))
+    assert(rows.value == 1000L)
+    assert(Files.readAllLines(Paths.get(out)).size == 1001)
   }
 
   test("parquet + json extractors read with projection") {
