@@ -47,6 +47,11 @@ object Graft {
   private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
+  /** Entries in Spark's generated-class cache; `SparkTestSession` uses
+    * the same value.
+    */
+  val CodegenCacheEntries = 1000
+
   def session(master: String = s"local[$cpus]",
               appName: String = "graft"): SparkSession = {
     val spark = SparkSession.builder()
@@ -60,6 +65,12 @@ object Graft {
       // of a few MB scans in 1-2 tasks; at 1 MB small local inputs split
       // into about `cpus` tasks and fill every core
       .config("spark.sql.files.openCostInBytes", "1m")
+      // The class cache is JVM-global, sized by the first session that
+      // generates code. A traced `table_churn` benchmark process (seed 3,
+      // 4 CPUs) uses 336 distinct classes; at Spark's default of 100
+      // entries it compiled 2,044 times, each commit recompiling code
+      // compiled a moment earlier. 1000 is about 3x that working set.
+      .config("spark.sql.codegen.cache.maxEntries", CodegenCacheEntries)
       .config("spark.sql.adaptive.enabled", "true")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")

@@ -566,10 +566,9 @@ object Graph {
       .filter(col("u").isNotNull && col("v").isNotNull &&
               col("u") =!= col("v"))
       .distinct()
-    // lazy: the id-range guard count right below materializes symc
+    // lazy: the id-range guard probe right below materializes symc
     val symc = persistRoundLazy(sym0, checkpointDir)
-    val tooBig = symc.filter(col("u") >= 100000000L).limit(1).count()
-    require(tooBig == 0L,
+    require(symc.filter(col("u") >= 100000000L).isEmpty,
       "labelPropagation: node ids must be < 1e8 for the integer tie-break")
     var labels = persistRoundChained(
       symc.select(col("u").as("node")).distinct()

@@ -349,7 +349,7 @@ object Loader {
       else d.df.filter(!regexp_extract(col("file"),
           BucketCol + "=([0-9]+)/", 1).cast("int")
         .isin(rewritten.toSeq: _*))
-    }.filter(d => d.limit(1).count() > 0)
+    }.filter(d => !d.isEmpty)
 
   /** A committed version's manifest: bucket → version holding its
     * current files, plus the LAYOUT parameters (bucket count and hash —
@@ -1456,9 +1456,8 @@ object Loader {
     checkGate(spark, source, maintain, "mergeInto")
     val src = source.persist()
     try {
-      val dup = src.groupBy(col(key)).agg(count(lit(1)).as("__n"))
-        .filter(col("__n") > 1).limit(1).count()
-      require(dup == 0L,
+      require(src.groupBy(col(key)).agg(count(lit(1)).as("__n"))
+          .filter(col("__n") > 1).isEmpty,
         s"mergeInto: the source has multiple rows for one $key — " +
         "ambiguous MATCHED actions (the standard's cardinality " +
         "violation); de-duplicate the source first")
@@ -2185,8 +2184,8 @@ object Loader {
       // size rides the prior's verdict (the new tombstones are
       // churn-sized): past the broadcast bound the probe anti-joins
       // by shuffle like every reader would.
-      require(dvAnti(scan0, DvSet(all,
-          priorDv.map(_.bytes).getOrElse(0L))).limit(1).count() == 1L,
+      require(!dvAnti(scan0, DvSet(all,
+          priorDv.map(_.bytes).getOrElse(0L))).isEmpty,
         s"deleteWhereVectors: every row of $baseDir matched — " +
         "refusing to tombstone the whole table (drop it instead)")
       val attempt = newAttemptDir(fs, baseDir)

@@ -15,6 +15,9 @@ object SparkTestSession {
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
       .config("spark.sql.shuffle.partitions", "4")
+      // the same class-cache size as Graft.session: the cache is JVM-global
+      // and sized by the first session that generates code
+      .config("spark.sql.codegen.cache.maxEntries", Graft.CodegenCacheEntries)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
