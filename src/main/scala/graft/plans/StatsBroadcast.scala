@@ -148,6 +148,12 @@ object StatsRegistry {
     Option(byPath.get(key)).flatMap(_._2)
   def clear(): Unit = byPath.clear()
   def isEmpty: Boolean = byPath.isEmpty
+  /** Every registered entry by registry key (an immutable copy). */
+  private[graft] def entries
+      : Map[String, (TableStats, Option[TableSnapshot])] = {
+    import scala.jdk.CollectionConverters._
+    byPath.asScala.toMap
+  }
 }
 
 /** Shared scan-side stats resolution for the injected stats rules:

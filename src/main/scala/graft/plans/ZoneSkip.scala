@@ -1,6 +1,6 @@
 package graft.plans
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.{Filter, LogicalPlan}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -117,6 +117,11 @@ object ZoneRegistry {
     Option(byPath.get(key))
   def clear(): Unit = byPath.clear()
   def isEmpty: Boolean = byPath.isEmpty
+  /** Every registered manifest by registry key (an immutable copy). */
+  private[graft] def entries: Map[String, ZoneManifest] = {
+    import scala.jdk.CollectionConverters._
+    byPath.asScala.toMap
+  }
 }
 
 /** Zone-manifest authoring and registration — the q210 ANALYZE shape
@@ -153,6 +158,15 @@ object Zones {
     */
   def analyzeFiles(df: DataFrame, cols: Seq[String],
                    fileCol: org.apache.spark.sql.Column = input_file_name())
+      : DataFrame =
+    zonesUnsorted(df, cols, fileCol).orderBy(col("file"), col("col_name"))
+
+  /** [[analyzeFiles]] without its global sort — for a caller that
+    * collects the driver-sized result and orders it there (a commit's
+    * maintenance), sparing the sort's sampling job and range shuffle.
+    */
+  private[graft] def zonesUnsorted(df: DataFrame, cols: Seq[String],
+                                   fileCol: org.apache.spark.sql.Column)
       : DataFrame = {
     require(cols.nonEmpty, "Zones.analyzeFiles: no columns")
     // min/max in the column's NATIVE type, rendered after — a string
@@ -172,7 +186,6 @@ object Zones {
     wide.select(col("file"), explode(expr(rows)).as("z"))
       .select(col("file"), col("z.col_name"), col("z.min_repr"),
         col("z.max_repr"), col("z.col_tag"))
-      .orderBy(col("file"), col("col_name"))
   }
 
   /** Per-file DICTIONARY manifest of `df` over `cols`: for every file
@@ -202,7 +215,15 @@ object Zones {
   def analyzeDictFiles(df: DataFrame, cols: Seq[String],
                        maxDict: Int = 256,
                        fileCol: org.apache.spark.sql.Column =
-                         input_file_name()): DataFrame = {
+                         input_file_name()): DataFrame =
+    dictsUnsorted(df, cols, maxDict, fileCol)
+      .orderBy(col("file"), col("col_name"))
+
+  /** [[analyzeDictFiles]] without its global sort (see [[zonesUnsorted]]). */
+  private[graft] def dictsUnsorted(df: DataFrame, cols: Seq[String],
+                                   maxDict: Int,
+                                   fileCol: org.apache.spark.sql.Column)
+      : DataFrame = {
     require(cols.nonEmpty, "Zones.analyzeDictFiles: no columns")
     require(maxDict >= 1, "Zones.analyzeDictFiles: bad maxDict")
     val capped = udaf(new CappedSetAgg(maxDict))
@@ -218,7 +239,7 @@ object Zones {
         .filter(col("dict_repr").isNotNull)
         .select(col("file"), lit(c).as("col_name"), col("dict_repr"),
           lit(tagOf(df.schema(c).dataType)).as("col_tag"))
-    }.reduce(_ unionByName _).orderBy(col("file"), col("col_name"))
+    }.reduce(_ unionByName _)
   }
 
   /** Size-capped exact distinct set: a typed, MERGEABLE aggregate whose
@@ -298,7 +319,15 @@ object Zones {
                         numBits: Int = 1 << 16,
                         numHashes: Int = 5,
                         fileCol: org.apache.spark.sql.Column =
-                          input_file_name()): DataFrame = {
+                          input_file_name()): DataFrame =
+    bloomsUnsorted(df, cols, numBits, numHashes, fileCol)
+      .orderBy(col("file"), col("col_name"), col("w"))
+
+  /** [[analyzeBloomFiles]] without its global sort (see [[zonesUnsorted]]). */
+  private[graft] def bloomsUnsorted(df: DataFrame, cols: Seq[String],
+                                    numBits: Int, numHashes: Int,
+                                    fileCol: org.apache.spark.sql.Column)
+      : DataFrame = {
     require(cols.nonEmpty, "Zones.analyzeBloomFiles: no columns")
     require(numBits >= 64 && numBits % 64 == 0,
       "Zones.analyzeBloomFiles: numBits must be a positive multiple of 64")
@@ -340,7 +369,6 @@ object Zones {
           col("w"), col("word"),
           lit(tagOf(df.schema(c).dataType)).as("col_tag"))
     }.reduce(_ unionByName _)
-      .orderBy(col("file"), col("col_name"), col("w"))
   }
 
   /** Persist a zone manifest as the table's parquet metadata table. */
@@ -364,14 +392,23 @@ object Zones {
     * not contain are simply never consulted. `dictDirs`, when given,
     * are [[analyzeDictFiles]] metadata tables merged into the
     * manifest's dictionary half.
+    *
+    * `zoneRows` / `dictRows` / `bloomRows` are metadata rows already in
+    * driver memory, laid out as the matching analyzer's output (a
+    * commit registering the version it just analyzed passes them
+    * instead of reading its own metadata back); they merge with the
+    * rows loaded from the dirs.
     */
   def registerFromMetadataRoots(spark: SparkSession, dirs: Seq[String],
                                 metaDirs: Seq[String],
                                 dictDirs: Seq[String] = Nil,
                                 bloomDirs: Seq[String] = Nil,
-                                rebaseTo: Option[String] = None): Unit =
+                                rebaseTo: Option[String] = None,
+                                zoneRows: Seq[Row] = Nil,
+                                dictRows: Seq[Row] = Nil,
+                                bloomRows: Seq[Row] = Nil): Unit =
     ZoneRegistry.registerRoots(dirs, mergedManifest(spark, metaDirs,
-      dictDirs, bloomDirs, rebaseTo))
+      dictDirs, bloomDirs, rebaseTo, zoneRows, dictRows, bloomRows))
 
   /** Reinterpret a durably-recorded file path against the table base
     * it is being REGISTERED under: metadata rows record absolute paths
@@ -408,86 +445,92 @@ object Zones {
   private def mergedManifest(spark: SparkSession, metaDirs: Seq[String],
                              dictDirs: Seq[String],
                              bloomDirs: Seq[String] = Nil,
-                             rebaseTo: Option[String] = None)
+                             rebaseTo: Option[String] = None,
+                             zoneRows: Seq[Row] = Nil,
+                             dictRows: Seq[Row] = Nil,
+                             bloomRows: Seq[Row] = Nil)
       : ZoneRegistry.ZoneManifest = {
-    val mm = if (metaDirs.isEmpty) ZoneRegistry.ZoneManifest(Map.empty)
-             else loadManifest(spark, metaDirs, rebaseTo)
-    val (dicts, dtags) = loadDicts(spark, dictDirs, rebaseTo)
-    val (blooms, btags) = loadBlooms(spark, bloomDirs, rebaseTo)
+    val mm = loadManifest(spark, metaDirs, zoneRows, rebaseTo)
+    val (dicts, dtags) = loadDicts(spark, dictDirs, dictRows, rebaseTo)
+    val (blooms, btags) = loadBlooms(spark, bloomDirs, bloomRows, rebaseTo)
     mm.copy(dicts = dicts, blooms = blooms,
       tags = mm.tags ++ dtags ++ btags)
   }
 
-  private def loadBlooms(spark: SparkSession, bloomDirs: Seq[String],
-                         rebaseTo: Option[String] = None)
-      : (Map[String, Map[String, ZoneRegistry.BloomSketch]],
-         Map[String, String]) =
-    if (bloomDirs.isEmpty) (Map.empty, Map.empty)
+  /** The rows of the metadata tables at `dirs` (one Spark scan; none
+    * when `dirs` is empty) projected onto `cols`, followed by `rows`.
+    * A table written before column tags existed reads `col_tag` as NULL.
+    */
+  private def metadataRows(spark: SparkSession, dirs: Seq[String],
+                           cols: Seq[String], rows: Seq[Row]): Seq[Row] =
+    if (dirs.isEmpty) rows
     else {
-      // one row per (file, col, nonzero word) — metadata-sized collect
-      val rows = spark.read.parquet(bloomDirs: _*)
-        .select(col("file"), col("col_name"), col("num_bits"),
-          col("num_hashes"), col("w"), col("word"), col("col_tag"))
-        .collect()
-      val blooms = rows
-        .groupBy(r => ZoneRegistry.fileKey(
-          rebasedKey(rebaseTo)(r.getString(0))))
-        .map { case (f, rs) =>
-          f -> rs.groupBy(_.getString(1)).map { case (c, ws) =>
-            c -> ZoneRegistry.BloomSketch(ws.head.getInt(2),
-              ws.head.getInt(3),
-              ws.map(r => r.getInt(4) -> r.getLong(5)).toMap)
-          }
-        }
-      val tags = rows.map(r => r.getString(1) -> r.getString(6)).toMap
-      (blooms, tags)
+      val raw = spark.read.parquet(dirs: _*)
+      val untagged = !raw.schema.fieldNames.contains("col_tag")
+      raw.select(cols.map(c =>
+          if (c == "col_tag" && untagged) lit(null).cast("string").as(c)
+          else col(c)): _*)
+        .collect().toSeq ++ rows
     }
+
+  // each loader below groups its kind's rows — loaded from dirs and/or
+  // passed in memory, in the analyzer's column order — by the rebased,
+  // URI-normalized file key; a metadata table written before column
+  // tags existed contributes no tags (parse-based behavior)
+  private def loadBlooms(spark: SparkSession, bloomDirs: Seq[String],
+                         fresh: Seq[Row], rebaseTo: Option[String])
+      : (Map[String, Map[String, ZoneRegistry.BloomSketch]],
+         Map[String, String]) = {
+    // one row per (file, col, nonzero word) — metadata-sized collect
+    val rows = metadataRows(spark, bloomDirs, Seq("file", "col_name",
+      "num_bits", "num_hashes", "w", "word", "col_tag"), fresh)
+    val blooms = rows
+      .groupBy(r => ZoneRegistry.fileKey(
+        rebasedKey(rebaseTo)(r.getString(0))))
+      .map { case (f, rs) =>
+        f -> rs.groupBy(_.getString(1)).map { case (c, ws) =>
+          c -> ZoneRegistry.BloomSketch(ws.head.getInt(2),
+            ws.head.getInt(3),
+            ws.map(r => r.getInt(4) -> r.getLong(5)).toMap)
+        }
+      }
+    (blooms, tagsOf(rows, 6))
+  }
 
   private def loadDicts(spark: SparkSession, dictDirs: Seq[String],
-                        rebaseTo: Option[String] = None)
-      : (Map[String, Map[String, Set[String]]], Map[String, String]) =
-    if (dictDirs.isEmpty) (Map.empty, Map.empty)
-    else {
-      // one row per (file, col) with a ≤maxDict array — the same bounded
-      // driver fetch as the min/max manifest load
-      val raw = spark.read.parquet(dictDirs: _*)
-      val hasTag = raw.schema.fieldNames.contains("col_tag")
-      val cols = Seq(col("file"), col("col_name"), col("dict_repr")) ++
-        (if (hasTag) Seq(col("col_tag")) else Nil)
-      val rows = raw.select(cols: _*).collect()
-      val dicts = rows.groupBy(r => ZoneRegistry.fileKey(
-        rebasedKey(rebaseTo)(r.getString(0))))
-        .map { case (f, rs) =>
-          f -> rs.map(r =>
-            r.getString(1) -> r.getSeq[String](2).toSet).toMap
-        }
-      val tags =
-        if (hasTag) rows.map(r => r.getString(1) -> r.getString(3)).toMap
-        else Map.empty[String, String]
-      (dicts, tags)
-    }
+                        fresh: Seq[Row], rebaseTo: Option[String])
+      : (Map[String, Map[String, Set[String]]], Map[String, String]) = {
+    // one row per (file, col) with a ≤maxDict array — the same bounded
+    // driver fetch as the min/max manifest load
+    val rows = metadataRows(spark, dictDirs,
+      Seq("file", "col_name", "dict_repr", "col_tag"), fresh)
+    val dicts = rows.groupBy(r => ZoneRegistry.fileKey(
+      rebasedKey(rebaseTo)(r.getString(0))))
+      .map { case (f, rs) =>
+        f -> rs.map(r =>
+          r.getString(1) -> r.getSeq[String](2).toSet).toMap
+      }
+    (dicts, tagsOf(rows, 3))
+  }
 
   private def loadManifest(spark: SparkSession, metaDirs: Seq[String],
-                           rebaseTo: Option[String] = None)
+                           fresh: Seq[Row], rebaseTo: Option[String])
       : ZoneRegistry.ZoneManifest = {
-    val raw = spark.read.parquet(metaDirs: _*)
-    // pre-tag metadata tables load with no tags (parse-based behavior)
-    val hasTag = raw.schema.fieldNames.contains("col_tag")
-    val cols = Seq(col("file"), col("col_name"), col("min_repr"),
-      col("max_repr")) ++ (if (hasTag) Seq(col("col_tag")) else Nil)
-    val rows = raw.select(cols: _*).collect()
+    val rows = metadataRows(spark, metaDirs,
+      Seq("file", "col_name", "min_repr", "max_repr", "col_tag"), fresh)
     val files = rows.groupBy(r => ZoneRegistry.fileKey(
       rebasedKey(rebaseTo)(r.getString(0))))
       .map { case (f, rs) =>
         f -> rs.map(r => r.getString(1) -> (r.getString(2), r.getString(3)))
           .toMap
       }
-    val tags =
-      if (hasTag)
-        rows.map(r => r.getString(1) -> r.getString(4)).toMap
-      else Map.empty[String, String]
-    ZoneRegistry.ZoneManifest(files, tags)
+    ZoneRegistry.ZoneManifest(files, tagsOf(rows, 4))
   }
+
+  /** column → type tag from the rows' tag field `i` (NULL: untagged). */
+  private def tagsOf(rows: Seq[Row], i: Int): Map[String, String] =
+    rows.filterNot(_.isNullAt(i)).map(r => r.getString(1) -> r.getString(i))
+      .toMap
 
   /** ANALYZE + persist + register in one call (the ingest-time step). */
   def analyzeAndRegister(spark: SparkSession, tableDir: String,

@@ -295,15 +295,20 @@ object Loader {
     */
   private val DvBroadcastMaxBytes = 64L << 20
 
+  /** The layout of every `_dv` dir (only this file writes them). */
+  private val DvSchema = org.apache.spark.sql.types.StructType.fromDDL(
+    "file STRING, pos BIGINT")
+
   /** The applicable DV set recorded at `versionDir`, if any:
     * (file suffix, pos) plus its size. One content-summary RPC — no
-    * data read. */
+    * data read, and no footer-inference job: the read carries
+    * [[DvSchema]]. Every `_dv` read goes through here. */
   private def readDv(spark: org.apache.spark.sql.SparkSession,
                      fs: org.apache.hadoop.fs.FileSystem,
                      versionDir: String): Option[DvSet] = {
     val p = new org.apache.hadoop.fs.Path(versionDir, DvDirName)
     if (fs.exists(p))
-      Some(DvSet(spark.read.parquet(p.toString),
+      Some(DvSet(spark.read.schema(DvSchema).parquet(p.toString),
         fs.getContentSummary(p).getLength))
     else None
   }
@@ -1292,8 +1297,9 @@ object Loader {
     // metadata INSIDE the attempt (published atomically with the
     // data and the manifest): one pass over ONLY the files this
     // commit wrote — history is never rescanned
-    maintain.foreach(mt =>
-      writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq"))
+    val meta = maintain.fold(Map.empty[String, MetaRows])(mt =>
+      writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq",
+        clustered.schema))
     // the recorded snapshot schema must be MONOTONE across
     // partial-bucket commits: `merged` covers only the TOUCHED
     // buckets, so a column evolved earlier into buckets this commit
@@ -1361,8 +1367,9 @@ object Loader {
                        !touched.contains(e._1))))
     val next = commitAttempt(spark, fs, baseDir, attempt, seq)
     // refresh the driver-side registries from the new manifest so
-    // the NEXT plain read plans from fresh metadata
-    maintain.foreach(mt => registerSnapshot(spark, next, mt))
+    // the NEXT plain read plans from fresh metadata — this version's
+    // own metadata from the rows just computed, not read back
+    maintain.foreach(mt => registerSnapshot(spark, next, mt, meta))
     next
   }
 
@@ -1986,8 +1993,9 @@ object Loader {
           s"$attempt/$BucketCol=$b")))
         fs.mkdirs(new org.apache.hadoop.fs.Path(
           s"$attempt/$BucketCol=$b"))
-    maintain.foreach(mt =>
-      writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq"))
+    val meta = maintain.fold(Map.empty[String, MetaRows])(mt =>
+      writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq",
+        sortedC.schema))
     // every DV'd bucket was rewritten above, so the carried set is
     // empty by construction — the call stays for the invariant
     dvMinusBuckets(priorDv, fragmented.map(_._1).toSet).foreach(dv =>
@@ -2008,7 +2016,7 @@ object Loader {
         renames = man.renames.filter(_._1 > minHolder),
         extras = newExtras))
     val next = commitAttempt(spark, fs, baseDir, attempt, seq)
-    maintain.foreach(mt => registerSnapshot(spark, next, mt))
+    maintain.foreach(mt => registerSnapshot(spark, next, mt, meta))
     Some(next)
   }
 
@@ -2111,9 +2119,11 @@ object Loader {
     val rewritten = touched.filter(b => fs.exists(
       new org.apache.hadoop.fs.Path(s"$attempt/$BucketCol=$b")))
     val emptied = touched -- rewritten
-    if (rewritten.nonEmpty)
-      maintain.foreach(mt =>
-        writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq"))
+    val meta =
+      if (rewritten.isEmpty) Map.empty[String, MetaRows]
+      else maintain.fold(Map.empty[String, MetaRows])(mt =>
+        writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq",
+          clustered.schema))
     // touched buckets' tombstones are physically applied by the
     // rewrite (or the bucket emptied); the rest carry forward
     dvMinusBuckets(priorDv, touched).foreach(dv =>
@@ -2128,7 +2138,7 @@ object Loader {
         ts = nextCommitTs(Some(man)), renames = man.renames,
         extras = man.extras.filterNot(e => touched.contains(e._1))))
     val next = commitAttempt(spark, fs, baseDir, attempt, seq)
-    maintain.foreach(mt => registerSnapshot(spark, next, mt))
+    maintain.foreach(mt => registerSnapshot(spark, next, mt, meta))
     Some((next, deleted))
   }
 
@@ -2285,8 +2295,9 @@ object Loader {
         .filter(_.startsWith(s"$BucketCol="))
         .map(_.stripPrefix(s"$BucketCol=").toInt).sorted
       // zone/dict/Bloom/stat metadata over ONLY the appended files
-      maintain.foreach(mt =>
-        writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq"))
+      val meta = maintain.fold(Map.empty[String, MetaRows])(mt =>
+        writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq",
+          clustered.schema))
       // tombstone the pre-images: prior set ∪ matched positions
       val newDv = matched
         .select(col("__dv_f").as("file"), col("__dv_p").as("pos"))
@@ -2299,45 +2310,74 @@ object Loader {
           ts = nextCommitTs(Some(man)), renames = man.renames,
           extras = man.extras ++ touchedB.map(_ -> seq)))
       val next = commitAttempt(spark, fs, baseDir, attempt, seq)
-      maintain.foreach(mt => registerSnapshot(spark, next, mt))
+      maintain.foreach(mt => registerSnapshot(spark, next, mt, meta))
       Some((next, nUpd))
     } finally { matched.unpersist(); () }
+  }
+
+  /** One maintenance kind's metadata rows as a commit computed them:
+    * the analyzer's schema and its rows, sorted — exactly the content
+    * of the version's `_zones` / `_stats` / `_dicts` / `_blooms` dir.
+    * Driver-sized by construction: ≤ files × columns zone and dict
+    * rows, ≤ bloomBits/64 words per file and column, one stats row per
+    * bucket — the rows registration collects anyway.
+    */
+  private final case class MetaRows(
+      schema: org.apache.spark.sql.types.StructType,
+      rows: Seq[org.apache.spark.sql.Row]) {
+    def toDF(spark: org.apache.spark.sql.SparkSession): DataFrame = {
+      import scala.jdk.CollectionConverters._
+      spark.createDataFrame(rows.asJava, schema)
+    }
   }
 
   /** One commit's maintenance metadata, from one pass over ONLY the
     * files the commit wrote (the staged `attemptDir`) — history is
     * never rescanned: per-file zone rows, per-bucket mergeable wide
-    * stats, per-file dictionaries. Written INSIDE the attempt
-    * (underscore dirs are invisible to Spark data listings), so the
-    * publish rename commits data + metadata + manifest in one atomic
-    * step. File-keyed metadata (zones, dicts) is analyzed while the
-    * files still live at the attempt path, so the `file` keys are
-    * rewritten to the path the files WILL have once the attempt lands
-    * on its commit slot (`finalDir`) — the registered keys then match
-    * the committed listing exactly.
+    * stats, per-file dictionaries and Blooms. Each kind's aggregate is
+    * collected once, sorted on the driver (so the metadata files are
+    * deterministic without a global sort's sampling job and range
+    * shuffle), and written from those rows as one part file INSIDE the
+    * attempt (underscore dirs are invisible to Spark data listings), so
+    * the publish rename commits data + metadata + manifest in one
+    * atomic step. The rows are returned, keyed by metadata dir name:
+    * the commit registers its published version from them
+    * ([[registerSnapshot]]) instead of reading them back.
+    *
+    * `written` is the schema of the frame the commit wrote (data
+    * columns plus the int bucket column); the attempt is read under it,
+    * so the read needs no footer-inference job. File-keyed metadata
+    * (zones, dicts, Blooms) is analyzed while the files still live at
+    * the attempt path, so the `file` keys are rewritten to the path
+    * the files WILL have once the attempt lands on its commit slot
+    * (`finalDir`) — the registered keys then match the committed
+    * listing exactly.
     */
   private def writeMaintenance(spark: org.apache.spark.sql.SparkSession,
                                mt: Maintain, attemptDir: String,
-                               finalDir: String): Unit = {
+                               finalDir: String,
+                               written: org.apache.spark.sql.types.StructType)
+      : Map[String, MetaRows] = {
+    import org.apache.spark.sql.Row
     import org.apache.spark.sql.functions.{col, input_file_name, lit,
       regexp_replace}
     val nKinds = Seq(mt.zoneCols, mt.statCols, mt.dictCols, mt.bloomCols)
       .count(_.nonEmpty)
-    if (nKinds == 0) return
-    // each maintained kind used to be an independent job RE-READING the
-    // just-written commit files (up to 4 scans of the same churn). One
-    // read now feeds them all: the file key is captured as a REAL
+    if (nKinds == 0) return Map.empty
+    // one read feeds every kind: the file key is captured as a REAL
     // column BEFORE caching (input_file_name() is empty over an
     // InMemoryRelation — that asymmetry is why the analyzers take the
     // pre-captured column), the commit-churn-sized input is cached for
-    // the duration of the maintenance writes, and released before
-    // returning. Single-kind commits skip the cache: nothing is reused.
-    // The cache holds ONLY the union of analyzed columns (+ bucket +
-    // file key) — the per-analyzer parquet scans were column-pruned,
-    // and a full-width cache of a wide table would give that back.
+    // the duration of the maintenance, and released before returning.
+    // Single-kind commits skip the cache: nothing is reused. The cache
+    // holds ONLY the union of analyzed columns (+ bucket + file key) —
+    // a full-width cache of a wide table would scan columns no
+    // analyzer reads.
     val needed = ((mt.zoneCols ++ mt.statCols ++ mt.dictCols ++
       mt.bloomCols) :+ BucketCol).distinct
-    val raw = spark.read.parquet(attemptDir)
+    val raw = spark.read
+      .schema(org.apache.spark.sql.types.StructType(needed.map(written(_))))
+      .parquet(attemptDir)
       .withColumn("__gfile", input_file_name())
       .select(("__gfile" +: needed).map(col): _*)
     val newVer =
@@ -2352,9 +2392,10 @@ object Loader {
       df.withColumn("file", regexp_replace(col("file"),
         lit(java.util.regex.Pattern.quote(aPath)),
         lit(java.util.regex.Matcher.quoteReplacement(fPath))))
+    val byFileCol = Ordering.by((r: Row) => (r.getString(0), r.getString(1)))
     try {
-      // the ≤4 analyzer writes are INDEPENDENT actions over the one
-      // cached input, each to its own metadata dir — submitted
+      // the ≤4 kinds are INDEPENDENT (collect, then write) pairs over
+      // the one cached input, each to its own metadata dir — submitted
       // concurrently (optimization guide §2.6) so each job's
       // scheduling + commit tail overlaps the next job's work instead
       // of serializing 4 × (plan + schedule + commit) floors on
@@ -2362,37 +2403,39 @@ object Loader {
       // is safe: the block manager's per-block get-or-compute lock
       // makes exactly one task compute each cached partition, so the
       // cache BUILD itself spreads across the concurrent jobs. All
-      // writes are awaited before the commit proceeds (a half-flying
+      // kinds are awaited before the commit proceeds (a half-flying
       // write must never outlive the attempt), and the first failure
-      // is rethrown after every write has settled.
-      def labeled(tag: String)(f: => Unit): () => Unit =
-        labeledTask(spark, tag)(f)
-      val writes = Seq(
-        Option.when(mt.zoneCols.nonEmpty)(labeled("zones") {
-          rekey(graft.plans.Zones.analyzeFiles(newVer, mt.zoneCols,
-              fkey))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$attemptDir/_zones")
+      // is rethrown after every kind has settled.
+      def kind(dir: String, order: Ordering[Row])(analyzed: => DataFrame)
+          : () => (String, MetaRows) =
+        labeledTask(spark, dir.stripPrefix("_")) {
+          val df = analyzed
+          val m = MetaRows(df.schema, df.collect().toSeq.sorted(order))
+          m.toDF(spark).coalesce(1).write.mode(SaveMode.Overwrite)
+            .parquet(s"$attemptDir/$dir")
+          dir -> m
+        }
+      val kinds = Seq(
+        Option.when(mt.zoneCols.nonEmpty)(kind("_zones", byFileCol) {
+          rekey(graft.plans.Zones.zonesUnsorted(newVer, mt.zoneCols,
+            fkey))
         }),
-        Option.when(mt.statCols.nonEmpty)(labeled("stats") {
+        Option.when(mt.statCols.nonEmpty)(kind("_stats",
+            Ordering.by((r: Row) => r.getInt(0))) {
           graft.operators.StatsPlanner.analyzeWideBy(
-              newVer, BucketCol, mt.statCols.map(c => c -> c))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$attemptDir/_stats")
+            newVer, BucketCol, mt.statCols.map(c => c -> c))
         }),
-        Option.when(mt.dictCols.nonEmpty)(labeled("dicts") {
-          rekey(graft.plans.Zones.analyzeDictFiles(newVer, mt.dictCols,
-              mt.dictMax, fkey))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$attemptDir/_dicts")
+        Option.when(mt.dictCols.nonEmpty)(kind("_dicts", byFileCol) {
+          rekey(graft.plans.Zones.dictsUnsorted(newVer, mt.dictCols,
+            mt.dictMax, fkey))
         }),
-        Option.when(mt.bloomCols.nonEmpty)(labeled("blooms") {
-          rekey(graft.plans.Zones.analyzeBloomFiles(newVer,
-              mt.bloomCols, mt.bloomBits, mt.bloomHashes, fkey))
-            .write.mode(SaveMode.Overwrite)
-            .parquet(s"$attemptDir/_blooms")
+        Option.when(mt.bloomCols.nonEmpty)(kind("_blooms",
+            Ordering.by((r: Row) =>
+              (r.getString(0), r.getString(1), r.getInt(4)))) {
+          rekey(graft.plans.Zones.bloomsUnsorted(newVer, mt.bloomCols,
+            mt.bloomBits, mt.bloomHashes, fkey))
         })).flatten
-      runAllConcurrent(writes)
+      runAllConcurrent(kinds).toMap
     } finally { if (nKinds >= 2) { newVer.unpersist(); () } }
   }
 
@@ -2412,8 +2455,8 @@ object Loader {
     * task also clears the stale call site a pool thread inherits from
     * whatever thread happened to create it (InheritableThreadLocal).
     */
-  private def labeledTask(spark: org.apache.spark.sql.SparkSession,
-                          tag: String)(f: => Unit): () => Unit = () => {
+  private def labeledTask[T](spark: org.apache.spark.sql.SparkSession,
+                             tag: String)(f: => T): () => T = () => {
     spark.sparkContext.setJobDescription(s"maintenance: $tag")
     spark.sparkContext.setCallSite(s"maintenance: $tag")
     try f
@@ -2424,23 +2467,24 @@ object Loader {
   }
 
   /** Run independent actions concurrently on [[maintPool]], await ALL
-    * of them, then rethrow the first failure (if any). One action runs
-    * inline — nothing to overlap.
+    * of them, then rethrow the first failure (if any); results in
+    * action order. One action runs inline — nothing to overlap.
     */
-  private def runAllConcurrent(actions: Seq[() => Unit]): Unit =
-    if (actions.lengthCompare(1) <= 0) actions.foreach(_.apply())
+  private def runAllConcurrent[T](actions: Seq[() => T]): Seq[T] =
+    if (actions.lengthCompare(1) <= 0) actions.map(_.apply())
     else {
       val futs = actions.map(a =>
-        maintPool.submit(new java.util.concurrent.Callable[Unit] {
-          def call(): Unit = a()
+        maintPool.submit(new java.util.concurrent.Callable[T] {
+          def call(): T = a()
         }))
-      val errs = futs.flatMap(f =>
-        try { f.get(); None }
+      val done = futs.map(f =>
+        try Right(f.get())
         catch {
           case e: java.util.concurrent.ExecutionException =>
-            Some(e.getCause)
+            Left(e.getCause)
         })
-      errs.headOption.foreach(e => throw e)
+      done.collectFirst { case Left(e) => throw e }
+      done.collect { case Right(t) => t }
     }
 
   /** Refresh the driver-side stats/zone registries for a committed
@@ -2460,20 +2504,41 @@ object Loader {
     * never consulted.
     */
   def registerSnapshot(spark: org.apache.spark.sql.SparkSession,
-                       versionDir: String, maintain: Maintain): Unit = {
+                       versionDir: String, maintain: Maintain): Unit =
+    registerSnapshot(spark, versionDir, maintain, Map.empty)
+
+  /** [[registerSnapshot]] for the version a commit just published:
+    * `fresh` holds that version's own metadata rows as
+    * [[writeMaintenance]] computed them (keyed by metadata dir name),
+    * and they stand in for its dirs — a commit never reads back the
+    * metadata it wrote. Holding versions other than `versionDir` are
+    * read from disk as usual; the registered result is identical.
+    */
+  private def registerSnapshot(spark: org.apache.spark.sql.SparkSession,
+                               versionDir: String, maintain: Maintain,
+                               fresh: Map[String, MetaRows]): Unit = {
     import org.apache.spark.sql.functions.col
     val fs = fsFor(versionDir, spark)
-    val base = new org.apache.hadoop.fs.Path(versionDir)
-      .getParent.toString
+    val vPath = new org.apache.hadoop.fs.Path(versionDir)
+    val base = vPath.getParent.toString
     val man = readManifest(fs, versionDir)
     val dirs = holderDirs(base, man)
     val versions = bucketHolders(man).map(_._2).distinct.sorted
+    def freshOf(v: Long, kind: String): Option[MetaRows] =
+      if (s"v$v" == vPath.getName) fresh.get(kind) else None
     // metadata lives INSIDE each version dir (published atomically
     // with it); the pre-OCC layout kept it under `<base>/_kind/v<seq>`
     // — resolve the in-version location first, fall back to legacy
     def metaOf(v: Long, kind: String): Option[String] =
       Seq(s"$base/v$v/$kind", s"$base/$kind/v$v")
         .find(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+    // a kind's holders: rows in memory, else dirs on disk
+    def rowsOf(kind: String): Seq[org.apache.spark.sql.Row] =
+      versions.flatMap(freshOf(_, kind)).flatMap(_.rows)
+    def dirsOf(kind: String): Seq[String] =
+      versions.filter(freshOf(_, kind).isEmpty).flatMap(metaOf(_, kind))
+    def hasFresh(kind: String): Boolean =
+      versions.exists(freshOf(_, kind).isDefined)
     // the two registry refreshes below are independent (disjoint
     // registries, disjoint metadata dirs) — overlapped like the
     // maintenance writes (guide §2.6), each being a couple of tiny
@@ -2489,11 +2554,13 @@ object Loader {
       val byVer = bucketHolders(man).groupBy(_._2)
       val wide = versions.map { v =>
         val bs = byVer(v).map(_._1).distinct
-        val sdir = metaOf(v, "_stats").getOrElse(sys.error(
-          s"registerSnapshot: version v$v of $base has no _stats " +
-          "metadata (was it written with statCols maintenance?)"))
-        spark.read.parquet(sdir)
-          .filter(col(BucketCol).isin(bs: _*))
+        val partials = freshOf(v, "_stats").fold {
+          val sdir = metaOf(v, "_stats").getOrElse(sys.error(
+            s"registerSnapshot: version v$v of $base has no _stats " +
+            "metadata (was it written with statCols maintenance?)"))
+          spark.read.parquet(sdir)
+        }(_.toDF(spark))
+        partials.filter(col(BucketCol).isin(bs: _*))
       }.reduce(_ unionByName _)
       val stats = graft.operators.StatsPlanner.tableStatsFromWide(
         graft.operators.StatsPlanner.mergeWide(wide, exprs.length), exprs)
@@ -2502,19 +2569,21 @@ object Loader {
     val loadZones = Option.when(maintain.zoneCols.nonEmpty ||
         maintain.dictCols.nonEmpty || maintain.bloomCols.nonEmpty)(
         labeledTask(spark, "register zones") {
-      val zdirs = versions.flatMap(v => metaOf(v, "_zones"))
-      val ddirs = versions.flatMap(v => metaOf(v, "_dicts"))
-      val bdirs = versions.flatMap(v => metaOf(v, "_blooms"))
-      if (zdirs.nonEmpty || ddirs.nonEmpty || bdirs.nonEmpty)
+      val kinds = Seq("_zones", "_dicts", "_blooms")
+      val kdirs = kinds.map(dirsOf)
+      if (kdirs.exists(_.nonEmpty) || kinds.exists(hasFresh))
         // rebaseTo: metadata rows record paths as of WRITE time, but
         // this layout may since have been relocated (restored backup,
         // cloned table, renamed mount) — reinterpret the location-
         // independent v<seq>/... suffix against the base being
         // registered, so a moved table's zones/dicts/Blooms still prune
-        graft.plans.Zones.registerFromMetadataRoots(spark, dirs, zdirs,
-          ddirs, bdirs, rebaseTo = Some(base))
+        graft.plans.Zones.registerFromMetadataRoots(spark, dirs,
+          kdirs(0), kdirs(1), kdirs(2), rebaseTo = Some(base),
+          zoneRows = rowsOf("_zones"), dictRows = rowsOf("_dicts"),
+          bloomRows = rowsOf("_blooms"))
     })
     runAllConcurrent(Seq(loadStats, loadZones).flatten)
+    ()
   }
 
   /** Single-file CSV for reference parity (`main.py:277` writes exactly one

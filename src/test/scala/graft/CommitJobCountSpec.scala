@@ -1,0 +1,117 @@
+package graft
+
+import java.nio.file.Files
+import scala.collection.mutable.ArrayBuffer
+import org.apache.spark.ListenerBusAccess
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.QueryExecution
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.util.QueryExecutionListener
+import graft.sources.Loader
+
+/** The Spark jobs of one warm, maintained `upsertBatch` that rewrites
+  * every bucket. The commit computes its zones, stats, dictionaries and
+  * Blooms once and registers the published version from those rows, so
+  * no job reads back the `_zones` / `_stats` / `_dicts` / `_blooms` dirs
+  * it just wrote; and every parquet dir the engine wrote is read under
+  * its known schema, so no job infers a schema from Parquet footers.
+  */
+class CommitJobCountSpec extends SparkSpec {
+  import spark.implicits._
+
+  /** Jobs of a warm full-bucket upsert on this table shape: 8 for the
+    * merge and staged write, 4 per maintained kind (3 for the aggregate's
+    * adaptive stages over the cached commit, 1 for the one-file write),
+    * the carried-DV probe, and 2 for the stats merge. The count follows the plans, not the timing. Reading back the
+    * version's own metadata made it 38. */
+  private val MaxCommitJobs = 27
+
+  private val maintain = Loader.Maintain(
+    zoneCols = Seq("score"), statCols = Seq("cents", "score"),
+    clusterBy = Some("score"), maxRecordsPerFile = Some(50L),
+    dictCols = Seq("tag"), dictMax = 16,
+    bloomCols = Seq("id"), bloomBits = 1024, bloomHashes = 3)
+
+  private def rows(ids: Seq[Long], ver: Long): DataFrame =
+    ids.map(id => (id, (id * 7919L + ver * 31L) % 4000L,
+      (id * 104729L + ver) % 100000L, s"t${id % 5}", ver))
+      .toDF("id", "score", "cents", "tag", "ver")
+
+  /** Every job started (description and call site) and every file
+    * relation a query read, while installed. */
+  private final class Recorder extends SparkListener
+      with QueryExecutionListener {
+    val jobs = ArrayBuffer.empty[(Int, String, String, String)]
+    val scanned = ArrayBuffer.empty[String]
+    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
+      val desc = Option(e.properties)
+        .flatMap(p => Option(p.getProperty("spark.job.description")))
+        .getOrElse("")
+      jobs += ((e.jobId, desc, e.stageInfos.map(_.name).distinct.mkString(","),
+        e.stageInfos.map(_.details).mkString("\n")))
+    }
+    override def onSuccess(funcName: String, qe: QueryExecution,
+                           durationNs: Long): Unit = synchronized {
+      scanned ++= qe.analyzed.collectWithSubqueries {
+        case lr: LogicalRelation => lr.relation
+      }.collect { case h: HadoopFsRelation => h.location.rootPaths }
+        .flatten.map(_.toString)
+    }
+    override def onFailure(funcName: String, qe: QueryExecution,
+                           e: Exception): Unit = ()
+  }
+
+  test("a warm full-bucket maintained upsert reads back none of its own " +
+       "metadata and infers no Parquet schema") {
+    val base = Files.createTempDirectory("graft-commit-jobs").toString
+    val src = s"$base/src"
+    rows(1L to 400L, 0L).coalesce(1).write.parquet(src)
+    val sink = s"$base/sink"
+    val (q, _) = Loader.streamUpsertSink(
+      spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+      sink, key = "id", orderCols = Seq("ver"),
+      checkpointDir = Some(s"$base/ckpt"),
+      trigger = Some(Trigger.AvailableNow()), nBuckets = 4,
+      maintain = Some(maintain))
+    q.awaitTermination()
+    // a deletion-vector delete first, so the measured commit also reads
+    // (and purges) a prior DV set
+    def upsert(ver: Long): String = Loader.upsertBatch(spark, sink,
+      rows((1L to 40L).map(_ * 10L) ++ (1L to 20L).map(_ + 1000L * ver), ver),
+      "id", Seq("ver"), Some(maintain))
+    upsert(1L)
+    assert(Loader.deleteWhereVectors(spark, sink,
+      org.apache.spark.sql.functions.col("id") === 5L,
+      Some(maintain)).isDefined)
+
+    val rec = new Recorder
+    ListenerBusAccess.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(rec)
+    spark.listenerManager.register(rec)
+    val vdir =
+      try {
+        val v = upsert(2L)
+        ListenerBusAccess.drain(spark.sparkContext)
+        v
+      } finally {
+        spark.sparkContext.removeSparkListener(rec)
+        spark.listenerManager.unregister(rec)
+      }
+    assert(new java.io.File(vdir).list()
+      .count(_.startsWith("graft_bucket=")) === 4, "not a full-bucket commit")
+
+    val listing = rec.jobs.map { case (id, d, site, _) => s"$id $d [$site]" }
+      .mkString("; ")
+    val ownMeta = Seq("_zones", "_stats", "_dicts", "_blooms")
+      .map(k => s"${new java.io.File(vdir).getName}/$k")
+    val readBack = rec.scanned.filter(p => ownMeta.exists(p.endsWith))
+    assert(readBack.isEmpty, s"read back its own metadata: $readBack")
+    val footerJobs = rec.jobs.filter(_._4.contains("DataFrameReader.parquet"))
+    assert(footerJobs.isEmpty,
+      s"${footerJobs.size} footer-inference jobs: $listing")
+    assert(rec.jobs.size <= MaxCommitJobs,
+      s"${rec.jobs.size} jobs (bound $MaxCommitJobs): $listing")
+  }
+}
