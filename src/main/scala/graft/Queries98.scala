@@ -201,7 +201,7 @@ object Queries98 {
         ()
       })
       val deltaA0 = bump(sources.Loader.readSnapshot(s, vdir), 5, 7L)
-      // finally-reset: if A's upsert dies BEFORE commitAttempt consumes
+      // finally-reset: if A's upsert dies BEFORE its commit consumes
       // the hook (any error ahead of the publish rename), a stale hook
       // must not survive to fire inside an unrelated sink query's next
       // commit in this process

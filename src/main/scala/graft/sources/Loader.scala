@@ -94,31 +94,45 @@ object Loader {
     import org.apache.spark.sql.functions._
     val mx = df.agg(max(expr(s"CAST($xCol AS BIGINT)")).as("__mx"),
                     max(expr(s"CAST($yCol AS BIGINT)")).as("__my"))
-    // overflow-safe 16-bit cells: `v * 65536 div (max + 1)` overflows
-    // Long for values past ~2^47, so the cell forms in two exact
-    // stages — a coarse divide-first cell (width = max div 2^16 + 1,
-    // quotient ≤ 65535, no big multiply), then an upscale to the full
-    // 16-bit range (cell * 65536 ≤ 2^32 — safe) so BOTH dimensions
-    // occupy the same bit width and the Morton interleave alternates
-    // them evenly (an unnormalized small domain would sit in the low
-    // bits and degenerate to a one-dimension sort — same scheme as
-    // orderForWrite's zorderBy, under this sink's v >= 0 contract).
-    // For domains below 2^16 this reduces EXACTLY to the classic
-    // v * 65536 div (max + 1).
-    def cell16(c: String, mxc: String): String = {
-      val w = s"(($mxc div 65536L) + 1L)"
-      s"(least(65535L, CAST($c AS BIGINT) div $w) * 65536L " +
-        s"div (least(65535L, $mxc div $w) + 1L))"
-    }
+    // the v >= 0 contract makes 0 each column's lower bound
     df.crossJoin(broadcast(mx))
       .withColumn("__zk", graft.functions.Expressions.morton16(
-        expr(cell16(xCol, "__mx")),
-        expr(cell16(yCol, "__my"))))
+        expr(mortonCell(xCol, "0L", "__mx")),
+        expr(mortonCell(yCol, "0L", "__my"))))
       .drop("__mx", "__my")
       .repartitionByRange(numFiles, col("__zk"))
       .sortWithinPartitions(col("__zk"))
       .drop("__zk")
       .write.mode(SaveMode.Overwrite).parquet(dir)
+  }
+
+  /** The 16-bit Morton cell of column `c` within its bounds `[n, x]`
+    * (SQL expressions), as a SQL expression — the one cell encoder of
+    * both Z-order writers ([[writeParquetZordered]], [[writeBuckets]]).
+    *
+    * Overflow-safe: the classic `(v - n) * 65536 div (x - n + 1)`
+    * overflows Long both in the numerator (values past ~2^47) and in
+    * the range itself (full-domain columns), yielding garbage keys. So
+    * the cell forms in two exact stages. First a coarse divide-first
+    * cell: the width w ≈ range/65536 + 1 is formed without ever
+    * subtracting the bounds (`(x div 2^16) - (n div 2^16) + 1` —
+    * quotients first), and the cell is `v div w - n div w` (for w = 1
+    * the true difference is < 2^17, so it fits; for larger w both
+    * quotients shrink below Long.Max/w), clamped to 65535 to absorb the
+    * ±1 drift of the quotient-first approximation. Then an upscale to
+    * the full 16-bit range (cell * 65536 ≤ 2^32 — safe), so both
+    * dimensions occupy the same bit width and the interleave alternates
+    * them evenly (an unnormalized small domain would sit in the low bits
+    * and degenerate to a one-dimension sort). Truncating division keeps
+    * the cell MONOTONE in the value — all a space-filling layout needs.
+    * With `n` = 0 and a domain below 2^16 this is exactly
+    * `v * 65536 div (x + 1)`.
+    */
+  private def mortonCell(c: String, n: String, x: String): String = {
+    val w = s"((($x div 65536L) - ($n div 65536L)) + 1L)"
+    val cc = s"least(65535L, (CAST($c AS BIGINT) div $w) - ($n div $w))"
+    val cm = s"least(65535L, ($x div $w) - ($n div $w))"
+    s"(($cc) * 65536L div (($cm) + 1L))"
   }
 
   /** JDBC sink — the write half of `Extractor.readJdbc` (reference
@@ -282,6 +296,16 @@ object Loader {
     org.apache.spark.sql.functions.regexp_extract(pathCol,
       "(v[0-9]+/" + BucketCol + "=[0-9]+/[^/]+)$", 1)
 
+  /** The bucket dir of a layout file path or DV suffix
+    * (`.../graft_bucket=<b>/<name>`): [[BucketDir]] on the driver,
+    * [[pathBucket]] in a plan. */
+  private val BucketDir = (BucketCol + "=([0-9]+)/").r
+
+  private def pathBucket(path: org.apache.spark.sql.Column)
+      : org.apache.spark.sql.Column =
+    org.apache.spark.sql.functions.regexp_extract(path,
+      BucketDir.regex, 1).cast("int")
+
   /** A version's deletion-vector set plus its on-disk parquet size —
     * the O(1) metadata that decides broadcast vs shuffle application
     * (see [[applyDv]]). */
@@ -349,11 +373,8 @@ object Loader {
   private def dvMinusBuckets(dv: Option[DvSet],
                              rewritten: Set[Int]): Option[DataFrame] =
     dv.map { d =>
-      import org.apache.spark.sql.functions.{col, regexp_extract}
       if (rewritten.isEmpty) d.df
-      else d.df.filter(!regexp_extract(col("file"),
-          BucketCol + "=([0-9]+)/", 1).cast("int")
-        .isin(rewritten.toSeq: _*))
+      else d.df.filter(!pathBucket(d.df("file")).isin(rewritten.toSeq: _*))
     }.filter(d => !d.isEmpty)
 
   /** A committed version's manifest: bucket → version holding its
@@ -520,58 +541,113 @@ object Loader {
     */
   private[graft] var testRaceHook: Option[() => Unit] = None
 
-  /** Publish a fully-written attempt directory (data files, maintenance
-    * metadata, manifest — everything) as commit slot `v<seq>` in ONE
-    * atomic no-overwrite rename: the optimistic-concurrency commit
-    * point. Every writer stages privately under `_attempt/<uuid>`, so
-    * two racing transactions can never scribble on each other's files;
-    * the first rename onto the slot wins, the loser's rename fails
-    * (FileContext rename without OVERWRITE), its staged attempt is
-    * deleted, and it surfaces as a typed
-    * [[graft.sources.ConcurrentCommitException]] — the caller re-reads
-    * the latest snapshot and retries. Crash recovery is unchanged in
-    * spirit but simpler in mechanics: a crashed attempt leaves an
-    * orphan under `_attempt/` (reclaimed by [[vacuumSnapshots]]) and
-    * the slot stays EMPTY, so a replayed batch stages afresh and
-    * publishes onto the same slot — a committed `v<seq>` now appears
-    * atomically complete or not at all.
-    */
-  private def commitAttempt(spark: org.apache.spark.sql.SparkSession,
-                            fs: org.apache.hadoop.fs.FileSystem,
-                            baseDir: String, attemptDir: String,
-                            seq: Long): String = {
-    testRaceHook.foreach { h => testRaceHook = None; h() }
-    val next = s"$baseDir/v$seq"
-    val src = new org.apache.hadoop.fs.Path(attemptDir)
-    val dst = new org.apache.hadoop.fs.Path(next)
-    val lost =
-      try {
-        val fc = org.apache.hadoop.fs.FileContext.getFileContext(
-          fs.getUri, spark.sessionState.newHadoopConf())
-        fc.rename(src, dst) // Options.Rename.NONE: fails if dst exists
-        false
-      } catch {
-        case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
-        case e: java.io.IOException =>
-          // classify: slot materialized under us → lost race; anything
-          // else is a real I/O failure and must surface as itself
-          if (fs.exists(dst)) true else throw e
-      }
-    if (lost) {
-      fs.delete(src, true)
-      throw new ConcurrentCommitException(
-        s"commit slot v$seq under $baseDir was claimed by a concurrent " +
-        "writer; this attempt's staged data was discarded — re-read " +
-        "the latest snapshot and retry the transaction")
-    }
-    next
+  /** A table as a verb finds it: its filesystem, its committed versions
+    * (ascending) and the latest one's manifest, None before the first
+    * commit. Read once per verb; [[commit]] publishes onto the slot
+    * after the latest version of THIS listing. */
+  private final case class Head(fs: org.apache.hadoop.fs.FileSystem,
+                                base: String, versions: Seq[Long],
+                                man: Option[Manifest]) {
+    /** The latest committed version; -1 before the first commit. */
+    def seq: Long = versions.lastOption.getOrElse(-1L)
+    /** The slot the next commit publishes onto. */
+    def next: Long = seq + 1
+    def dir: String = s"$base/v$seq"
+    /** The latest version's deletion vectors. */
+    def dv(spark: org.apache.spark.sql.SparkSession): Option[DvSet] =
+      man.flatMap(_ => readDv(spark, fs, dir))
   }
 
-  private def newAttemptDir(fs: org.apache.hadoop.fs.FileSystem,
-                            baseDir: String): String = {
-    val d = s"$baseDir/_attempt/${java.util.UUID.randomUUID()}"
-    fs.mkdirs(new org.apache.hadoop.fs.Path(d))
-    d
+  private def head(spark: org.apache.spark.sql.SparkSession,
+                   baseDir: String): Head = {
+    val fs = fsFor(baseDir, spark)
+    val versions = committedVersions(fs, baseDir)
+    Head(fs, baseDir, versions,
+      versions.lastOption.map(v => readManifest(fs, s"$baseDir/v$v")))
+  }
+
+  /** What a verb's stage function leaves in the attempt dir, and what
+    * the commit path must add: the new manifest (its `ts` is stamped by
+    * [[commit]]), the `_dv` set the version carries (the complete
+    * applicable set — see the DV note above [[dvSuffix]]), and the
+    * schema of the bucket data the stage wrote, if it wrote any
+    * ([[writeBuckets]]'s result — what the maintenance reads it under).
+    */
+  private final case class Staged(
+      manifest: Manifest,
+      dv: Option[DataFrame],
+      written: Option[org.apache.spark.sql.types.StructType] = None)
+
+  /** The one commit path of every snapshot-table verb. `stage` writes
+    * the verb's data files into a private attempt dir
+    * (`_attempt/<uuid>`: racing writers never scribble on each other's
+    * files); then, inside the same dir, this writes the maintenance
+    * metadata over ONLY the files the stage wrote ([[writeMaintenance]]),
+    * the `_dv` set, and the manifest with its strictly monotone commit
+    * time ([[nextCommitTs]] against the head), and publishes the whole
+    * dir as slot `v<h.next>` in ONE atomic no-overwrite rename — the
+    * optimistic-concurrency commit point. The slot comes from the same
+    * listing the verb read its state from, so any writer that committed
+    * since occupies it: the rename fails and the commit surfaces as a
+    * typed [[graft.sources.ConcurrentCommitException]] — the caller
+    * re-reads the latest snapshot and retries. Any throw before the
+    * publish completes (a lost race, a failed write, a verb's own
+    * guard) deletes the attempt and rethrows, so a refused or lost
+    * commit leaves no residue; a crashed process leaves an orphan under
+    * `_attempt/` ([[vacuumSnapshots]] reclaims it) and the slot EMPTY,
+    * so a replayed batch stages afresh onto the same slot — a committed
+    * `v<seq>` appears atomically complete or not at all.
+    *
+    * After the publish the driver registries are refreshed for the new
+    * version — from the metadata rows just computed when the stage
+    * wrote data (a commit never reads back what it wrote), from disk
+    * when it wrote none, and not at all without `maintain`. Returns the
+    * committed version dir.
+    */
+  private def commit(spark: org.apache.spark.sql.SparkSession, h: Head,
+                     maintain: Option[Maintain])
+                    (stage: String => Staged): String = {
+    val fs = h.fs
+    val next = s"${h.base}/v${h.next}"
+    val attempt = new org.apache.hadoop.fs.Path(
+      s"${h.base}/_attempt/${java.util.UUID.randomUUID()}")
+    fs.mkdirs(attempt)
+    val meta =
+      try {
+        val staged = stage(attempt.toString)
+        val fresh = (for (mt <- maintain; w <- staged.written)
+          yield writeMaintenance(spark, mt, attempt.toString, next, w))
+          .getOrElse(Map.empty[String, MetaRows])
+        staged.dv.foreach(_.write.mode(SaveMode.Overwrite)
+          .parquet(s"$attempt/$DvDirName"))
+        writeManifest(fs, attempt.toString,
+          staged.manifest.copy(ts = nextCommitTs(h.man)))
+        testRaceHook.foreach { hook => testRaceHook = None; hook() }
+        val dst = new org.apache.hadoop.fs.Path(next)
+        val lost =
+          try {
+            org.apache.hadoop.fs.FileContext.getFileContext(fs.getUri,
+              spark.sessionState.newHadoopConf())
+              .rename(attempt, dst) // Options.Rename.NONE: fails if dst exists
+            false
+          } catch {
+            case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
+            case e: java.io.IOException =>
+              // classify: slot materialized under us → lost race; anything
+              // else is a real I/O failure and must surface as itself
+              if (fs.exists(dst)) true else throw e
+          }
+        if (lost)
+          throw new ConcurrentCommitException(
+            s"commit slot v${h.next} under ${h.base} was claimed by a " +
+            "concurrent writer; this attempt's staged data was discarded " +
+            "— re-read the latest snapshot and retry the transaction")
+        fresh
+      } catch {
+        case t: Throwable => fs.delete(attempt, true); throw t
+      }
+    maintain.foreach(mt => registerSnapshot(spark, next, mt, meta))
+    next
   }
 
   private def writeManifest(fs: org.apache.hadoop.fs.FileSystem,
@@ -853,35 +929,27 @@ object Loader {
     */
   def restoreSnapshot(spark: org.apache.spark.sql.SparkSession,
                       baseDir: String, toSeq: Long): String = {
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(sys.error(
-      s"restoreSnapshot: no committed layout under $baseDir"))
-    require(toSeq != latest,
+    val h = head(spark, baseDir)
+    if (h.man.isEmpty)
+      sys.error(s"restoreSnapshot: no committed layout under $baseDir")
+    require(toSeq != h.seq,
       s"restoreSnapshot: v$toSeq is already the latest version")
-    if (!committed.contains(toSeq))
+    if (!h.versions.contains(toSeq))
       throw new VacuumedVersionException(
         s"restoreSnapshot: version v$toSeq of $baseDir is not " +
         "committed or was reclaimed by vacuumSnapshots")
-    val man = readManifest(fs, s"$baseDir/v$toSeq")
+    val man = readManifest(h.fs, s"$baseDir/v$toSeq")
     val gone = holderDirs(baseDir, man).filterNot(d =>
-      fs.exists(new org.apache.hadoop.fs.Path(d)))
+      h.fs.exists(new org.apache.hadoop.fs.Path(d)))
     if (gone.nonEmpty)
       throw new VacuumedVersionException(
         s"restoreSnapshot: v$toSeq references ${gone.length} bucket " +
         s"dir(s) reclaimed by vacuumSnapshots (first: ${gone.head}) " +
         "— the target is no longer fully readable")
-    val cur = readManifest(fs, s"$baseDir/v$latest")
-    val attempt = newAttemptDir(fs, baseDir)
-    // the restored ERA's tombstone set defines its live rows
-    readDv(spark, fs, s"$baseDir/v$toSeq").foreach(dv =>
-      dv.df.write.mode(SaveMode.Overwrite)
-        .parquet(s"$attempt/$DvDirName"))
-    writeManifest(fs, attempt,
-      Manifest(man.buckets, man.nBuckets, -1L, man.schema,
-        ts = nextCommitTs(Some(cur)), // monotone vs the CURRENT head
-        renames = man.renames, extras = man.extras))
-    commitAttempt(spark, fs, baseDir, attempt, latest + 1)
+    // the restored ERA's tombstone set defines its live rows; the commit
+    // time stays monotone against the CURRENT head
+    commit(spark, h, None)(_ => Staged(man.copy(txn = -1L),
+      readDv(spark, h.fs, s"$baseDir/v$toSeq").map(_.df)))
   }
 
   /** DESCRIBE HISTORY for a [[streamUpsertSink]] layout: one row per
@@ -1022,15 +1090,11 @@ object Loader {
     val spark = stream.sparkSession
     val writer0 = stream.writeStream.foreachBatch {
       (batch: DataFrame, id: Long) =>
-        import org.apache.spark.sql.functions._
-        val fs = fsFor(baseDir, spark)
-        val committed = committedVersions(fs, baseDir)
-        val priorManifest = committed.lastOption
-          .map(v => readManifest(fs, s"$baseDir/v$v"))
+        val h = head(spark, baseDir)
         // the layout guard runs before anything else: a different
         // bucketing would rehash keys into different buckets and
         // silently miss existing rows on every subsequent merge
-        priorManifest.foreach { pm =>
+        h.man.foreach { pm =>
           require(pm.nBuckets < 0 || pm.nBuckets == nBuckets,
             s"streamUpsertSink: layout $baseDir was written with " +
             s"nBuckets=${pm.nBuckets}; restarting with $nBuckets " +
@@ -1044,8 +1108,8 @@ object Loader {
         // Data txns are the stream's strictly increasing batch ids, so
         // one data version decides; maintenance commits (txn -1,
         // compaction) in between are skipped over.
-        val lastData = committed.reverseIterator
-          .map(v => v -> readManifest(fs, s"$baseDir/v$v"))
+        val lastData = h.versions.reverseIterator
+          .map(v => v -> readManifest(h.fs, s"$baseDir/v$v"))
           .find(_._2.txn >= 0)
         lastData.filter(_._2.txn == id) match {
           case Some((v, _)) =>
@@ -1055,7 +1119,7 @@ object Loader {
             maintain.foreach(mt =>
               registerSnapshot(spark, s"$baseDir/v$v", mt))
           case None =>
-            handle.dir = Some(applyDelta(spark, baseDir, batch, key,
+            handle.dir = Some(applyDelta(spark, h, batch, key,
               orderCols, nBuckets, maintain, txn = id))
         }
         ()
@@ -1124,15 +1188,11 @@ object Loader {
   }
 
   private def applyDelta(spark: org.apache.spark.sql.SparkSession,
-                         baseDir: String, delta: DataFrame, key: String,
+                         h: Head, delta: DataFrame, key: String,
                          orderCols: Seq[String], nBuckets: Int,
                          maintain: Option[Maintain], txn: Long)
       : String = {
     import org.apache.spark.sql.functions._
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val priorManifest = committed.lastOption
-      .map(v => readManifest(fs, s"$baseDir/v$v"))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy(col(key))
       .orderBy(orderCols.map(c => col(c).desc): _*)
@@ -1160,15 +1220,9 @@ object Loader {
         .collect().map(_.getInt(0)).sorted
       // durable prior-version lookup (see restart contract): the
       // latest committed manifest IS the current state — data or
-      // maintenance commit alike
-      val priorMap = priorManifest.map(_.buckets)
-        .getOrElse(Map.empty[Int, Long])
-      // the next version SLOT, independent of the batch id — computed
-      // from the SAME listing the prior state was read from, so the
-      // publish rename below is a true optimistic-concurrency check:
-      // any writer that committed after this listing occupies the slot
-      // and this transaction loses cleanly
-      val seq = committed.lastOption.getOrElse(-1L) + 1
+      // maintenance commit alike. The commit lands on the slot after
+      // it, independent of the batch id ([[commit]]).
+      val priorMap = h.man.map(_.buckets).getOrElse(Map.empty[Int, Long])
       // copy-on-write: read ONLY the touched buckets' current files
       // (base pointers + merge-on-read extras appendices)
       val priorBuckets = touched.toIndexedSeq.filter(priorMap.contains)
@@ -1176,8 +1230,7 @@ object Loader {
       // prior files read DV-FILTERED: a tombstoned row must not
       // resurrect through the rewrite, and the rewrite PURGES the
       // touched buckets' tombstones (their files are replaced)
-      val priorDv = committed.lastOption.flatMap(v =>
-        readDv(spark, fs, s"$baseDir/v$v"))
+      val priorDv = h.dv(spark)
       // prior files read under the manifest's RECORDED schema when one
       // exists: (a) no per-commit footer pass, (b) columns dropped by
       // dropColumn stay dropped (a mergeSchema read would resurrect
@@ -1185,121 +1238,83 @@ object Loader {
       // files upcast to the recorded widened type, (d) renamed columns
       // read era-by-era under their physical names. Legacy pre-schema
       // manifests keep the mergeSchema fallback. All [[eraReadLive]].
-      val merged =
-        if (priorBuckets.isEmpty || priorManifest.isEmpty) batchData
-        else graft.operators.Upsert.upsertEvolve(
-          eraReadLive(spark, fs, baseDir, priorManifest.get,
-            priorBuckets, priorDv),
-          batchData, key)
-      stageAndPublish(spark, fs, baseDir, merged, touched.toIndexedSeq,
-        priorMap, priorManifest, priorDv, nBuckets, key, maintain, txn,
-        seq)
+      val merged = h.man match {
+        case Some(pm) if priorBuckets.nonEmpty =>
+          graft.operators.Upsert.upsertEvolve(
+            eraReadLive(spark, h.fs, h.base, pm, priorBuckets, priorDv),
+            batchData, key)
+        case _ => batchData
+      }
+      stageAndPublish(spark, h, merged, touched.toIndexedSeq, priorMap,
+        priorDv, nBuckets, key, maintain, txn)
     } finally { latest.unpersist(); () }
   }
 
-  /** Within-bucket file order shared by EVERY bucket rewrite (the
-    * initial commit, upsert merges, compaction, copy-on-write delete):
-    * clusterBy sorts one dimension tight; zorderBy sorts by the
-    * 16-bit-per-dim Morton interleave of TWO dimensions (linear cells
-    * against THIS batch's min/max — one 1-row broadcast agg, so
-    * per-bucket rewrites get per-bucket bounds, i.e. tighter boxes),
-    * so each rolled file covers a small BOUNDING BOX and zone maps
-    * prune RANGE predicates on EITHER column (the OPTIMIZE ZORDER BY
-    * shape; q205 measures why: a concatenated sort answers one
-    * dimension and touches every file for the other). Skewed
-    * dimensions should be pre-transformed — linear cells, not
-    * equi-depth, is the deliberate cheap trade. `prefix` columns (the
-    * bucket column, when one write spans buckets) lead the sort.
-    * Factored so maintenance rewrites preserve the Z-layout —
-    * compaction/delete used to re-sort by clusterBy only, silently
-    * destroying the Morton order on the first maintenance pass.
+  /** The one bucket-partitioned write of every bucket-writing commit
+    * (upsert merge, MERGE INTO, rebucket, compaction, copy-on-write
+    * delete, update-vector appendices): `df` carries the int bucket
+    * column; each bucket's rows land in one task, are sorted by the
+    * declared within-bucket file order, and roll to a new file at
+    * `maxRecordsPerFile`, so every rolled file covers a contiguous range
+    * of that order — tight zones within the bucket. Returns the schema
+    * of the frame written (data columns plus the bucket column).
     *
-    * Cells are computed OVERFLOW-SAFE: the old
-    * `(v - min) * 65536 div (max - min + 1)` overflows Long both in
-    * the numerator (values past ~2^47) and in the range itself
-    * (full-domain columns), yielding garbage Morton keys. Instead the
-    * cell width w ≈ range/65536 + 1 is formed without ever
-    * subtracting the bounds (`(max div 2^16) - (min div 2^16) + 1` —
-    * quotients first), and the cell is `v div w - min div w`: for
-    * w = 1 the true difference is < 2^17 so the subtraction fits; for
-    * larger w both quotients shrink below Long.Max/w. Truncating
-    * division keeps the cell MONOTONE in the value — all a
-    * space-filling layout needs — and the least() clamp absorbs the
-    * ±1 cell drift of the quotient-first approximation.
+    * The file order: clusterBy sorts one dimension tight; zorderBy sorts
+    * by the 16-bit-per-dim Morton interleave of TWO dimensions (linear
+    * [[mortonCell]]s against THIS write's min/max — one 1-row broadcast
+    * agg, so per-bucket rewrites get per-bucket bounds, i.e. tighter
+    * boxes), so each rolled file covers a small BOUNDING BOX and zone
+    * maps prune RANGE predicates on EITHER column (the OPTIMIZE ZORDER BY
+    * shape; q205 measures why: a concatenated sort answers one dimension
+    * and touches every file for the other). Skewed dimensions should be
+    * pre-transformed — linear cells, not equi-depth, is the deliberate
+    * cheap trade. The bucket column leads the sort, so the writer's
+    * required partition ordering is already satisfied (no re-sort).
     */
-  private def orderForWrite(df: DataFrame, maintain: Option[Maintain],
-                            prefix: Seq[org.apache.spark.sql.Column])
-      : DataFrame = {
+  private def writeBuckets(df: DataFrame, attempt: String,
+                           maintain: Option[Maintain])
+      : org.apache.spark.sql.types.StructType = {
     import org.apache.spark.sql.functions.{broadcast, col, expr,
       max => fmax, min => fmin}
-    maintain.flatMap(_.zorderBy) match {
+    val bucketed = df.repartition(col(BucketCol))
+    val sorted = maintain.flatMap(_.zorderBy) match {
       case Some((c1, c2)) =>
-        val bounds = df.agg(
+        val bounds = bucketed.agg(
           fmin(col(c1).cast("long")).as("__n1"),
           fmax(col(c1).cast("long")).as("__x1"),
           fmin(col(c2).cast("long")).as("__n2"),
           fmax(col(c2).cast("long")).as("__x2"))
-        // two exact stages (see writeParquetZordered's cell16): coarse
-        // divide-first cell, then an upscale to the full 16-bit range
-        // so both dimensions interleave at equal bit weight
-        def cell(c: String, n: String, x: String): String = {
-          val w = s"((($x div 65536L) - ($n div 65536L)) + 1L)"
-          val cc =
-            s"least(65535L, (CAST($c AS BIGINT) div $w) - ($n div $w))"
-          val cm = s"least(65535L, ($x div $w) - ($n div $w))"
-          s"(($cc) * 65536L div (($cm) + 1L))"
-        }
-        df.crossJoin(broadcast(bounds))
+        bucketed.crossJoin(broadcast(bounds))
           .withColumn("__z", graft.functions.Expressions.morton16(
-            expr(cell(c1, "__n1", "__x1")),
-            expr(cell(c2, "__n2", "__x2"))))
-          .sortWithinPartitions(prefix :+ col("__z"): _*)
+            expr(mortonCell(c1, "__n1", "__x1")),
+            expr(mortonCell(c2, "__n2", "__x2"))))
+          .sortWithinPartitions(col(BucketCol), col("__z"))
           .drop("__z", "__n1", "__x1", "__n2", "__x2")
-      case None => maintain.flatMap(_.clusterBy).fold(df)(
-        c => df.sortWithinPartitions(prefix :+ col(c): _*))
+      case None => maintain.flatMap(_.clusterBy).fold(bucketed)(
+        c => bucketed.sortWithinPartitions(col(BucketCol), col(c)))
     }
+    val w = sorted.write.mode(SaveMode.Overwrite)
+    maintain.flatMap(_.maxRecordsPerFile)
+      .fold(w)(m => w.option("maxRecordsPerFile", m.toString))
+      .partitionBy(BucketCol).parquet(attempt)
+    sorted.schema
   }
 
-  /** Shared commit tail of every bucket-REWRITING transaction (upsert
-    * merge, MERGE INTO): stage `merged` — the complete replacement
-    * content of `touched` buckets, withOUT the bucket column — under a
-    * private attempt dir, write the maintenance metadata, record the
-    * MONOTONE snapshot schema, carry forward the untouched buckets'
-    * deletion vectors, write the manifest, and publish with the atomic
-    * OCC rename. Returns the committed version dir.
+  /** Commit of every bucket-REWRITING transaction with a keyed
+    * replacement (upsert merge, MERGE INTO, rebucket): `merged` is the
+    * complete replacement content of `touched` buckets, withOUT the
+    * bucket column. Records the MONOTONE snapshot schema, carries
+    * forward the untouched buckets' deletion vectors and extras, and
+    * commits. Returns the committed version dir.
     */
   private def stageAndPublish(spark: org.apache.spark.sql.SparkSession,
-                              fs: org.apache.hadoop.fs.FileSystem,
-                              baseDir: String, merged: DataFrame,
+                              h: Head, merged: DataFrame,
                               touched: Seq[Int],
                               priorMap: Map[Int, Long],
-                              priorManifest: Option[Manifest],
                               priorDv: Option[DvSet],
                               nBuckets: Int, key: String,
-                              maintain: Option[Maintain], txn: Long,
-                              seq: Long): String = {
-    import org.apache.spark.sql.functions._
-    // every attempt stages PRIVATELY (uuid dir): racing writers can
-    // never scribble on each other's files, and a crashed attempt is
-    // an orphan the slot never saw. With clusterBy, rows sort
-    // (bucket, cluster) so the writer's required partition ordering
-    // is already satisfied (no re-sort) and each rolled file covers
-    // a contiguous cluster range — tight zones within the bucket.
-    val attempt = newAttemptDir(fs, baseDir)
-    val bucketed = merged
-      .withColumn(BucketCol, bucketOf(key, nBuckets))
-      .repartition(col(BucketCol))
-    val clustered = orderForWrite(bucketed, maintain, Seq(col(BucketCol)))
-    val w0 = clustered.write.mode(SaveMode.Overwrite)
-    val w1 = maintain.flatMap(_.maxRecordsPerFile).fold(w0)(
-      m => w0.option("maxRecordsPerFile", m.toString))
-    w1.partitionBy(BucketCol).parquet(attempt)
-    // metadata INSIDE the attempt (published atomically with the
-    // data and the manifest): one pass over ONLY the files this
-    // commit wrote — history is never rescanned
-    val meta = maintain.fold(Map.empty[String, MetaRows])(mt =>
-      writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq",
-        clustered.schema))
+                              maintain: Option[Maintain],
+                              txn: Long): String = {
     // the recorded snapshot schema must be MONOTONE across
     // partial-bucket commits: `merged` covers only the TOUCHED
     // buckets, so a column evolved earlier into buckets this commit
@@ -1319,9 +1334,9 @@ object Loader {
     // mergeSchema footer pass over the prior snapshot.
     val mergedSchema = org.apache.spark.sql.types.StructType(
       merged.schema.filterNot(_.name == BucketCol))
-    val priorSchema = priorManifest.flatMap { pm =>
+    val priorSchema = h.man.flatMap { pm =>
       pm.schema.orElse {
-        val pdirs = holderDirs(baseDir, pm)
+        val pdirs = holderDirs(h.base, pm)
         if (pdirs.isEmpty) None
         else Some(org.apache.spark.sql.types.StructType(
           spark.read.option("mergeSchema", "true").parquet(pdirs: _*)
@@ -1343,34 +1358,26 @@ object Loader {
         ps.filterNot(f => have.contains(f.name))
           .map(_.copy(nullable = true)))
     }
-    // carry forward the untouched buckets' deletion vectors (touched
-    // buckets' tombstones are physically applied by the rewrite)
-    dvMinusBuckets(priorDv, touched.toSet).foreach(dv =>
-      dv.write.mode(SaveMode.Overwrite).parquet(s"$attempt/$DvDirName"))
-    // manifest into the attempt (touched buckets live at this slot,
-    // untouched buckets keep pointing at their current version),
-    // then the PUBLISH: one atomic no-overwrite rename onto the slot
-    // — the commit marker and the concurrency check in one step.
-    // Copy-forward state rides along: the strictly-monotone commit
-    // timestamp, the rename log, and the extras appendices of
-    // UNTOUCHED buckets (a rewritten bucket's appendices are
-    // physically merged, exactly like its tombstones; priorMap
-    // membership guards the rebucket case, where every old-modulus
-    // appendix dies with the full rewrite)
-    writeManifest(fs, attempt,
-      Manifest(priorMap ++ touched.map(_ -> seq), nBuckets, txn,
-        Some(recordedSchema),
-        ts = nextCommitTs(priorManifest),
-        renames = priorManifest.map(_.renames).getOrElse(Nil),
-        extras = priorManifest.map(_.extras).getOrElse(Nil)
-          .filter(e => priorMap.contains(e._1) &&
-                       !touched.contains(e._1))))
-    val next = commitAttempt(spark, fs, baseDir, attempt, seq)
-    // refresh the driver-side registries from the new manifest so
-    // the NEXT plain read plans from fresh metadata — this version's
-    // own metadata from the rows just computed, not read back
-    maintain.foreach(mt => registerSnapshot(spark, next, mt, meta))
-    next
+    commit(spark, h, maintain) { attempt =>
+      val written = writeBuckets(
+        merged.withColumn(BucketCol, bucketOf(key, nBuckets)), attempt,
+        maintain)
+      // touched buckets live at this slot, untouched buckets keep
+      // pointing at their current version. Copy-forward state rides
+      // along: the rename log, and the extras appendices and deletion
+      // vectors of UNTOUCHED buckets (a rewritten bucket's appendices
+      // and tombstones are physically merged; priorMap membership
+      // guards the rebucket case, where every old-modulus appendix
+      // dies with the full rewrite)
+      Staged(
+        Manifest(priorMap ++ touched.map(_ -> h.next), nBuckets, txn,
+          Some(recordedSchema),
+          renames = h.man.map(_.renames).getOrElse(Nil),
+          extras = h.man.map(_.extras).getOrElse(Nil)
+            .filter(e => priorMap.contains(e._1) &&
+                         !touched.contains(e._1))),
+        dvMinusBuckets(priorDv, touched.toSet), Some(written))
+    }
   }
 
   /** BATCH writer for a [[streamUpsertSink]] layout — stream and batch
@@ -1390,15 +1397,13 @@ object Loader {
                   maintain: Option[Maintain] = None): String = {
     require(!delta.isStreaming, "upsertBatch: streaming input — use " +
       "streamUpsertSink")
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(sys.error(
+    val h = head(spark, baseDir)
+    val man = h.man.getOrElse(sys.error(
       "upsertBatch: no committed layout under " + baseDir +
       " — seed the table with streamUpsertSink first"))
-    val man = readManifest(fs, s"$baseDir/v$latest")
     require(man.nBuckets >= 1,
       s"upsertBatch: layout $baseDir carries no bucket count")
-    applyDelta(spark, baseDir, delta, key, orderCols, man.nBuckets,
+    applyDelta(spark, h, delta, key, orderCols, man.nBuckets,
       maintain, txn = -1L)
   }
 
@@ -1443,13 +1448,10 @@ object Loader {
                 maintain: Option[Maintain] = None): String = {
     import org.apache.spark.sql.functions._
     require(!source.isStreaming, "mergeInto: streaming source")
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(sys.error(
+    val h = head(spark, baseDir)
+    val man = h.man.getOrElse(sys.error(
       "mergeInto: no committed layout under " + baseDir +
       " — seed the table with streamUpsertSink first"))
-    val cur = s"$baseDir/v$latest"
-    val man = readManifest(fs, cur)
     val snapSchema = man.schema.getOrElse {
       org.apache.spark.sql.types.StructType(
         spark.read.option("mergeSchema", "true")
@@ -1472,12 +1474,12 @@ object Loader {
         .select(bucketOf(key, man.nBuckets).as("__b"))
         .distinct().collect().map(_.getInt(0)).sorted.toIndexedSeq
       val priorBuckets = touched.filter(man.buckets.contains)
-      val priorDv = readDv(spark, fs, cur)
+      val priorDv = h.dv(spark)
       val dataCols = snapSchema.fieldNames.toIndexedSeq
       val target =
         if (priorBuckets.isEmpty) spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](), snapSchema)
-        else eraReadLive(spark, fs, baseDir, man, priorBuckets, priorDv,
+        else eraReadLive(spark, h.fs, baseDir, man, priorBuckets, priorDv,
           target = Some(snapSchema))
       val t = target.select(dataCols.map(c => col(c).as(s"t_$c")): _*)
       val sp = src.select(dataCols.map(c => col(c).as(s"s_$c")): _*)
@@ -1497,9 +1499,8 @@ object Loader {
         .select(dataCols.map(c =>
           when(takeSource, col(s"s_$c")).otherwise(col(s"t_$c"))
             .as(c)): _*)
-      stageAndPublish(spark, fs, baseDir, merged, touched,
-        man.buckets, Some(man), priorDv, man.nBuckets, key, maintain,
-        txn = -1L, seq = latest + 1)
+      stageAndPublish(spark, h, merged, touched, man.buckets, priorDv,
+        man.nBuckets, key, maintain, txn = -1L)
     } finally { src.unpersist(); () }
   }
 
@@ -1583,9 +1584,8 @@ object Loader {
       dvRowsCache.getOrElseUpdate(seq,
         d.df.select(col("file"), col("pos")).collect()
           .map(r => (r.getString(0), r.getLong(1))).toSet)
-    val bucketRe = (BucketCol + "=([0-9]+)/").r
     def bucketOfFile(f: String): Int =
-      bucketRe.findFirstMatchIn(f).getOrElse(sys.error(
+      BucketDir.findFirstMatchIn(f).getOrElse(sys.error(
         s"tableChanges: DV file entry without a bucket dir: $f"))
         .group(1).toInt
     val steps = (fromSeq + 1 to toSeq).map { seq =>
@@ -1610,8 +1610,7 @@ object Loader {
         // surface as inserts, which only the live-vs-live diff sees)
         val exPrev = extrasOf(manPrev); val exCur = extrasOf(manCur)
         def dvBucketsOf(df: DataFrame): Set[Int] =
-          df.select(regexp_extract(col("file"),
-              BucketCol + "=([0-9]+)/", 1).cast("int").as("b"))
+          df.select(pathBucket(col("file")).as("b"))
             .distinct().collect().map(_.getInt(0)).toSet
         val dvRemoved: Set[Int] =
           if (dvSmall) {
@@ -1715,8 +1714,7 @@ object Loader {
               "left_anti"))
           }
           newDv.flatMap { nd =>
-            val ndP = nd.withColumn("__b", regexp_extract(col("file"),
-                BucketCol + "=([0-9]+)/", 1).cast("int"))
+            val ndP = nd.withColumn("__b", pathBucket(col("file")))
               .filter(!col("__b").isin(changedSet.toSeq: _*))
               .persist()
             try {
@@ -1777,12 +1775,9 @@ object Loader {
     */
   def dropColumn(spark: org.apache.spark.sql.SparkSession,
                  baseDir: String, column: String, key: String): String = {
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(sys.error(
+    val h = head(spark, baseDir)
+    val man = h.man.getOrElse(sys.error(
       s"dropColumn: no committed layout under $baseDir"))
-    val cur = s"$baseDir/v$latest"
-    val man = readManifest(fs, cur)
     val sc = man.schema.getOrElse(sys.error(
       "dropColumn: legacy pre-schema manifest — commit once through " +
       "upsertBatch to record a schema first"))
@@ -1791,18 +1786,12 @@ object Loader {
     require(sc.fieldNames.contains(column),
       s"dropColumn: no column '$column' in " +
       s"(${sc.fieldNames.mkString(", ")})")
-    val attempt = newAttemptDir(fs, baseDir)
     // the full applicable DV set carries forward untouched — no file
     // was rewritten, so no tombstone was applied
-    readDv(spark, fs, cur).foreach(dv =>
-      dv.df.write.mode(SaveMode.Overwrite).parquet(s"$attempt/$DvDirName"))
-    writeManifest(fs, attempt,
-      Manifest(man.buckets, man.nBuckets, -1L,
-        Some(org.apache.spark.sql.types.StructType(
-          sc.filterNot(_.name == column))),
-        ts = nextCommitTs(Some(man)), renames = man.renames,
-        extras = man.extras))
-    commitAttempt(spark, fs, baseDir, attempt, latest + 1)
+    commit(spark, h, None)(_ => Staged(man.copy(txn = -1L,
+        schema = Some(org.apache.spark.sql.types.StructType(
+          sc.filterNot(_.name == column)))),
+      h.dv(spark).map(_.df)))
   }
 
   /** Metadata-only ALTER TABLE RENAME COLUMN for the snapshot sink —
@@ -1824,12 +1813,9 @@ object Loader {
   def renameColumn(spark: org.apache.spark.sql.SparkSession,
                    baseDir: String, oldName: String,
                    newName: String): String = {
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(sys.error(
+    val h = head(spark, baseDir)
+    val man = h.man.getOrElse(sys.error(
       s"renameColumn: no committed layout under $baseDir"))
-    val cur = s"$baseDir/v$latest"
-    val man = readManifest(fs, cur)
     val sc = man.schema.getOrElse(sys.error(
       "renameColumn: legacy pre-schema manifest — commit once through " +
       "upsertBatch to record a schema first"))
@@ -1844,19 +1830,12 @@ object Loader {
     require(!oldName.exists(_.isWhitespace) &&
             !newName.exists(_.isWhitespace) && newName.nonEmpty,
       "renameColumn: column names must be non-empty and whitespace-free")
-    val seq = latest + 1
-    val attempt = newAttemptDir(fs, baseDir)
     // no file was rewritten — tombstones carry forward untouched
-    readDv(spark, fs, cur).foreach(dv =>
-      dv.df.write.mode(SaveMode.Overwrite).parquet(s"$attempt/$DvDirName"))
-    writeManifest(fs, attempt,
-      Manifest(man.buckets, man.nBuckets, -1L,
-        Some(org.apache.spark.sql.types.StructType(sc.map(f =>
+    commit(spark, h, None)(_ => Staged(man.copy(txn = -1L,
+        schema = Some(org.apache.spark.sql.types.StructType(sc.map(f =>
           if (f.name == oldName) f.copy(name = newName) else f))),
-        ts = nextCommitTs(Some(man)),
-        renames = man.renames :+ ((seq, oldName, newName)),
-        extras = man.extras))
-    commitAttempt(spark, fs, baseDir, attempt, seq)
+        renames = man.renames :+ ((h.next, oldName, newName))),
+      h.dv(spark).map(_.df)))
   }
 
   /** Bucket-count evolution (ALTER TABLE CLUSTER BY — the re-shard
@@ -1876,25 +1855,20 @@ object Loader {
   def rebucket(spark: org.apache.spark.sql.SparkSession,
                baseDir: String, newBuckets: Int, key: String,
                maintain: Option[Maintain] = None): String = {
-    import org.apache.spark.sql.functions.col
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(sys.error(
+    val h = head(spark, baseDir)
+    val man = h.man.getOrElse(sys.error(
       s"rebucket: no committed layout under $baseDir"))
-    val cur = s"$baseDir/v$latest"
-    val man = readManifest(fs, cur)
     require(newBuckets >= 1, s"rebucket: $newBuckets < 1")
     require(newBuckets != man.nBuckets,
       s"rebucket: layout already has $newBuckets buckets")
     // the live snapshot (DV-applied), full rewrite
-    val merged = readSnapshot(spark, cur)
+    val merged = readSnapshot(spark, h.dir)
     val touched = merged
       .select(bucketOf(key, newBuckets).as("__b"))
       .distinct().collect().map(_.getInt(0)).sorted.toIndexedSeq
-    stageAndPublish(spark, fs, baseDir, merged, touched,
-      priorMap = Map.empty, priorManifest = Some(man), priorDv = None,
-      nBuckets = newBuckets, key = key, maintain = maintain,
-      txn = -1L, seq = latest + 1)
+    stageAndPublish(spark, h, merged, touched, priorMap = Map.empty,
+      priorDv = None, nBuckets = newBuckets, key = key,
+      maintain = maintain, txn = -1L)
   }
 
   /** Compaction (OPTIMIZE) for [[streamUpsertSink]] snapshots — the
@@ -1922,10 +1896,9 @@ object Loader {
                       maintain: Option[Maintain] = None)
       : Option[String] = {
     import org.apache.spark.sql.functions.col
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(return None)
-    val man = readManifest(fs, s"$baseDir/v$latest")
+    val h = head(spark, baseDir)
+    val fs = h.fs
+    val man = h.man.getOrElse(return None)
     def dataFiles(dir: String): Int =
       fs.listStatus(new org.apache.hadoop.fs.Path(dir)).count { st =>
         val n = st.getPath.getName
@@ -1935,10 +1908,9 @@ object Loader {
     // multiple files OR it carries merge-on-read debt of either kind:
     // deletion-vector tombstones or extras appendices — compaction is
     // exactly where both get physically applied and purged
-    val priorDv = readDv(spark, fs, s"$baseDir/v$latest")
+    val priorDv = h.dv(spark)
     val dvBuckets: Set[Int] = priorDv.fold(Set.empty[Int])(d =>
-      d.df.select(org.apache.spark.sql.functions.regexp_extract(col("file"),
-          BucketCol + "=([0-9]+)/", 1).cast("int").as("b"))
+      d.df.select(pathBucket(col("file")).as("b"))
         .distinct().collect().map(_.getInt(0)).toSet)
     val extraBuckets = man.extras.map(_._1).toSet
     val fragmented = man.buckets.toSeq.sorted.filter { case (b, v) =>
@@ -1952,72 +1924,44 @@ object Loader {
       dataFiles(s"$baseDir/v$v/$BucketCol=$b") > 1
     }
     if (fragmented.isEmpty) return None
-    val seq = latest + 1
-    // private staging + atomic publish rename: see [[commitAttempt]]
-    val attempt = newAttemptDir(fs, baseDir)
-    // ONE partitioned write for every fragmented bucket (round 14 —
-    // the deleteWhere shape): the old per-bucket loop serialized a
-    // read + coalesce(1) write per bucket; a single
-    // repartition(bucket) + partitionBy write bin-packs each bucket
-    // into one file just the same (each bucket's rows land in one
-    // task; maxRecordsPerFile still rolls). Recorded-schema era read:
-    // columns dropped by dropColumn are PHYSICALLY purged here,
-    // renamed columns land under their CURRENT physical name, extras
-    // appendices fold in, tombstones apply (compaction is where
-    // merge-on-read debt of every kind gets discharged); each row's
-    // bucket id comes from its source file path. orderForWrite
-    // re-applies the declared layout (clusterBy OR the Morton
-    // zorderBy) — compaction must not trade fragmentation for a
-    // destroyed sort order.
-    val scanC = eraRead(spark, fs, baseDir, man,
-      fragmented.map(_._1), withPos = true)
-    val liveC = priorDv.fold(scanC)(dvAnti(scanC, _))
-    val rawC = liveC
-      .withColumn(BucketCol, org.apache.spark.sql.functions
-        .regexp_extract(col("__dv_f"),
-          java.util.regex.Pattern.quote(BucketCol) + "=(\\d+)", 1)
-        .cast("int"))
-      .drop("__dv_f", "__dv_p")
-      .repartition(col(BucketCol))
-    val sortedC = orderForWrite(rawC, maintain, Seq(col(BucketCol)))
-    val w0 = sortedC.write.mode(SaveMode.Overwrite)
-    val w1 = maintain.flatMap(_.maxRecordsPerFile).fold(w0)(
-      mrf => w0.option("maxRecordsPerFile", mrf.toString))
-    w1.partitionBy(BucketCol).parquet(attempt)
-    // a bucket whose live rows were ALL tombstoned writes no partition
-    // dir, but its manifest pointer below still references this slot —
-    // materialize the empty dir (exactly what the old per-bucket empty
-    // write produced)
-    for ((b, _) <- fragmented)
-      if (!fs.exists(new org.apache.hadoop.fs.Path(
-          s"$attempt/$BucketCol=$b")))
-        fs.mkdirs(new org.apache.hadoop.fs.Path(
-          s"$attempt/$BucketCol=$b"))
-    val meta = maintain.fold(Map.empty[String, MetaRows])(mt =>
-      writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq",
-        sortedC.schema))
-    // every DV'd bucket was rewritten above, so the carried set is
-    // empty by construction — the call stays for the invariant
-    dvMinusBuckets(priorDv, fragmented.map(_._1).toSet).foreach(dv =>
-      dv.write.mode(SaveMode.Overwrite).parquet(s"$attempt/$DvDirName"))
     val compacted = fragmented.map(_._1).toSet
-    val newBuckets = man.buckets ++ fragmented.map(_._1 -> seq)
-    val newExtras = man.extras.filterNot(e => compacted.contains(e._1))
-    // prune rename-log entries no surviving era needs: an era at
-    // holding version v consults renames with seq > v, so once every
-    // holder postdates a rename it is dead weight (historical
-    // manifests keep their own logs — time travel is untouched)
-    val minHolder = (newBuckets.values ++ newExtras.map(_._2))
-      .foldLeft(seq)(math.min)
-    writeManifest(fs, attempt,
-      Manifest(newBuckets,
-        man.nBuckets, -1L, man.schema, // compaction never evolves
-        ts = nextCommitTs(Some(man)),
-        renames = man.renames.filter(_._1 > minHolder),
-        extras = newExtras))
-    val next = commitAttempt(spark, fs, baseDir, attempt, seq)
-    maintain.foreach(mt => registerSnapshot(spark, next, mt, meta))
-    Some(next)
+    Some(commit(spark, h, maintain) { attempt =>
+      // ONE partitioned write for every fragmented bucket, bin-packing
+      // each into one file (maxRecordsPerFile still rolls).
+      // Recorded-schema era read: columns dropped by dropColumn are
+      // PHYSICALLY purged here, renamed columns land under their
+      // CURRENT physical name, extras appendices fold in, tombstones
+      // apply (compaction is where merge-on-read debt of every kind gets
+      // discharged); each row's bucket id comes from its source file
+      // path. writeBuckets re-applies the declared layout (clusterBy OR
+      // the Morton zorderBy) — compaction must not trade fragmentation
+      // for a destroyed sort order.
+      val scan = eraRead(spark, fs, baseDir, man, fragmented.map(_._1),
+        withPos = true)
+      val written = writeBuckets(priorDv.fold(scan)(dvAnti(scan, _))
+        .withColumn(BucketCol, pathBucket(col("__dv_f")))
+        .drop("__dv_f", "__dv_p"), attempt, maintain)
+      // a bucket whose live rows were ALL tombstoned writes no partition
+      // dir, but its manifest pointer below still references this slot —
+      // materialize the empty dir
+      compacted.foreach(b =>
+        fs.mkdirs(new org.apache.hadoop.fs.Path(s"$attempt/$BucketCol=$b")))
+      val newBuckets = man.buckets ++ compacted.map(_ -> h.next)
+      val newExtras = man.extras.filterNot(e => compacted.contains(e._1))
+      // prune rename-log entries no surviving era needs: an era at
+      // holding version v consults renames with seq > v, so once every
+      // holder postdates a rename it is dead weight (historical
+      // manifests keep their own logs — time travel is untouched)
+      val minHolder = (newBuckets.values ++ newExtras.map(_._2))
+        .foldLeft(h.next)(math.min)
+      // compaction never evolves the schema; every DV'd bucket was
+      // rewritten, so the carried set is empty by construction — the
+      // call stays for the invariant
+      Staged(Manifest(newBuckets, man.nBuckets, -1L, man.schema,
+          renames = man.renames.filter(_._1 > minHolder),
+          extras = newExtras),
+        dvMinusBuckets(priorDv, compacted), Some(written))
+    })
   }
 
   /** Row-level DELETE for [[streamUpsertSink]] snapshots — the missing
@@ -2046,11 +1990,9 @@ object Loader {
                   cond: org.apache.spark.sql.Column,
                   maintain: Option[Maintain] = None)
       : Option[(String, Long)] = {
-    import org.apache.spark.sql.functions.{col, coalesce, count => cnt, input_file_name, lit, not}
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(return None)
-    val man = readManifest(fs, s"$baseDir/v$latest")
+    import org.apache.spark.sql.functions.{col, coalesce, count => cnt, lit, not}
+    val h = head(spark, baseDir)
+    val man = h.man.getOrElse(return None)
     // discovery probe: matching files only — zone/dict-pruned when the
     // snapshot's metadata is registered (the root set matches); the
     // manifest's recorded schema spares the footer pass. DV-filtered:
@@ -2059,8 +2001,8 @@ object Loader {
     // identity rides the __dv_f suffix [[eraRead]] captures from each
     // scan's _metadata BEFORE any join (input_file_name() refuses
     // multi-source plans, and a join's projection hides the struct).
-    val priorDv = readDv(spark, fs, s"$baseDir/v$latest")
-    val probe0 = eraRead(spark, fs, baseDir, man,
+    val priorDv = h.dv(spark)
+    val probe0 = eraRead(spark, h.fs, baseDir, man,
       man.buckets.keys.toSeq, withPos = true)
     val snapSchema = org.apache.spark.sql.types.StructType(
       probe0.schema.filterNot(f =>
@@ -2072,73 +2014,43 @@ object Loader {
       .collect()
     if (touchedFiles.isEmpty) return None
     val deleted = touchedFiles.map(_.getLong(1)).sum
-    val bucketRe = (java.util.regex.Pattern.quote(BucketCol) +
-      "=(\\d+)").r
     val touched = touchedFiles.map(r =>
-      bucketRe.findFirstMatchIn(r.getString(0)) match {
+      BucketDir.findFirstMatchIn(r.getString(0)) match {
         case Some(m) => m.group(1).toInt
         case None => sys.error(
           s"deleteWhere: no bucket in path ${r.getString(0)}")
       }).toSet
-    val seq = latest + 1
-    // private staging + atomic publish rename: see [[commitAttempt]]
-    val attempt = newAttemptDir(fs, baseDir)
     // SQL DELETE: remove iff cond is TRUE — NULL keeps the row
     val keepCond = not(coalesce(cond, lit(false)))
-    // ONE partitioned write for every touched bucket (round 14): the
-    // old per-bucket loop serialized read→persist→isEmpty→write per
-    // bucket (~3 jobs each — q237/q250 spent most of their commit wall
-    // here); rewriting all touched buckets through a single
-    // repartition(bucket) + partitionBy write is the stageAndPublish
-    // shape — same one-file-per-bucket layout, same within-bucket
-    // cluster/Z-order (bounds now span the touched set, as every
-    // multi-bucket upsert commit's already do). Each row's bucket id
-    // comes from its source file path — no key column is needed.
-    // The SNAPSHOT schema, not the file schema: a predicate may name
-    // a column this bucket's era predates (reads back NULL); extras
-    // appendices fold in and are purged by the rewrite.
-    val scanT = eraRead(spark, fs, baseDir, man, touched.toSeq.sorted,
-      withPos = true, target = Some(snapSchema))
-    val liveT = priorDv.fold(scanT)(dvAnti(scanT, _))
-    val kept0 = liveT
-      .withColumn(BucketCol, org.apache.spark.sql.functions
-        .regexp_extract(col("__dv_f"),
-          java.util.regex.Pattern.quote(BucketCol) + "=(\\d+)", 1)
-        .cast("int"))
-      .drop("__dv_f", "__dv_p")
-      .filter(keepCond)
-      .repartition(col(BucketCol))
-    val clustered = orderForWrite(kept0, maintain, Seq(col(BucketCol)))
-    val w0 = clustered.write.mode(SaveMode.Overwrite)
-    val w1 = maintain.flatMap(_.maxRecordsPerFile).fold(w0)(
-      m => w0.option("maxRecordsPerFile", m.toString))
-    w1.partitionBy(BucketCol).parquet(attempt)
-    // a touched bucket whose survivors all matched writes NO partition
-    // dir — it leaves the manifest (emptied), exactly like the old
-    // per-bucket isEmpty probe decided
-    val rewritten = touched.filter(b => fs.exists(
-      new org.apache.hadoop.fs.Path(s"$attempt/$BucketCol=$b")))
-    val emptied = touched -- rewritten
-    val meta =
-      if (rewritten.isEmpty) Map.empty[String, MetaRows]
-      else maintain.fold(Map.empty[String, MetaRows])(mt =>
-        writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq",
-          clustered.schema))
-    // touched buckets' tombstones are physically applied by the
-    // rewrite (or the bucket emptied); the rest carry forward
-    dvMinusBuckets(priorDv, touched).foreach(dv =>
-      dv.write.mode(SaveMode.Overwrite).parquet(s"$attempt/$DvDirName"))
-    val buckets = (man.buckets -- emptied) ++
-      rewritten.map(_ -> seq).toMap
-    require(buckets.nonEmpty,
-      s"deleteWhere: every row of $baseDir matched — refusing to " +
-      "commit an empty snapshot (drop the table instead)")
-    writeManifest(fs, attempt,
-      Manifest(buckets, man.nBuckets, -1L, Some(snapSchema),
-        ts = nextCommitTs(Some(man)), renames = man.renames,
-        extras = man.extras.filterNot(e => touched.contains(e._1))))
-    val next = commitAttempt(spark, fs, baseDir, attempt, seq)
-    maintain.foreach(mt => registerSnapshot(spark, next, mt, meta))
+    val next = commit(spark, h, maintain) { attempt =>
+      // ONE partitioned write for every touched bucket; each row's
+      // bucket id comes from its source file path — no key column is
+      // needed. The SNAPSHOT schema, not the file schema: a predicate
+      // may name a column this bucket's era predates (reads back NULL);
+      // extras appendices fold in and are purged by the rewrite.
+      val scan = eraRead(spark, h.fs, baseDir, man, touched.toSeq.sorted,
+        withPos = true, target = Some(snapSchema))
+      val written = writeBuckets(priorDv.fold(scan)(dvAnti(scan, _))
+        .withColumn(BucketCol, pathBucket(col("__dv_f")))
+        .drop("__dv_f", "__dv_p")
+        .filter(keepCond), attempt, maintain)
+      // a touched bucket whose survivors all matched writes NO partition
+      // dir — it leaves the manifest (emptied)
+      val rewritten = touched.filter(b => h.fs.exists(
+        new org.apache.hadoop.fs.Path(s"$attempt/$BucketCol=$b")))
+      val buckets = (man.buckets -- (touched -- rewritten)) ++
+        rewritten.map(_ -> h.next).toMap
+      require(buckets.nonEmpty,
+        s"deleteWhere: every row of $baseDir matched — refusing to " +
+        "commit an empty snapshot (drop the table instead)")
+      // touched buckets' tombstones are physically applied by the
+      // rewrite (or the bucket emptied); the rest carry forward
+      Staged(Manifest(buckets, man.nBuckets, -1L, Some(snapSchema),
+          renames = man.renames,
+          extras = man.extras.filterNot(e => touched.contains(e._1))),
+        dvMinusBuckets(priorDv, touched),
+        Option.when(rewritten.nonEmpty)(written))
+    }
     Some((next, deleted))
   }
 
@@ -2166,19 +2078,16 @@ object Loader {
                          maintain: Option[Maintain] = None)
       : Option[(String, Long)] = {
     import org.apache.spark.sql.functions.{coalesce, col, lit}
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(return None)
-    val cur = s"$baseDir/v$latest"
-    val man = readManifest(fs, cur)
-    val priorDv = readDv(spark, fs, cur)
+    val h = head(spark, baseDir)
+    val man = h.man.getOrElse(return None)
+    val priorDv = h.dv(spark)
     // probe LIVE rows only: an already-tombstoned row must not be
     // tombstoned twice (the union below stays duplicate-free because
     // a (file, pos) can appear in at most one of the two sets).
     // eraRead captures _metadata positions per scan BEFORE the
     // anti-join, and folds in any extras appendices — a post-update
     // image living in an extra file is tombstonable like any row.
-    val scan0 = eraRead(spark, fs, baseDir, man,
+    val scan0 = eraRead(spark, h.fs, baseDir, man,
       man.buckets.keys.toSeq, withPos = true)
     val live = priorDv.fold(scan0)(dvAnti(scan0, _))
     val newDv = live.filter(coalesce(cond, lit(false)))
@@ -2198,16 +2107,9 @@ object Loader {
           priorDv.map(_.bytes).getOrElse(0L))).isEmpty,
         s"deleteWhereVectors: every row of $baseDir matched — " +
         "refusing to tombstone the whole table (drop it instead)")
-      val attempt = newAttemptDir(fs, baseDir)
-      all.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$attempt/$DvDirName")
-      writeManifest(fs, attempt,
-        Manifest(man.buckets, man.nBuckets, -1L, man.schema,
-          ts = nextCommitTs(Some(man)), renames = man.renames,
-          extras = man.extras))
-      val next = commitAttempt(spark, fs, baseDir, attempt, latest + 1)
-      maintain.foreach(mt => registerSnapshot(spark, next, mt))
-      Some((next, deleted))
+      // no data is written: the registries reload from disk
+      Some((commit(spark, h, maintain)(_ =>
+        Staged(man.copy(txn = -1L), Some(all.coalesce(1)))), deleted))
     } finally { newDv.unpersist(); () }
   }
 
@@ -2250,20 +2152,17 @@ object Loader {
     require(!set.contains(key),
       s"updateWhereVectors: SET must not touch the key '$key' — a key " +
       "change is a delete+insert (use mergeInto)")
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    val latest = committed.lastOption.getOrElse(return None)
-    val cur = s"$baseDir/v$latest"
-    val man = readManifest(fs, cur)
+    val h = head(spark, baseDir)
+    val man = h.man.getOrElse(return None)
     val snapSchema = man.schema.getOrElse(sys.error(
       "updateWhereVectors: legacy pre-schema manifest — commit once " +
       "through upsertBatch to record a schema first"))
     set.keys.find(c => !snapSchema.fieldNames.contains(c)).foreach(c =>
       sys.error(s"updateWhereVectors: SET names unknown column '$c' " +
         s"(has: ${snapSchema.fieldNames.mkString(", ")})"))
-    val priorDv = readDv(spark, fs, cur)
+    val priorDv = h.dv(spark)
     // live rows with tombstone identity (extras-aware, rename-aware)
-    val scanPos = eraRead(spark, fs, baseDir, man,
+    val scanPos = eraRead(spark, h.fs, baseDir, man,
       man.buckets.keys.toSeq, withPos = true)
     val live = priorDv.fold(scanPos)(dvAnti(scanPos, _))
     val matched = live.filter(coalesce(cond, lit(false))).persist()
@@ -2275,42 +2174,28 @@ object Loader {
         set.get(c).map(_.cast(snapSchema(c).dataType))
           .getOrElse(col(c)).as(c)): _*)
       checkGate(spark, updated, maintain, "updateWhereVectors")
-      val seq = latest + 1
-      val attempt = newAttemptDir(fs, baseDir)
-      // appended images land bucket-partitioned (the key is untouched,
-      // so each image stays in its row's bucket) under the declared
-      // file order — an appendix file is a first-class layout citizen
-      val bucketed = updated
-        .withColumn(BucketCol, bucketOf(key, man.nBuckets))
-        .repartition(col(BucketCol))
-      val clustered = orderForWrite(bucketed, maintain,
-        Seq(col(BucketCol)))
-      val w0 = clustered.write.mode(SaveMode.Overwrite)
-      val w1 = maintain.flatMap(_.maxRecordsPerFile).fold(w0)(
-        m => w0.option("maxRecordsPerFile", m.toString))
-      w1.partitionBy(BucketCol).parquet(attempt)
-      val touchedB = fs.listStatus(
-          new org.apache.hadoop.fs.Path(attempt)).toSeq
-        .map(_.getPath.getName)
-        .filter(_.startsWith(s"$BucketCol="))
-        .map(_.stripPrefix(s"$BucketCol=").toInt).sorted
-      // zone/dict/Bloom/stat metadata over ONLY the appended files
-      val meta = maintain.fold(Map.empty[String, MetaRows])(mt =>
-        writeMaintenance(spark, mt, attempt, s"$baseDir/v$seq",
-          clustered.schema))
-      // tombstone the pre-images: prior set ∪ matched positions
-      val newDv = matched
-        .select(col("__dv_f").as("file"), col("__dv_p").as("pos"))
-      val all = priorDv.fold(newDv)(d =>
-        d.df.select(col("file"), col("pos")).unionByName(newDv))
-      all.coalesce(1).write.mode(SaveMode.Overwrite)
-        .parquet(s"$attempt/$DvDirName")
-      writeManifest(fs, attempt,
-        Manifest(man.buckets, man.nBuckets, -1L, Some(snapSchema),
-          ts = nextCommitTs(Some(man)), renames = man.renames,
-          extras = man.extras ++ touchedB.map(_ -> seq)))
-      val next = commitAttempt(spark, fs, baseDir, attempt, seq)
-      maintain.foreach(mt => registerSnapshot(spark, next, mt, meta))
+      val next = commit(spark, h, maintain) { attempt =>
+        // appended images land bucket-partitioned (the key is untouched,
+        // so each image stays in its row's bucket) under the declared
+        // file order — an appendix file is a first-class layout citizen
+        // with metadata over ONLY the appended files
+        val written = writeBuckets(
+          updated.withColumn(BucketCol, bucketOf(key, man.nBuckets)),
+          attempt, maintain)
+        val touchedB = h.fs.listStatus(
+            new org.apache.hadoop.fs.Path(attempt)).toSeq
+          .map(_.getPath.getName)
+          .filter(_.startsWith(s"$BucketCol="))
+          .map(_.stripPrefix(s"$BucketCol=").toInt).sorted
+        // tombstone the pre-images: prior set ∪ matched positions
+        val newDv = matched
+          .select(col("__dv_f").as("file"), col("__dv_p").as("pos"))
+        val all = priorDv.fold(newDv)(d =>
+          d.df.select(col("file"), col("pos")).unionByName(newDv))
+        Staged(man.copy(txn = -1L, schema = Some(snapSchema),
+            extras = man.extras ++ touchedB.map(_ -> h.next)),
+          Some(all.coalesce(1)), Some(written))
+      }
       Some((next, nUpd))
     } finally { matched.unpersist(); () }
   }

@@ -94,6 +94,21 @@ class DeletionVectorSpec extends SparkSpec {
     assert(e.getMessage.contains("refusing"))
   }
 
+  test("a copy-on-write delete of every row refuses typed and leaves " +
+       "no staged attempt behind") {
+    val base = Files.createTempDirectory("graft-cow-all").toString
+    val sink = seedSink(base)
+    val e = intercept[IllegalArgumentException] {
+      Loader.deleteWhere(spark, sink, col("user_id") > 0L)
+    }
+    assert(e.getMessage.contains("refusing"))
+    assert(Loader.snapshotVersions(spark, sink).map(_._1) === Seq(0L))
+    assert(snap(sink).size === 40)
+    val attempts = Option(new java.io.File(s"$sink/_attempt").listFiles())
+      .getOrElse(Array.empty)
+    assert(attempts.isEmpty, attempts.mkString(","))
+  }
+
   test("second DV delete composes; already-tombstoned rows are not " +
        "re-counted") {
     val base = Files.createTempDirectory("graft-dv2").toString
