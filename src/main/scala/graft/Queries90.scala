@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.streaming.{OutputMode, Trigger}
+import org.apache.spark.sql.streaming.OutputMode
 import graft.sources.Shards
 
 /** Round-9 part-9 query: STREAMED archive-shard ingestion — m18's tar
@@ -43,14 +43,8 @@ object Queries90 {
         // prove itself ACROSS batch boundaries, not in one batch
         .option("maxFilesPerTrigger", "8")
         .load(work)
-      val q = Shards.tarMembers(src)
-        .writeStream.outputMode(OutputMode.Append())
-        .format("memory").queryName(sink)
-        .option("checkpointLocation", ckpt)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-      Queries88.memberReport(s.table(sink), "tar")
+      Queries88.memberReport(graft.streaming.Streams.runToMemory(
+        Shards.tarMembers(src), OutputMode.Append(), sink, ckpt), "tar")
     }))
 
   val oracleSql: Map[String, String] = Map(

@@ -27,16 +27,20 @@ object Tables {
   def embeddings(spark: SparkSession, dir: String): DataFrame = load(spark, dir, "embeddings")
 
   /** events with `ts` normalized from nanos-long to TIMESTAMP_NTZ (µs). */
-  def events(spark: SparkSession, dir: String): DataFrame = {
-    val raw = load(spark, dir, "events")
+  def events(spark: SparkSession, dir: String): DataFrame =
+    microsTs(load(spark, dir, "events"))
+
+  /** `df` (batch or streaming) with a nanos-long `ts` as µs
+    * TIMESTAMP_NTZ; a `ts` that is already a timestamp is kept. */
+  private[graft] def microsTs(df: DataFrame): DataFrame = {
     import org.apache.spark.sql.types._
-    raw.schema("ts").dataType match {
+    df.schema("ts").dataType match {
       case LongType =>
         // integer division: ns-since-epoch exceeds double's 2^53 mantissa,
         // so a float divide here would corrupt microseconds
-        raw.withColumn(
+        df.withColumn(
           "ts", timestamp_micros(expr("ts DIV 1000")).cast(TimestampNTZType))
-      case _ => raw
+      case _ => df
     }
   }
 }

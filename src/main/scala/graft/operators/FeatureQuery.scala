@@ -55,16 +55,18 @@ object FeatureQuery {
   /** Faithful end-to-end pipeline (`main.py:284-330`): join transactions to
     * the key mapping, then three feature aggregations, then assembly.
     * `persist` caches the shared joined frame (SURVEY.md §7.3-10) — the
-    * behavioral equivalent of the reference's eager materialization.
+    * behavioral equivalent of the reference's eager materialization. The
+    * caller owns that cache entry: [[graft.pipeline.HouseholdPipeline.run]]
+    * drops it after its write.
     */
   def householdFeatures(demographics: DataFrame, mapping: DataFrame,
                         transactions: DataFrame, joinKey: String,
                         householdKey: String, dateCol: String,
-                        amountCol: String, start: Timestamp, end: Timestamp,
-                        persistJoined: Boolean = true): DataFrame = {
-    val joined0 = Processor.toTimestampCol(
+                        amountCol: String, start: Timestamp, end: Timestamp)
+      : DataFrame = {
+    val joined = Processor.toTimestampCol(
       Processor.join(transactions, mapping, joinKey, "inner"), dateCol)
-    val joined = if (persistJoined) joined0.persist() else joined0
+      .persist()
     val f2 = totalBefore(joined, householdKey, dateCol, amountCol, start)
     val f3 = totalDuring(joined, householdKey, dateCol, amountCol, start, end)
     val f4 = txnCount(joined, householdKey, amountCol)

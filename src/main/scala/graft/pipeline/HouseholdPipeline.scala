@@ -59,7 +59,11 @@ object HouseholdPipeline {
   def run(spark: SparkSession, demPath: String, hhPath: String,
           transPath: String, outPath: String): Boolean = {
     val out = features(spark, demPath, hhPath, transPath, fused = false)
-    Loader.writeCsvSingle(out, outPath)
+    // the persisted join must not outlive the run: file-source plans
+    // compare equal by path, so a later run over rewritten inputs would
+    // read this run's cached rows
+    try Loader.writeCsvSingle(out, outPath)
+    finally org.apache.spark.sql.graftbridge.Bridge.uncacheReads(out)
   }
 
   def runFused(spark: SparkSession, demPath: String, hhPath: String,

@@ -52,6 +52,16 @@ private[plans] object RegistryKeys {
 
   def ofTable(db: String, table: String): String = s"table:$db.$table"
 
+  /** Remove every entry of `byKey` whose root-path set reaches into one
+    * of `dirs` (a root at or below one of them). */
+  def removeUnder(byKey: java.util.concurrent.ConcurrentHashMap[String, _],
+                  dirs: Seq[String]): Unit = {
+    val ds = dirs.map(norm)
+    byKey.keySet.removeIf(k => k.split('\n').exists(p =>
+      ds.exists(d => p == d || p.startsWith(d + "/"))))
+    ()
+  }
+
   /** Lookup candidates for a scan, most specific first. */
   def candidates(lr: org.apache.spark.sql.execution.datasources.LogicalRelation,
                  loc: org.apache.spark.sql.execution.datasources.FileIndex)
@@ -147,6 +157,10 @@ object StatsRegistry {
   private[plans] def getSnapshotByKey(key: String): Option[TableSnapshot] =
     Option(byPath.get(key)).flatMap(_._2)
   def clear(): Unit = byPath.clear()
+  /** Forget every entry whose roots lie under one of `dirs` — reclaimed
+    * snapshot versions, which no read can resolve to again. */
+  private[graft] def forgetUnder(dirs: Seq[String]): Unit =
+    RegistryKeys.removeUnder(byPath, dirs)
   def isEmpty: Boolean = byPath.isEmpty
   /** Every registered entry by registry key (an immutable copy). */
   private[graft] def entries

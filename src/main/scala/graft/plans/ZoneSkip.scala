@@ -116,6 +116,10 @@ object ZoneRegistry {
   private[plans] def getByKey(key: String): Option[ZoneManifest] =
     Option(byPath.get(key))
   def clear(): Unit = byPath.clear()
+  /** Forget every entry whose roots lie under one of `dirs` — reclaimed
+    * snapshot versions, which no read can resolve to again. */
+  private[graft] def forgetUnder(dirs: Seq[String]): Unit =
+    RegistryKeys.removeUnder(byPath, dirs)
   def isEmpty: Boolean = byPath.isEmpty
   /** Every registered manifest by registry key (an immutable copy). */
   private[graft] def entries: Map[String, ZoneManifest] = {

@@ -324,17 +324,29 @@ object Loader {
     "file STRING, pos BIGINT")
 
   /** The applicable DV set recorded at `versionDir`, if any:
-    * (file suffix, pos) plus its size. One content-summary RPC — no
-    * data read, and no footer-inference job: the read carries
-    * [[DvSchema]]. Every `_dv` read goes through here. */
+    * (file suffix, pos) plus its size. One listing RPC — no data read,
+    * and no footer-inference job: the read carries [[DvSchema]]. It
+    * reads the listed part files, not the dir: Spark ignores a root
+    * path whose name starts with `_` and warns on every such read.
+    * Every `_dv` read goes through here. */
   private def readDv(spark: org.apache.spark.sql.SparkSession,
                      fs: org.apache.hadoop.fs.FileSystem,
                      versionDir: String): Option[DvSet] = {
     val p = new org.apache.hadoop.fs.Path(versionDir, DvDirName)
-    if (fs.exists(p))
-      Some(DvSet(spark.read.schema(DvSchema).parquet(p.toString),
-        fs.getContentSummary(p).getLength))
-    else None
+    if (!fs.exists(p)) None
+    else {
+      val parts = fs.listStatus(p).filter { st =>
+        val n = st.getPath.getName
+        st.isFile && !n.startsWith("_") && !n.startsWith(".")
+      }
+      val df =
+        if (parts.isEmpty) spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          DvSchema)
+        else spark.read.schema(DvSchema)
+          .parquet(parts.map(_.getPath.toString).toSeq: _*)
+      Some(DvSet(df, parts.map(_.getLen).sum))
+    }
   }
 
   /** Anti-join `withPos` (which already carries the __dv_f/__dv_p
@@ -1038,6 +1050,12 @@ object Loader {
             s"$baseDir/_blooms/v$v"), true)
           ()
         }
+        // a reclaimed version's root set can never be read again
+        // (readSnapshot of it throws VacuumedVersionException): its
+        // registry entries would only pin driver memory
+        val deadDirs = dead.map(v => s"$baseDir/v$v")
+        graft.plans.ZoneRegistry.forgetUnder(deadDirs)
+        graft.plans.StatsRegistry.forgetUnder(deadDirs)
         // orphaned staging attempts (a crashed or lost-race writer's
         // leftovers): with every writer stopped — the vacuum contract —
         // any dir still under _attempt/ was never published
@@ -2071,6 +2089,11 @@ object Loader {
     * other maintenance ops; OCC-protected like every commit.
     * Returns (new version dir, rows tombstoned); None when nothing
     * matched.
+    *
+    * `maintain` is unused: the commit writes no data file and its
+    * manifest's holder dirs are the head's, so the registry entry the
+    * head's commit registered already describes the new version. A
+    * driver that never registered the head calls [[registerSnapshot]].
     */
   def deleteWhereVectors(spark: org.apache.spark.sql.SparkSession,
                          baseDir: String,
@@ -2107,8 +2130,7 @@ object Loader {
           priorDv.map(_.bytes).getOrElse(0L))).isEmpty,
         s"deleteWhereVectors: every row of $baseDir matched — " +
         "refusing to tombstone the whole table (drop it instead)")
-      // no data is written: the registries reload from disk
-      Some((commit(spark, h, maintain)(_ =>
+      Some((commit(spark, h, None)(_ =>
         Staged(man.copy(txn = -1L), Some(all.coalesce(1)))), deleted))
     } finally { newDv.unpersist(); () }
   }

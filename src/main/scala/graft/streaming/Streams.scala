@@ -2,7 +2,8 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout,
+  OutputMode, StreamingQuery, Trigger}
 import org.apache.spark.sql.types._
 
 /** Structured Streaming surface over the events stream (event_id, ts,
@@ -574,47 +575,25 @@ object Streams {
       withStatePartitions(spark, statePartitions) {
     // transformWithState needs multi-column-family state → RocksDB;
     // scope the provider override to this query's checkpoint creation
-    val pKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProvider = spark.conf.getOption(pKey)
-    spark.conf.set(pKey, "org.apache.spark.sql.execution.streaming." +
-      "state.RocksDBStateStoreProvider")
-    try {
-    import spark.implicits._
-    implicit val s: SparkSession = spark
-    val f = new java.io.File(docsPath)
-    val srcPath =
-      if (!f.isFile) docsPath
-      else {
-        val dir = new java.io.File(workDir, "src")
-        linkInto(dir, f.getName, f)
-        dir.toString
-      }
-    val schema = spark.read.parquet(docsPath).schema
-    val reader0 = spark.readStream.schema(schema)
-    val reader = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n.toString))
-    val offers = reader.parquet(srcPath)
-      .select(col("source"), col("doc_id"),
-        size(expr("regexp_extract_all(trim(regexp_replace(lower(text)," +
-          " '\\\\s+', ' ')), '\\\\S+', 0)")).cast("long").as("n_tok"),
-        md5(concat(lit("mix:"), col("doc_id").cast("string"))).as("h"))
-      .as[BudgetDoc]
-    val q = budgetFillPerSource(offers, budget)
-      .toDF()
-      .writeStream.outputMode(OutputMode.Update()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
-      .select(col("source"), col("doc_id"), col("n_tok"), col("cum_tok"))
-    } finally prevProvider match {
-      case Some(v) => spark.conf.set(pKey, v)
-      case None => spark.conf.unset(pKey)
+    withConf(spark, "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state." +
+        "RocksDBStateStoreProvider") {
+      import spark.implicits._
+      implicit val s: SparkSession = spark
+      val offers = fileStream(spark, docsPath, workDir, maxFilesPerTrigger)
+        .select(col("source"), col("doc_id"),
+          size(expr(Tokens)).cast("long").as("n_tok"),
+          md5(concat(lit("mix:"), col("doc_id").cast("string"))).as("h"))
+        .as[BudgetDoc]
+      runToMemory(budgetFillPerSource(offers, budget).toDF(),
+          OutputMode.Update(), sinkName, checkpointOf(workDir))
+        .select(col("source"), col("doc_id"), col("n_tok"), col("cum_tok"))
     }
   }
+
+  /** A document's whitespace-normalized lower-case tokens (SQL). */
+  private val Tokens = "regexp_extract_all(trim(regexp_replace(" +
+    "lower(text), '\\\\s+', ' ')), '\\\\S+', 0)"
 
   /** Count-Min sketch maintained as LIVE streaming-aggregation state:
     * file source over a documents table → per-token (row, bucket)
@@ -627,37 +606,20 @@ object Streams {
   def streamedCountMin(spark: SparkSession, docsPath: String,
                        workDir: String, sinkName: String,
                        rows: Int = 4, width: Int = 1024,
-                       statePartitions: Int = 8): DataFrame =
-      withStatePartitions(spark, statePartitions) {
+                       statePartitions: Int = 8): DataFrame = {
     require(width >= 2 && (width & (width - 1)) == 0,
       s"streamedCountMin: width must be a power of two, got $width")
-    val f = new java.io.File(docsPath)
-    val srcPath =
-      if (!f.isFile) docsPath
-      else {
-        val dir = new java.io.File(workDir, "src")
-        linkInto(dir, f.getName, f)
-        dir.toString
-      }
-    val schema = spark.read.parquet(docsPath).schema
-    val toks = spark.readStream.schema(schema).parquet(srcPath)
-      .select(explode(expr("regexp_extract_all(trim(regexp_replace(" +
-        "lower(text), '\\\\s+', ' ')), '\\\\S+', 0)")).as("w"))
-    val cells = toks.select(explode(array((0 until rows).map(j =>
-        struct(lit(j).as("j"),
-          graft.functions.Expressions.fnv_hash(col("w"), j.toLong)
-            .bitwiseAND(lit((width - 1).toLong)).as("b"))): _*)).as("rb"))
-      .select(col("rb.j").as("j"), col("rb.b").as("b"))
-    val q = cells.groupBy(col("j"), col("b"))
-      .agg(count(lit(1)).as("c"))
-      .writeStream.outputMode(OutputMode.Complete()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).select(col("j"), col("b"), col("c"))
+    streamedComplete(spark, docsPath, workDir, sinkName, docs =>
+      docs.select(explode(expr(Tokens)).as("w"))
+        .select(explode(array((0 until rows).map(j =>
+          struct(lit(j).as("j"),
+            graft.functions.Expressions.fnv_hash(col("w"), j.toLong)
+              .bitwiseAND(lit((width - 1).toLong)).as("b"))): _*)).as("rb"))
+        .select(col("rb.j").as("j"), col("rb.b").as("b"))
+        .groupBy(col("j"), col("b"))
+        .agg(count(lit(1)).as("c")),
+      statePartitions)
+      .select(col("j"), col("b"), col("c"))
   }
 
   /** Live distinct-cardinality sketch: q193's deterministic 64-register
@@ -674,37 +636,18 @@ object Streams {
   def streamedHllRegisters(spark: SparkSession, docsPath: String,
                            workDir: String, sinkName: String,
                            statePartitions: Int = 8): DataFrame =
-      withStatePartitions(spark, statePartitions) {
-    val f = new java.io.File(docsPath)
-    val srcPath =
-      if (!f.isFile) docsPath
-      else {
-        val dir = new java.io.File(workDir, "src")
-        linkInto(dir, f.getName, f)
-        dir.toString
-      }
-    val schema = spark.read.parquet(docsPath).schema
-    val toks = spark.readStream.schema(schema).parquet(srcPath)
-      .select(explode(expr("regexp_extract_all(trim(regexp_replace(" +
-        "lower(text), '\\\\s+', ' ')), '\\\\S+', 0)")).as("w"))
-    val regs = toks
-      .select(graft.functions.Expressions.fnv_hash(col("w")).as("h"))
-      .select(expr("h & 63").as("j"),
-              expr("shiftrightunsigned(h, 6)").as("wnd"))
-      .withColumn("rho",
-        when(col("wnd") === 0L, lit(59L))
-          .otherwise(
-            expr("CAST(bit_count((wnd & -wnd) - 1) + 1 AS BIGINT)")))
-    val q = regs.groupBy(col("j")).agg(max(col("rho")).as("mj"))
-      .writeStream.outputMode(OutputMode.Complete()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).select(col("j"), col("mj"))
-  }
+    streamedComplete(spark, docsPath, workDir, sinkName, docs =>
+      docs.select(explode(expr(Tokens)).as("w"))
+        .select(graft.functions.Expressions.fnv_hash(col("w")).as("h"))
+        .select(expr("h & 63").as("j"),
+                expr("shiftrightunsigned(h, 6)").as("wnd"))
+        .withColumn("rho",
+          when(col("wnd") === 0L, lit(59L))
+            .otherwise(
+              expr("CAST(bit_count((wnd & -wnd) - 1) + 1 AS BIGINT)")))
+        .groupBy(col("j")).agg(max(col("rho")).as("mj")),
+      statePartitions)
+      .select(col("j"), col("mj"))
 
   /** Live Gramian maintenance: s20's exact-integer XᵀX cells kept as
     * Complete-mode streaming state — every arriving embedding adds its
@@ -718,36 +661,17 @@ object Streams {
   def streamedGramCells(spark: SparkSession, embPath: String,
                         workDir: String, sinkName: String,
                         statePartitions: Int = 8): DataFrame =
-      withStatePartitions(spark, statePartitions) {
-    val f = new java.io.File(embPath)
-    val srcPath =
-      if (!f.isFile) embPath
-      else {
-        val dir = new java.io.File(workDir, "src")
-        linkInto(dir, f.getName, f)
-        dir.toString
-      }
-    val schema = spark.read.parquet(embPath).schema
-    val src = spark.readStream.schema(schema).parquet(srcPath)
-      .select(expr("transform(embedding, x -> " +
-        "CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))").as("q"))
-    val cells = src
-      .select(posexplode(col("q")).as(Seq("i", "qi")), col("q"))
-      .select(col("i"), col("qi"), posexplode(col("q")).as(Seq("j", "qj")))
-      .filter(col("j") >= col("i"))
-    val q = cells.groupBy(col("i"), col("j"))
-      .agg(sum(col("qi") * col("qj")).as("cell"))
-      .writeStream.outputMode(OutputMode.Complete()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    streamedComplete(spark, embPath, workDir, sinkName, emb =>
+      emb.select(expr("transform(embedding, x -> " +
+          "CAST(round(CAST(x AS DOUBLE) * 1000000, 0) AS BIGINT))").as("q"))
+        .select(posexplode(col("q")).as(Seq("i", "qi")), col("q"))
+        .select(col("i"), col("qi"), posexplode(col("q")).as(Seq("j", "qj")))
+        .filter(col("j") >= col("i"))
+        .groupBy(col("i"), col("j"))
+        .agg(sum(col("qi") * col("qj")).as("cell")),
+      statePartitions)
       .select(col("i").cast("long").as("i"), col("j").cast("long").as("j"),
               col("cell"))
-  }
 
   /** Live KMV bottom-k NDV sketch: s23's mergeable
     * [[graft.functions.Kmv]] aggregate kept as STREAMING-aggregation
@@ -770,37 +694,17 @@ object Streams {
                         keyExpr: String, workDir: String, sinkName: String,
                         k: Int = 1024,
                         statePartitions: Int = 8): DataFrame =
-      withStatePartitions(spark, statePartitions) {
-    val f = new java.io.File(tablePath)
-    val srcPath =
-      if (!f.isFile) tablePath
-      else {
-        val dir = new java.io.File(workDir, "src")
-        linkInto(dir, f.getName, f)
-        dir.toString
-      }
-    val schema = spark.read.parquet(tablePath).schema
-    val hashes = spark.readStream.schema(schema).parquet(srcPath)
-      .select(graft.functions.Expressions.mix64(
-        graft.functions.Expressions.fnv_hash(
-          expr(keyExpr).cast("string"))).as("h"))
-    val q = hashes
-      .agg(graft.functions.Kmv.kmv_sketch(k)(col("h")).as("sk"))
-      .writeStream.outputMode(OutputMode.Complete()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName).select(col("sk"))
-  }
+    streamedComplete(spark, tablePath, workDir, sinkName, t =>
+      t.select(graft.functions.Expressions.mix64(
+          graft.functions.Expressions.fnv_hash(
+            expr(keyExpr).cast("string"))).as("h"))
+        .agg(graft.functions.Kmv.kmv_sketch(k)(col("h")).as("sk")),
+      statePartitions)
+      .select(col("sk"))
 
   /** Generic "parquet file stream → caller-supplied transform →
     * Complete-mode memory sink" harness: the shape every live-readout
-    * query here shares (streamedHllRegisters / streamedGramCells /
-    * streamedKmvSketch are the bespoke instances; new readouts should
-    * use this). The transform must end in a streaming-supported
+    * query here shares. The transform must end in a streaming-supported
     * aggregation; because Complete mode re-emits full state, the
     * returned table is the exact aggregate over everything streamed —
     * which is what lets callers declare the streamed query against the
@@ -812,25 +716,8 @@ object Streams {
                        transform: DataFrame => DataFrame,
                        statePartitions: Int = 8): DataFrame =
       withStatePartitions(spark, statePartitions) {
-    val f = new java.io.File(tablePath)
-    val srcPath =
-      if (!f.isFile) tablePath
-      else {
-        val dir = new java.io.File(workDir, "src")
-        linkInto(dir, f.getName, f)
-        dir.toString
-      }
-    val schema = spark.read.parquet(tablePath).schema
-    val src = spark.readStream.schema(schema).parquet(srcPath)
-    val q = transform(src)
-      .writeStream.outputMode(OutputMode.Complete()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(transform(fileStream(spark, tablePath, workDir)),
+      OutputMode.Complete(), sinkName, checkpointOf(workDir))
   }
 
   /** [[RunningStatsProcessor]] wired to a stream (or batch twin — the
@@ -864,43 +751,6 @@ object Streams {
               col("m.last_event_id").as("last_event_id"),
               col("m.last_value").as("last_value"))
 
-  /** A REAL Structured Streaming execution end-to-end — not a batch twin:
-    * file source over the events parquet (AvailableNow trigger, optional
-    * maxFilesPerTrigger batch splitting), foreachBatch greatest-wins
-    * upsert into a parquet snapshot, final snapshot returned. This is
-    * the production "stream → serving snapshot" sink pattern (the
-    * foreachBatch path Spark recommends for upsert sinks).
-    *
-    * Correctness under replay/splitting: the merge keeps, per user, the
-    * row with the greatest (ts, event_id) across the existing snapshot
-    * and the micro-batch — an idempotent, commutative fold, so the final
-    * snapshot is byte-identical no matter how the files split into
-    * micro-batches or whether a batch is re-delivered. Snapshots are
-    * written as generations (write gen N+1, then swap) because a Spark
-    * job cannot overwrite the files it is reading.
-    *
-    * Scale: each micro-batch shuffles only its own argmax (map-side
-    * combined) plus the snapshot keyed by user; state lives in the
-    * snapshot files, not executor memory.
-    */
-  /** Runs `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `n`, restoring the session value after. Streaming state partition
-    * count is PINNED INTO THE CHECKPOINT at the query's first start and
-    * every micro-batch pays a fixed per-partition cost (4 state-store
-    * provider opens + delta commits per partition for a stream-stream
-    * join), so stateful streaming queries must size it to state volume,
-    * not inherit the CPU-count batch default — measured 22 s → 6 s on
-    * e27 going 32 → 8 partitions over ~2000 rows/batch. At large state
-    * (the 100 TB deployment) callers raise `statePartitions` when
-    * creating the checkpoint; it cannot change across restarts.
-    *
-    * NOTE this (like the per-query state-store provider override in
-    * streamedBudgetFill) mutates SHARED session conf for the duration of
-    * the query — safe under this repo's one-query-at-a-time sessions
-    * (Verify/Bench/specs are all sequential), NOT safe for concurrent
-    * streaming queries in one session; concurrent callers must clone the
-    * session (`spark.newSession()`) so conf scoping is per-query.
-    */
   /** Streaming per-key EXACT bucketed median — the q151 distinct-value
     * trick, streamed: a Complete-mode streaming aggregation maintains one
     * state row per (key, value bucket), and the median is recovered from
@@ -922,34 +772,17 @@ object Streams {
                            workDir: String, sinkName: String,
                            statePartitions: Int = 4): DataFrame =
       withStatePartitions(spark, statePartitions) {
-    val src = new java.io.File(workDir, "src")
     val batch = spark.read.parquet(eventsPath)
-    for (half <- 0 to 1) {
-      val tmp = new java.io.File(workDir, s"half$half")
-      batch.filter(pmod(xxhash64(col("event_id")), lit(2)) === half)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet"))
-      require(part.length == 1, s"streamedBucketMedian: ${part.length} parts")
-      linkInto(src, s"half$half.parquet", part(0))
-    }
-    val ev = spark.readStream.schema(batch.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src.toString)
+    val ev = fileStream(spark,
+      twoHalves(batch, "event_id", workDir, "streamedBucketMedian"),
+      workDir, Some(1), Some(batch.schema))
     val counts = ev.filter(col("value").isNotNull)
       .select(col("event_type"),
               expr("CAST(round(value * 100) AS BIGINT)").as("bucket"))
       .groupBy(col("event_type"), col("bucket"))
       .agg(count(lit(1)).as("cnt"))
-    val q = counts.writeStream.outputMode(OutputMode.Complete())
-      .format("memory").queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 2,
-      s"streamedBucketMedian: expected >= 2 data micro-batches, got $dataBatches")
-    val bc = spark.table(sinkName)
+    val bc = runToMemory(counts, OutputMode.Complete(), sinkName,
+      checkpointOf(workDir), minDataBatches = 2)
     // cum + total as two windows over ONE partitioning (no self-join —
     // a memory-sink self-join trips conflicting-attribute analysis, and
     // the join would be a second shuffle anyway); both windows span the
@@ -995,19 +828,9 @@ object Streams {
       .write.mode("overwrite").parquet(idxPath)
     val index = spark.read.parquet(idxPath)
       .withColumnRenamed("id", "old_id")
-    // the incoming batch, split into two files -> two real micro-batches
-    val src = new java.io.File(workDir, "src")
-    for (half <- 0 to 1) {
-      val tmp = new java.io.File(workDir, s"half$half")
-      nw.filter(pmod(xxhash64(col("doc_id")), lit(2)) === half)
-        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet"))
-      require(part.length == 1,
-        s"streamedIncrementalNearDup: ${part.length} parts")
-      linkInto(src, s"half$half.parquet", part(0))
-    }
-    val ev = spark.readStream.schema(docs.schema)
-      .option("maxFilesPerTrigger", "1").parquet(src.toString)
+    val ev = fileStream(spark,
+      twoHalves(nw, "doc_id", workDir, "streamedIncrementalNearDup"),
+      workDir, Some(1), Some(docs.schema))
     val cand = Dedup.minhashBandIndex(ev, "text", "doc_id",
                                       n, bands, rowsPerBand)
       .join(index, Seq("band", "bucket"))
@@ -1016,15 +839,11 @@ object Streams {
     val outPath = new java.io.File(workDir, "cands").toString
     val q = cand.writeStream.format("parquet")
       .option("path", outPath)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointOf(workDir))
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
-    val dataBatches = q.recentProgress.count(_.numInputRows > 0)
-    require(dataBatches >= 2,
-      s"streamedIncrementalNearDup: expected >= 2 data micro-batches, " +
-        s"got $dataBatches")
+    requireDataBatches(q, 2, "streamedIncrementalNearDup")
     val candidates = spark.read.parquet(outPath)
       .dropDuplicates("old_id", "new_id")
     Dedup.verifyCandidatePairs(
@@ -1044,60 +863,168 @@ object Streams {
     java.nio.file.Files.createSymbolicLink(link, target.toPath.toAbsolutePath)
   }
 
-  /** The parquet data files behind a table path: the driver testdata is
-    * a single .parquet FILE, Spark-written fixtures (MakeBenchData) are
-    * DIRECTORIES of part files — the dedup streams need the concrete
-    * file list to present each file twice under distinct names. */
-  private def parquetFiles(path: String, what: String): Seq[java.io.File] = {
-    val f = new java.io.File(path)
-    if (f.isFile) Seq(f)
-    else {
-      val parts = Option(f.listFiles).getOrElse(Array.empty[java.io.File])
-        .filter(p => p.isFile && p.getName.endsWith(".parquet"))
-        .sortBy(_.getName)
-      require(parts.nonEmpty, s"$what: no parquet files under $path")
-      parts.toSeq
+  /** `df` split by `pmod(xxhash64(key), 2)` into two one-file parquet
+    * halves (`workDir/half<i>`), linked as `workDir/src/half<i>.parquet`;
+    * returns that dir — streamed one file per trigger, two real
+    * micro-batches. */
+  private def twoHalves(df: DataFrame, key: String, workDir: String,
+                        what: String): String = {
+    val src = new java.io.File(workDir, "src")
+    for (half <- 0 to 1) {
+      val tmp = new java.io.File(workDir, s"half$half")
+      df.filter(pmod(xxhash64(col(key)), lit(2)) === half)
+        .coalesce(1).write.mode("overwrite").parquet(tmp.toString)
+      val part = tmp.listFiles().filter(_.getName.endsWith(".parquet"))
+      require(part.length == 1, s"$what: ${part.length} parts")
+      linkInto(src, s"half$half.parquet", part(0))
+    }
+    src.toString
+  }
+
+  /** Runs `body` with session conf `key` set to `value`, restoring the
+    * prior value (or unsetting it) after.
+    *
+    * NOTE this mutates SHARED session conf for the duration of the
+    * query — safe under this repo's one-query-at-a-time sessions
+    * (Verify/Bench/specs are all sequential), NOT safe for concurrent
+    * streaming queries in one session; concurrent callers must clone the
+    * session (`spark.newSession()`) so conf scoping is per-query.
+    */
+  private def withConf[T](spark: SparkSession, key: String, value: String)
+                         (body: => T): T = {
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, value)
+    try body finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
     }
   }
 
-  private def withStatePartitions[T](spark: SparkSession, n: Int)
-                                    (body: => T): T = {
-    val key = "spark.sql.shuffle.partitions"
-    val prev = spark.conf.get(key)
-    spark.conf.set(key, n.toString)
-    try body finally spark.conf.set(key, prev)
-  }
-
-  /** File-source stream over the events table with the same nanos-long
-    * `ts` normalization as [[graft.Tables.events]]. FileStreamSource
-    * needs a DIRECTORY source (it force-sets basePath to the given path
-    * for non-glob paths); the testdata tables are single .parquet files,
-    * so a file input is symlinked into a work subdir and that directory
-    * is streamed — zero copy, production shape.
+  /** Runs `body` with `spark.sql.shuffle.partitions` = `n`. Streaming
+    * state partition count is PINNED INTO THE CHECKPOINT at the query's
+    * first start and every micro-batch pays a fixed per-partition cost
+    * (4 state-store provider opens + delta commits per partition for a
+    * stream-stream join), so stateful streaming queries must size it to
+    * state volume, not inherit the CPU-count batch default — measured
+    * 22 s → 6 s on e27 going 32 → 8 partitions over ~2000 rows/batch. At
+    * large state (the 100 TB deployment) callers raise `statePartitions`
+    * when creating the checkpoint; it cannot change across restarts.
     */
-  private def eventsFileStream(spark: SparkSession, eventsPath: String,
-                               workDir: String,
-                               maxFilesPerTrigger: Option[Int]): DataFrame = {
-    val batchSchema = spark.read.parquet(eventsPath).schema
-    val f = new java.io.File(eventsPath)
-    val srcPath =
-      if (!f.isFile) eventsPath
+  private def withStatePartitions[T](spark: SparkSession, n: Int)
+                                    (body: => T): T =
+    withConf(spark, "spark.sql.shuffle.partitions", n.toString)(body)
+
+  /** Parquet file stream over the table at `path`, read with its batch
+    * schema unless `schema` is given. FileStreamSource needs a DIRECTORY
+    * source (it force-sets basePath to the given path for non-glob
+    * paths); the testdata tables are single .parquet files, so a file
+    * is symlinked into `workDir/src` and that directory is streamed —
+    * zero copy, production shape. `maxFilesPerTrigger` splits a
+    * multi-file source into ordered micro-batches.
+    */
+  private[graft] def fileStream(spark: SparkSession, path: String,
+                                workDir: String,
+                                maxFilesPerTrigger: Option[Int] = None,
+                                schema: Option[StructType] = None)
+      : DataFrame = {
+    val f = new java.io.File(path)
+    val dir =
+      if (!f.isFile) path
       else {
         val d = new java.io.File(workDir, "src")
         linkInto(d, f.getName, f)
         d.toString
       }
-    val reader0 = spark.readStream.schema(batchSchema)
-    val reader = maxFilesPerTrigger.fold(reader0)(n =>
-      reader0.option("maxFilesPerTrigger", n.toString))
-    val raw = reader.parquet(srcPath)
-    batchSchema("ts").dataType match {
-      case LongType => raw.withColumn("ts",
-        timestamp_micros(expr("ts DIV 1000")).cast(TimestampNTZType))
-      case _ => raw
-    }
+    val reader = spark.readStream
+      .schema(schema.getOrElse(spark.read.parquet(path).schema))
+    maxFilesPerTrigger.fold(reader)(n =>
+      reader.option("maxFilesPerTrigger", n.toString)).parquet(dir)
   }
 
+  /** [[fileStream]] over the events table, `ts` normalized as in
+    * [[graft.Tables.events]]. */
+  private def eventsFileStream(spark: SparkSession, eventsPath: String,
+                               workDir: String,
+                               maxFilesPerTrigger: Option[Int]): DataFrame =
+    graft.Tables.microsTs(
+      fileStream(spark, eventsPath, workDir, maxFilesPerTrigger))
+
+  /** The events table with every data file presented TWICE (two links
+    * under `workDir/dup`) and streamed one file per trigger: each copy
+    * is its own micro-batch, so copy-2 rows are always cross-batch
+    * duplicates only state can reject — the same contract for a
+    * single-file table and a Spark-written dir of part files. */
+  private def eventsTwiceStream(spark: SparkSession, eventsPath: String,
+                                workDir: String, what: String): DataFrame = {
+    val f = new java.io.File(eventsPath)
+    val files =
+      if (f.isFile) Seq(f)
+      else Option(f.listFiles).getOrElse(Array.empty[java.io.File])
+        .filter(p => p.isFile && p.getName.endsWith(".parquet"))
+        .sortBy(_.getName).toSeq
+    require(files.nonEmpty, s"$what: no parquet files under $eventsPath")
+    val d = new java.io.File(workDir, "dup")
+    // a REUSED workDir may hold links from a differently-shaped source —
+    // stale entries would feed extra files into the stream. Plain
+    // files/symlinks only: a stray non-empty subdirectory would make
+    // deleteIfExists throw DirectoryNotEmptyException and abort stream
+    // setup before the first micro-batch
+    Option(d.listFiles).foreach(_.foreach(x =>
+      if (x.isFile || java.nio.file.Files.isSymbolicLink(x.toPath))
+        java.nio.file.Files.deleteIfExists(x.toPath)))
+    for ((pf, i) <- files.zipWithIndex; tag <- Seq("a", "b"))
+      linkInto(d, s"events_${tag}_$i.parquet", pf)
+    graft.Tables.microsTs(fileStream(spark, d.toString, workDir, Some(1),
+      Some(spark.read.parquet(eventsPath).schema)))
+  }
+
+  private def checkpointOf(workDir: String): String =
+    new java.io.File(workDir, "ckpt").toString
+
+  /** Fails unless `q` ran at least `min` micro-batches that read data. */
+  private def requireDataBatches(q: StreamingQuery, min: Int,
+                                 what: String): Unit = {
+    val n = q.recentProgress.count(_.numInputRows > 0)
+    require(n >= min,
+      s"$what: expected >= $min data micro-batches, got $n")
+  }
+
+  /** Runs `df` to completion (`AvailableNow`) into the memory sink
+    * `sinkName` under `mode`, checkpointed at `checkpoint`, and returns
+    * the sink table. `minDataBatches` asserts the run really split into
+    * that many micro-batches that read data. */
+  private[graft] def runToMemory(df: DataFrame, mode: OutputMode,
+                                 sinkName: String, checkpoint: String,
+                                 minDataBatches: Int = 0): DataFrame = {
+    val q = df.writeStream.outputMode(mode).format("memory")
+      .queryName(sinkName)
+      .option("checkpointLocation", checkpoint)
+      .trigger(Trigger.AvailableNow())
+      .start()
+    q.awaitTermination()
+    requireDataBatches(q, minDataBatches, sinkName)
+    df.sparkSession.table(sinkName)
+  }
+
+  /** A REAL Structured Streaming execution end-to-end — not a batch twin:
+    * file source over the events parquet (AvailableNow trigger, optional
+    * maxFilesPerTrigger batch splitting), foreachBatch greatest-wins
+    * upsert into a parquet snapshot, final snapshot returned. This is
+    * the production "stream → serving snapshot" sink pattern (the
+    * foreachBatch path Spark recommends for upsert sinks).
+    *
+    * Correctness under replay/splitting: the merge keeps, per user, the
+    * row with the greatest (ts, event_id) across the existing snapshot
+    * and the micro-batch — an idempotent, commutative fold, so the final
+    * snapshot is byte-identical no matter how the files split into
+    * micro-batches or whether a batch is re-delivered. Snapshots are
+    * written as generations (write gen N+1, then swap) because a Spark
+    * job cannot overwrite the files it is reading.
+    *
+    * Scale: each micro-batch shuffles only its own argmax (map-side
+    * combined) plus the snapshot keyed by user; state lives in the
+    * snapshot files, not executor memory.
+    */
   def streamedLatestSnapshot(spark: SparkSession, eventsPath: String,
                              workDir: String,
                              maxFilesPerTrigger: Option[Int] = None): DataFrame = {
@@ -1126,9 +1053,8 @@ object Streams {
         gen += 1
         ()
       }
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
+      .trigger(Trigger.AvailableNow())
+      .option("checkpointLocation", checkpointOf(workDir))
       .start()
     q.awaitTermination()
     require(gen > 0, "streamedLatestSnapshot: no micro-batch ran")
@@ -1157,19 +1083,12 @@ object Streams {
     // cast is lossless, and window_start is cast back to NTZ below
     val ev = eventsFileStream(spark, eventsPath, workDir, None)
       .withColumn("ts", col("ts").cast("timestamp"))
-    val q = ev.withWatermark("ts", "10 minutes")
+    val agg = ev.withWatermark("ts", "10 minutes")
       .groupBy(window(col("ts"), "1 hour").as("w"), col("event_type"))
       .agg(count(lit(1)).as("n"),
            sum(col("value").cast("decimal(18,2)")).cast("double")
              .as("sum_value"))
-      .writeStream.outputMode(OutputMode.Append()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(agg, OutputMode.Append(), sinkName, checkpointOf(workDir))
       .select(col("w.start").cast(TimestampNTZType).as("window_start"),
               col("event_type"), col("n"), col("sum_value"))
   }
@@ -1191,38 +1110,9 @@ object Streams {
                     workDir: String, sinkName: String,
                     statePartitions: Int = 8): DataFrame =
       withStatePartitions(spark, statePartitions) {
-    val files = parquetFiles(eventsPath, "streamedDedup")
-    val d = new java.io.File(workDir, "dup")
-    // a REUSED workDir may hold links from a differently-shaped source —
-    // stale entries would feed extra files into the stream
-    Option(d.listFiles).foreach(_.foreach(x =>
-      // plain files/symlinks only: a stray non-empty subdirectory would
-      // make deleteIfExists throw DirectoryNotEmptyException and abort
-      // stream setup before the first micro-batch
-      if (x.isFile || java.nio.file.Files.isSymbolicLink(x.toPath))
-        java.nio.file.Files.deleteIfExists(x.toPath)))
-    // every data file presented TWICE (maxFilesPerTrigger=1 puts each
-    // copy in its own micro-batch, so copy-2 rows are always cross-batch
-    // duplicates only state can reject — same contract for 1 or N files)
-    for ((pf, i) <- files.zipWithIndex; tag <- Seq("a", "b"))
-      linkInto(d, s"events_${tag}_$i.parquet", pf)
-    val batchSchema = spark.read.parquet(eventsPath).schema
-    val raw = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(d.toString)
-    val ev = batchSchema("ts").dataType match {
-      case LongType => raw.withColumn("ts",
-        timestamp_micros(expr("ts DIV 1000")).cast(TimestampNTZType))
-      case _ => raw
-    }
-    val q = ev.dropDuplicates("event_id")
-      .writeStream.outputMode(OutputMode.Append()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    val ev = eventsTwiceStream(spark, eventsPath, workDir, "streamedDedup")
+    runToMemory(ev.dropDuplicates("event_id"), OutputMode.Append(),
+        sinkName, checkpointOf(workDir))
       .select(col("event_id"), col("ts"), col("user_id"),
               col("event_type"), col("value"))
   }
@@ -1244,37 +1134,8 @@ object Streams {
   def streamedClickPurchaseJoin(spark: SparkSession, eventsPath: String,
                                 workDir: String, sinkName: String,
                                 statePartitions: Int = 8): DataFrame =
-      withStatePartitions(spark, statePartitions) {
-    val ev = eventsFileStream(spark, eventsPath, workDir, None)
-    val clicks = ev.filter(col("event_type") === "click")
-      .select(col("user_id").as("c_user"),
-              col("ts").cast("timestamp").as("c_ts"),
-              col("event_id").as("click_id"))
-      .withWatermark("c_ts", "10 minutes")
-    val purchases = ev.filter(col("event_type") === "purchase")
-      .select(col("user_id").as("p_user"),
-              col("ts").cast("timestamp").as("p_ts"),
-              col("event_id").as("purchase_id"),
-              col("value").as("purchase_value"))
-      .withWatermark("p_ts", "10 minutes")
-    val q = clicks.join(purchases,
-        col("c_user") === col("p_user") &&
-        col("p_ts") >= col("c_ts") &&
-        col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"))
-      .writeStream.outputMode(OutputMode.Append()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
-      .select(col("c_user").as("user_id"),
-              col("click_id"), col("purchase_id"),
-              col("c_ts").cast(TimestampNTZType).as("click_ts"),
-              col("p_ts").cast(TimestampNTZType).as("purchase_ts"),
-              col("purchase_value"))
-  }
+    clickPurchaseJoin(spark, eventsPath, workDir, sinkName,
+      statePartitions, "inner")
 
   /** Stream-stream LEFT OUTER join: every click emits — matched rows
     * eagerly (inner-join semantics), unmatched clicks with a null
@@ -1294,6 +1155,15 @@ object Streams {
   def streamedLeftOuterJoin(spark: SparkSession, eventsPath: String,
                             workDir: String, sinkName: String,
                             statePartitions: Int = 8): DataFrame =
+    clickPurchaseJoin(spark, eventsPath, workDir, sinkName,
+      statePartitions, "left_outer")
+
+  /** The click → purchase-within-30-minutes stream-stream join of
+    * [[streamedClickPurchaseJoin]] / [[streamedLeftOuterJoin]]. */
+  private def clickPurchaseJoin(spark: SparkSession, eventsPath: String,
+                                workDir: String, sinkName: String,
+                                statePartitions: Int,
+                                joinType: String): DataFrame =
       withStatePartitions(spark, statePartitions) {
     val ev = eventsFileStream(spark, eventsPath, workDir, None)
     val clicks = ev.filter(col("event_type") === "click")
@@ -1307,19 +1177,12 @@ object Streams {
               col("event_id").as("purchase_id"),
               col("value").as("purchase_value"))
       .withWatermark("p_ts", "10 minutes")
-    val q = clicks.join(purchases,
+    val joined = clicks.join(purchases,
         col("c_user") === col("p_user") &&
         col("p_ts") >= col("c_ts") &&
         col("p_ts") <= col("c_ts") + expr("INTERVAL 30 MINUTES"),
-        "left_outer")
-      .writeStream.outputMode(OutputMode.Append()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+        joinType)
+    runToMemory(joined, OutputMode.Append(), sinkName, checkpointOf(workDir))
       .select(col("c_user").as("user_id"),
               col("click_id"), col("purchase_id"),
               col("c_ts").cast(TimestampNTZType).as("click_ts"),
@@ -1341,36 +1204,12 @@ object Streams {
                                    workDir: String, sinkName: String,
                                    statePartitions: Int = 8): DataFrame =
       withStatePartitions(spark, statePartitions) {
-    val files = parquetFiles(eventsPath, "streamedDedupWithinWatermark")
-    val d = new java.io.File(workDir, "dup")
-    Option(d.listFiles).foreach(_.foreach(x =>
-      // plain files/symlinks only: a stray non-empty subdirectory would
-      // make deleteIfExists throw DirectoryNotEmptyException and abort
-      // stream setup before the first micro-batch
-      if (x.isFile || java.nio.file.Files.isSymbolicLink(x.toPath))
-        java.nio.file.Files.deleteIfExists(x.toPath)))
-    for ((pf, i) <- files.zipWithIndex; tag <- Seq("a", "b"))
-      linkInto(d, s"events_${tag}_$i.parquet", pf)
-    val batchSchema = spark.read.parquet(eventsPath).schema
-    val raw = spark.readStream.schema(batchSchema)
-      .option("maxFilesPerTrigger", "1").parquet(d.toString)
-    val ev = batchSchema("ts").dataType match {
-      case LongType => raw.withColumn("ts",
-        timestamp_micros(expr("ts DIV 1000")).cast(TimestampNTZType))
-      case _ => raw
-    }
-    val q = ev
+    val ev = eventsTwiceStream(spark, eventsPath, workDir,
+      "streamedDedupWithinWatermark")
       .withColumn("ts", col("ts").cast("timestamp"))
       .withWatermark("ts", "90 days")
       .dropDuplicatesWithinWatermark("event_id")
-      .writeStream.outputMode(OutputMode.Append()).format("memory")
-      .queryName(sinkName)
-      .option("checkpointLocation",
-              new java.io.File(workDir, "ckpt").toString)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(sinkName)
+    runToMemory(ev, OutputMode.Append(), sinkName, checkpointOf(workDir))
       .select(col("event_id"), col("ts").cast(TimestampNTZType).as("ts"),
               col("user_id"), col("event_type"), col("value"))
   }
@@ -1395,14 +1234,14 @@ object Streams {
                        statePartitions: Int = 8): DataFrame =
       withStatePartitions(spark, statePartitions) {
     val ev = eventsFileStream(spark, eventsPath, workDir, None)
-    val ck = new java.io.File(workDir, "ckpt").toString
+    val ck = checkpointOf(workDir)
     val q = ev.groupBy(col("user_id"))
       .agg(count(lit(1)).as("n_events"),
            sum(expr("CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT)"))
              .as("value_cents"))
       .writeStream.outputMode(OutputMode.Complete()).format("noop")
       .option("checkpointLocation", ck)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .start()
     q.awaitTermination()
     spark.read.format("statestore").load(ck)
@@ -1446,7 +1285,7 @@ object Streams {
     spark.readStream.format("text").load(notifyDir)
       .writeStream
       .option("checkpointLocation", checkpointDir)
-      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .trigger(Trigger.AvailableNow())
       .foreachBatch { (_: DataFrame, _: Long) =>
         advanceChangeFeedView(spark, baseDir, key, valueCol, groupExpr,
           viewDir)

@@ -133,4 +133,44 @@ class CommitRegistrySpec extends SparkSpec {
         400L + 40L + 1L - 1L - 11L)
     } finally clearRegistries()
   }
+
+  test("vacuum forgets the registry entries of the versions it reclaims") {
+    val base = Files.createTempDirectory("graft-vacuum-registry").toString
+    val src = s"$base/src"
+    rows(1L to 400L, 0L).coalesce(1).write.parquet(src)
+    val sink = s"$base/sink"
+    clearRegistries()
+    val (q, _) = Loader.streamUpsertSink(
+      spark.readStream.schema(spark.read.parquet(src).schema).parquet(src),
+      sink, key = "id", orderCols = Seq("ver"),
+      checkpointDir = Some(s"$base/ckpt"),
+      trigger = Some(Trigger.AvailableNow()), nBuckets = 4,
+      maintain = Some(maintain))
+    q.awaitTermination()
+    try {
+      for (ver <- 1L to 3L)
+        Loader.upsertBatch(spark, sink, rows(1L to 400L by 3L, ver), "id",
+          Seq("ver"), Some(maintain))
+      val reclaimed = Loader.vacuumSnapshots(spark, sink)
+      assert(reclaimed.nonEmpty)
+      val deadDirs = reclaimed.map(v => s"$sink/v$v")
+      def namesDead(key: String): Boolean = key.split('\n').exists(p =>
+        deadDirs.exists(d => p == d || p.startsWith(d + "/")))
+      val (zones, stats) = registries
+      assert(zones.nonEmpty && stats.nonEmpty)
+      assert(!zones.keys.exists(namesDead), zones.keys.mkString("; "))
+      assert(!stats.keys.exists(namesDead), stats.keys.mkString("; "))
+      // the latest version still zone-prunes a point read
+      val snap = Loader.readSnapshot(spark, latest(sink))
+      def files(df: DataFrame): Int =
+        df.queryExecution.optimizedPlan.collectLeaves()
+          .collect { case lr: org.apache.spark.sql.execution.datasources
+              .LogicalRelation => lr.relation }
+          .collect { case h: org.apache.spark.sql.execution.datasources
+              .HadoopFsRelation => h.location.inputFiles.length }.sum
+      val score = snap.select(col("score")).head().getLong(0)
+      val hit = snap.filter(col("score") === score)
+      assert(files(hit) < files(snap), s"${files(hit)} of ${files(snap)}")
+    } finally clearRegistries()
+  }
 }

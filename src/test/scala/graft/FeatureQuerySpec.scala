@@ -88,7 +88,7 @@ class FeatureQuerySpec extends SparkSpec {
     ).toDF("individual_id", "date", "transaction_amount")
     val out = FeatureQuery.householdFeatures(
       dem, mapping, rawTxns, "individual_id", "hhid", "date",
-      "transaction_amount", start, end, persistJoined = true)
+      "transaction_amount", start, end)
     val rows = out.collect().map(r =>
       (r.getLong(0), r.getDouble(3), r.getDouble(4), r.getLong(5)))
     assert(rows.toSeq == Seq(

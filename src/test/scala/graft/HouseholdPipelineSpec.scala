@@ -77,4 +77,25 @@ class HouseholdPipelineSpec extends SparkSpec {
     assert(lines.get(0) == header)
     assert(lines.subList(1, lines.size()).toArray.toSeq == golden)
   }
+
+  test("run leaves no cache behind: a second run reads rewritten inputs") {
+    val cache = spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+      .sharedState.cacheManager
+    // other suites share this session; start from an empty cache
+    spark.catalog.clearCache()
+    val dir = Files.createTempDirectory("graft-hh").toString
+    val (dem, hh, trans) = writeFixtures(dir)
+    val out1 = s"$dir/first.csv"
+    assert(HouseholdPipeline.run(spark, dem, hh, trans, out1))
+    assert(cache.isEmpty, "run left a cached frame behind")
+    val p = Paths.get(trans)
+    Files.writeString(p, Files.readString(p)
+      .replace("i1,2021-09-01 08:00:00,10.0", "i1,2021-09-01 08:00:00,20.0"))
+    val out2 = s"$dir/second.csv"
+    assert(HouseholdPipeline.run(spark, dem, hh, trans, out2))
+    assert(cache.isEmpty, "run left a cached frame behind")
+    val lines = Files.readAllLines(Paths.get(out2))
+    assert(lines.subList(1, lines.size()).toArray.toSeq == Seq(
+      "1,2,0,0 to 50,30-39,101 to 200,CA,22.25,5.0,4", golden(1)))
+  }
 }
