@@ -51,20 +51,32 @@ object Graft {
   private def cpus: String = sys.env.getOrElse("SPARK_GRAFT_CPUS",
     Runtime.getRuntime.availableProcessors.toString)
 
-  /** Entries in Spark's generated-class cache; `SparkTestSession` uses
-    * the same value.
+  /** Entries in Spark's generated-class cache; the test session uses
+    * the same value through [[builder]].
     */
   val CodegenCacheEntries = 1000
 
   def session(master: String = s"local[$cpus]",
               appName: String = "graft"): SparkSession = {
-    val spark = SparkSession.builder()
+    val spark = builder(master, appName, cpus).getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
+  /** The engine's session settings on `master` with `partitions`
+    * shuffle partitions — the one place they live: [[session]] builds
+    * from it, and so does the test session (which adds its own master,
+    * warehouse dir and log level).
+    */
+  private[graft] def builder(master: String, appName: String,
+                             partitions: String): SparkSession.Builder =
+    SparkSession.builder()
       .master(master)
       .appName(appName)
       // production deployment path for the custom SQL functions — any
       // spark-submit reaches them with the same one-line conf
       .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", partitions)
       // Spark's 4 MB per-file open cost floors the split size, so an input
       // of a few MB scans in 1-2 tasks; at 1 MB small local inputs split
       // into about `cpus` tasks and fill every core
@@ -79,8 +91,4 @@ object Graft {
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.sql.legacy.parquet.nanosAsLong", "true")
       .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
 }

@@ -461,20 +461,40 @@ object Zones {
       tags = mm.tags ++ dtags ++ btags)
   }
 
-  /** The rows of the metadata tables at `dirs` (one Spark scan; none
-    * when `dirs` is empty) projected onto `cols`, followed by `rows`.
-    * A table written before column tags existed reads `col_tag` as NULL.
+  /** The rows of the metadata tables at `dirs` (one Spark scan of
+    * their [[partFiles]]; none when they hold none) projected onto
+    * `cols`, followed by `rows`. A table written before column tags
+    * existed reads `col_tag` as NULL.
     */
   private def metadataRows(spark: SparkSession, dirs: Seq[String],
-                           cols: Seq[String], rows: Seq[Row]): Seq[Row] =
-    if (dirs.isEmpty) rows
+                           cols: Seq[String], rows: Seq[Row]): Seq[Row] = {
+    val parts = dirs.flatMap { d =>
+      val p = new org.apache.hadoop.fs.Path(d)
+      partFiles(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
+    }
+    if (parts.isEmpty) rows
     else {
-      val raw = spark.read.parquet(dirs: _*)
+      val raw = spark.read.parquet(parts.map(_.getPath.toString): _*)
       val untagged = !raw.schema.fieldNames.contains("col_tag")
       raw.select(cols.map(c =>
           if (c == "col_tag" && untagged) lit(null).cast("string").as(c)
           else col(c)): _*)
         .collect().toSeq ++ rows
+    }
+  }
+
+  /** The part files of a parquet dir: its files whose names start with
+    * neither `_` nor `.` (no commit markers, no checksums). A reader of
+    * a metadata dir (`_zones`, `_stats`, `_dv`, …) passes these, not
+    * the dir: Spark ignores a root path whose name starts with `_`, and
+    * warns that it did on every such read.
+    */
+  private[graft] def partFiles(fs: org.apache.hadoop.fs.FileSystem,
+                               dir: org.apache.hadoop.fs.Path)
+      : Seq[org.apache.hadoop.fs.FileStatus] =
+    fs.listStatus(dir).toSeq.filter { st =>
+      val n = st.getPath.getName
+      st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
 
   // each loader below groups its kind's rows — loaded from dirs and/or
@@ -690,30 +710,19 @@ object ZoneSkipRule extends Rule[LogicalPlan] {
       try Some(java.time.LocalDate.parse(s).toEpochDay)
       catch { case _: Exception => None }))
 
-  /** Can a file with zone [mn, mx] contain a row with `col op v`? */
-  private def zoneMayMatch(zone: (String, String), op: String,
-                           v: Long): Boolean =
-    (renderLong(zone._1), renderLong(zone._2)) match {
-      case (Some(mn), Some(mx)) => op match {
-        case "="  => mn <= v && v <= mx
-        case "<"  => mn < v
-        case "<=" => mn <= v
-        case ">"  => mx > v
-        case ">=" => mx >= v
-        case _    => true
-      }
-      case _ => true // unpriceable rendering: keep
-    }
-
-  /** String-tagged variant: renderings of a STRING column compare
-    * lexicographically — the column's real order, exactly what parquet
-    * string statistics use. Only called when the manifest's type tag
-    * says "string"; a numeric rendering must never compare this way
-    * ('9' > '24'). Null renderings (all-NULL file) keep the file.
+  /** Can a file with zone [mn, mx] contain a row with `col op v`,
+    * under the column's order? The bounds arrive read in that order:
+    * integer/date renderings parsed to longs ([[renderLong]]), STRING
+    * renderings as themselves — lexicographic, the column's real order
+    * and exactly what parquet string statistics use (a numeric
+    * rendering must never compare that way: '9' > '24'). A bound that
+    * does not read (null — an all-NULL file — or unparseable) is
+    * unpriceable and keeps the file.
     */
-  private def zoneMayMatchStr(zone: (String, String), op: String,
-                              v: String): Boolean =
-    (Option(zone._1), Option(zone._2)) match {
+  private def zoneMayMatch[T](mn: Option[T], mx: Option[T], op: String,
+                              v: T)(implicit ord: Ordering[T]): Boolean = {
+    import ord.mkOrderingOps
+    (mn, mx) match {
       case (Some(mn), Some(mx)) => op match {
         case "="  => mn <= v && v <= mx
         case "<"  => mn < v
@@ -724,6 +733,7 @@ object ZoneSkipRule extends Rule[LogicalPlan] {
       }
       case _ => true
     }
+  }
 
   /** The literal's canonical `CAST(c AS STRING)` rendering under the
     * column's type tag — what a dictionary entry stores. None when the
@@ -759,9 +769,9 @@ object ZoneSkipRule extends Rule[LogicalPlan] {
     val minmaxKeeps = zones.get(c).forall { z =>
       lit match {
         case Left(v) if !tags.get(c).contains("string") =>
-          zoneMayMatch(z, op, v)
+          zoneMayMatch(renderLong(z._1), renderLong(z._2), op, v)
         case Right(s) if tags.get(c).contains("string") =>
-          zoneMayMatchStr(z, op, s)
+          zoneMayMatch(Option(z._1), Option(z._2), op, s)
         case _ => true
       }
     }

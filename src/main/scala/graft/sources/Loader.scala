@@ -326,25 +326,21 @@ object Loader {
   /** The applicable DV set recorded at `versionDir`, if any:
     * (file suffix, pos) plus its size. One listing RPC — no data read,
     * and no footer-inference job: the read carries [[DvSchema]]. It
-    * reads the listed part files, not the dir: Spark ignores a root
-    * path whose name starts with `_` and warns on every such read.
-    * Every `_dv` read goes through here. */
+    * reads the listed part files ([[graft.plans.Zones.partFiles]]),
+    * not the dir. Every `_dv` read goes through here. */
   private def readDv(spark: org.apache.spark.sql.SparkSession,
                      fs: org.apache.hadoop.fs.FileSystem,
                      versionDir: String): Option[DvSet] = {
     val p = new org.apache.hadoop.fs.Path(versionDir, DvDirName)
     if (!fs.exists(p)) None
     else {
-      val parts = fs.listStatus(p).filter { st =>
-        val n = st.getPath.getName
-        st.isFile && !n.startsWith("_") && !n.startsWith(".")
-      }
+      val parts = graft.plans.Zones.partFiles(fs, p)
       val df =
         if (parts.isEmpty) spark.createDataFrame(
           java.util.Collections.emptyList[org.apache.spark.sql.Row](),
           DvSchema)
         else spark.read.schema(DvSchema)
-          .parquet(parts.map(_.getPath.toString).toSeq: _*)
+          .parquet(parts.map(_.getPath.toString): _*)
       Some(DvSet(df, parts.map(_.getLen).sum))
     }
   }
@@ -402,11 +398,13 @@ object Loader {
     * footer pass the manifest already knows the answer to; files that
     * predate a column null-fill it under a schema-specified read).
     *
-    * Round-14 additions, all carried copy-forward like the schema:
+    * Every manifest on disk records its schema, its commit time and
+    * its bucket hash; [[readManifest]] refuses one that lacks any of
+    * them rather than guess at an older layout. Also carried:
     *  - `ts`: the commit's wall-clock millis, stamped STRICTLY
-    *    MONOTONE at write ([[nextCommitTs]]) — the TIMESTAMP AS OF
-    *    index ([[timestampAsOf]]); -1 on legacy manifests (resolution
-    *    falls back to the manifest file's mtime).
+    *    MONOTONE by [[commit]] ([[nextCommitTs]]) — the TIMESTAMP AS
+    *    OF index ([[timestampAsOf]]); -1 only on a staged manifest
+    *    the commit has not stamped yet.
     *  - `renames`: the cumulative RENAME COLUMN log as
     *    (commit seq, old, new) — files written before a rename carry
     *    the old physical name, and [[eraRead]] projects each era
@@ -420,7 +418,7 @@ object Loader {
     */
   private[sources] final case class Manifest(
       buckets: Map[Int, Long], nBuckets: Int, txn: Long,
-      schema: Option[org.apache.spark.sql.types.StructType] = None,
+      schema: org.apache.spark.sql.types.StructType,
       ts: Long = -1L,
       renames: Seq[(Long, String, String)] = Nil,
       extras: Seq[(Int, Long)] = Nil)
@@ -488,15 +486,10 @@ object Loader {
       if (!withPos) df
       else df.withColumn("__dv_f", dvSuffix(col("_metadata.file_path")))
              .withColumn("__dv_p", col("_metadata.row_index"))
-    if (man.renames.isEmpty) {
-      addPos(target.orElse(man.schema) match {
-        case Some(sc) => spark.read.schema(sc).parquet(dirs: _*)
-        case None =>
-          spark.read.option("mergeSchema", "true").parquet(dirs: _*)
-      })
-    } else {
-      val tgt = target.orElse(man.schema).getOrElse(sys.error(
-        "eraRead: a renamed layout requires a recorded schema"))
+    val tgt = target.getOrElse(man.schema)
+    if (man.renames.isEmpty)
+      addPos(spark.read.schema(tgt).parquet(dirs: _*))
+    else {
       def currentName(eraSeq: Long, name: String): String =
         man.renames.sortBy(_._1).foldLeft(name) {
           case (n, (sq, o, nw)) => if (sq > eraSeq && n == o) nw else n
@@ -508,7 +501,6 @@ object Loader {
         .groupBy(_._2).toSeq.sortBy(_._1)
         .map { case (v, bs) =>
           val eraSchema = readManifest(fs, s"$base/v$v").schema
-            .getOrElse(tgt)
           val eraDirs = bs.map(_._1).distinct.sorted
             .map(b => s"$base/v$v/$BucketCol=$b")
           val scan =
@@ -667,28 +659,32 @@ object Loader {
                             m: Manifest): Unit = {
     val out = fs.create(
       new org.apache.hadoop.fs.Path(versionDir, ManifestName), true)
-    // DataType.json is one line — the parser splits on newlines
-    val schemaLine = m.schema.fold("")(s => s"#schema ${s.json}\n")
-    val tsLine = if (m.ts >= 0) s"#ts ${m.ts}\n" else ""
     // rename log lines are space-delimited: renameColumn refuses
     // whitespace in column names to keep the format unambiguous
     val renameLines = m.renames.sortBy(_._1)
       .map { case (sq, o, n) => s"#rename $sq $o $n\n" }.mkString
     val extraLines = m.extras.distinct.sorted
       .map { case (b, v) => s"#extra $b $v\n" }.mkString
+    // DataType.json is one line — the parser splits on newlines
     val header =
       s"#buckets ${m.nBuckets} $HashName\n#txn ${m.txn}\n" +
-        tsLine + schemaLine + renameLines + extraLines
+        s"#ts ${m.ts}\n#schema ${m.schema.json}\n" +
+        renameLines + extraLines
     try out.write((header + m.buckets.toSeq.sorted
       .map { case (b, v) => s"$b $v" }
       .mkString("", "\n", "\n")).getBytes("UTF-8"))
     finally out.close()
   }
 
+  /** Parse `versionDir`'s manifest. One without a hashed `#buckets`
+    * line, a `#ts` line or a `#schema` line is refused with an
+    * IllegalArgumentException naming it and the missing line: no
+    * writer of this engine produces one, so a reader does not guess
+    * at what it meant. */
   private[sources] def readManifest(fs: org.apache.hadoop.fs.FileSystem,
                                     versionDir: String): Manifest = {
-    val in = fs.open(
-      new org.apache.hadoop.fs.Path(versionDir, ManifestName))
+    val path = new org.apache.hadoop.fs.Path(versionDir, ManifestName)
+    val in = fs.open(path)
     val text = try {
       val bos = new java.io.ByteArrayOutputStream()
       val buf = new Array[Byte](8192)
@@ -696,7 +692,8 @@ object Loader {
       while (n >= 0) { bos.write(buf, 0, n); n = in.read(buf) }
       bos.toString("UTF-8")
     } finally in.close()
-    var nBuckets = -1; var txn = -1L; var ts = -1L
+    var nBuckets = -1; var txn = -1L
+    var ts: Option[Long] = None
     var schema: Option[org.apache.spark.sql.types.StructType] = None
     val renames = scala.collection.mutable
       .ListBuffer.empty[(Long, String, String)]
@@ -705,13 +702,16 @@ object Loader {
       val parts = l.split(' ')
       parts(0) match {
         case "#buckets" =>
-          nBuckets = parts(1).toInt
-          require(parts.length < 3 || parts(2) == HashName,
+          require(parts.length >= 3,
+            s"readManifest: $path has no bucket hash on its #buckets " +
+            s"line; this engine buckets with '$HashName'")
+          require(parts(2) == HashName,
             s"readManifest: layout $versionDir was written with bucket " +
             s"hash '${parts(2)}'; this engine buckets with '$HashName'")
+          nBuckets = parts(1).toInt
           None
         case "#txn" => txn = parts(1).toLong; None
-        case "#ts" => ts = parts(1).toLong; None
+        case "#ts" => ts = Some(parts(1).toLong); None
         case "#rename" =>
           renames += ((parts(1).toLong, parts(2), parts(3))); None
         case "#extra" =>
@@ -724,7 +724,13 @@ object Loader {
         case b      => Some(b.toInt -> parts(1).toLong)
       }
     }.toMap
-    Manifest(buckets, nBuckets, txn, schema, ts,
+    def missing(line: String) =
+      s"readManifest: $path has no $line line; this engine reads only " +
+      "manifests that record their bucket hash, commit time and schema"
+    require(nBuckets >= 0, missing("#buckets"))
+    require(ts.nonEmpty, missing("#ts"))
+    require(schema.nonEmpty, missing("#schema"))
+    Manifest(buckets, nBuckets, txn, schema.get, ts.get,
       renames.toList, extras.toList)
   }
 
@@ -813,11 +819,10 @@ object Loader {
     }
     // schema evolution means bucket files can span eras: the manifest's
     // recorded schema reads them uniformly (files that predate a column
-    // null-fill it) with NO footer pass; pre-schema manifests fall back
-    // to parquet mergeSchema; renamed layouts read era-by-era — and
-    // merge-on-read subtracts this version's deletion vectors (one
-    // bounded anti-join; identity when the version has none). All of
-    // that is [[eraReadLive]].
+    // null-fill it) with NO footer pass; renamed layouts read
+    // era-by-era — and merge-on-read subtracts this version's deletion
+    // vectors (one bounded anti-join; identity when the version has
+    // none). All of that is [[eraReadLive]].
     eraReadLive(spark, fs, base, man, man.buckets.keys.toSeq,
       readDv(spark, fs, versionDir))
   }
@@ -864,31 +869,17 @@ object Loader {
     }
   }
 
-  /** The TIMESTAMP AS OF index: every committed version's EFFECTIVE
-    * commit wall-clock millis, ascending by version. The primary
-    * source is the manifest's `#ts` stamp (written strictly monotone —
-    * [[nextCommitTs]]); legacy pre-ts manifests fall back to the
-    * manifest FILE's modification time (the manifest is staged
-    * immediately before publish, so its mtime brackets the commit),
-    * and a running max repairs any non-monotonicity a mixed-era log
-    * or mtime skew could introduce — resolution must be unambiguous.
-    * Bounded driver work: one manifest read (+ at most one file-status
-    * RPC) per committed version.
+  /** The TIMESTAMP AS OF index: every committed version's commit
+    * wall-clock millis, ascending by version — the manifests' `#ts`
+    * stamps, written strictly monotone ([[nextCommitTs]]), so
+    * resolution is unambiguous. Bounded driver work: one manifest read
+    * per committed version.
     */
   def commitTimestamps(spark: org.apache.spark.sql.SparkSession,
                        baseDir: String): Seq[(Long, Long)] = {
     val fs = fsFor(baseDir, spark)
-    val raw = committedVersions(fs, baseDir).map { v =>
-      val m = readManifest(fs, s"$baseDir/v$v")
-      val t =
-        if (m.ts >= 0) m.ts
-        else fs.getFileStatus(new org.apache.hadoop.fs.Path(
-          s"$baseDir/v$v", ManifestName)).getModificationTime
-      (v, t)
-    }
-    raw.scanLeft((-1L, Long.MinValue)) { case ((_, acc), (v, t)) =>
-      (v, math.max(acc, t))
-    }.drop(1)
+    committedVersions(fs, baseDir).map(v =>
+      v -> readManifest(fs, s"$baseDir/v$v").ts)
   }
 
   /** Resolve a wall-clock timestamp to the snapshot version current AS
@@ -987,7 +978,7 @@ object Loader {
       (v, man.txn, if (man.txn < 0) 1L else 0L,
         bucketHolders(man).count(_._2 == v).toLong,
         latest.count(_._2 == v).toLong,
-        man.schema.map(_.fieldNames.mkString(",")).orNull)
+        man.schema.fieldNames.mkString(","))
     }
     import spark.implicits._
     rows.toDF("version", "txn", "is_maintenance", "n_buckets_written",
@@ -1036,20 +1027,9 @@ object Loader {
           bucketHolders(readManifest(fs, s"$baseDir/v$v")).map(_._2))
           .toSet ++ retained
         val dead = committed.filterNot(live.contains)
-        dead.foreach { v =>
-          // in-version maintenance metadata dies with the version dir;
-          // the legacy external layout (`_kind/v<seq>`) is swept too
-          fs.delete(new org.apache.hadoop.fs.Path(s"$baseDir/v$v"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$baseDir/_zones/v$v"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$baseDir/_stats/v$v"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$baseDir/_dicts/v$v"), true)
-          fs.delete(new org.apache.hadoop.fs.Path(
-            s"$baseDir/_blooms/v$v"), true)
-          ()
-        }
+        // in-version maintenance metadata dies with the version dir
+        dead.foreach(v =>
+          fs.delete(new org.apache.hadoop.fs.Path(s"$baseDir/v$v"), true))
         // a reclaimed version's root set can never be read again
         // (readSnapshot of it throws VacuumedVersionException): its
         // registry entries would only pin driver memory
@@ -1113,7 +1093,7 @@ object Loader {
         // bucketing would rehash keys into different buckets and
         // silently miss existing rows on every subsequent merge
         h.man.foreach { pm =>
-          require(pm.nBuckets < 0 || pm.nBuckets == nBuckets,
+          require(pm.nBuckets == nBuckets,
             s"streamUpsertSink: layout $baseDir was written with " +
             s"nBuckets=${pm.nBuckets}; restarting with $nBuckets " +
             "would rehash keys into different buckets and miss " +
@@ -1149,23 +1129,6 @@ object Loader {
     (q, handle)
   }
 
-  /** One delta applied to the snapshot layout under `baseDir` as
-    * commit slot `txn` — the shared core of the streaming sink's
-    * foreachBatch and the batch writer [[upsertBatch]]: latest row per
-    * key within the delta (by `orderCols` descending), copy-on-write
-    * merge into ONLY the touched buckets, static-overwrite write with
-    * optional clustering/rolling, maintenance metadata before the
-    * manifest commit marker, registries refreshed after. Returns the
-    * committed version dir.
-    *
-    * Schema EVOLUTION happens here: the merge is
-    * [[graft.operators.Upsert.upsertEvolve]] and prior buckets read
-    * with parquet schema merging, so a delta carrying NEW columns
-    * widens the snapshot (old rows read back NULL) and a delta missing
-    * an old column nulls it on the rows it replaces — the ADD COLUMN
-    * semantics every table format provides, with type changes refused
-    * loudly.
-    */
   /** The table-CHECK gate shared by every incoming-data commit (upsert
     * delta, MERGE source): see [[Maintain]]'s `check` scaladoc for the
     * contract (raw rows validated pre-staging; TRUE/NULL pass, FALSE
@@ -1205,6 +1168,23 @@ object Loader {
     }
   }
 
+  /** One delta applied to the snapshot layout under `baseDir` as
+    * commit slot `txn` — the shared core of the streaming sink's
+    * foreachBatch and the batch writer [[upsertBatch]]: latest row per
+    * key within the delta (by `orderCols` descending), copy-on-write
+    * merge into ONLY the touched buckets, static-overwrite write with
+    * optional clustering/rolling, maintenance metadata before the
+    * manifest commit marker, registries refreshed after. Returns the
+    * committed version dir.
+    *
+    * Schema EVOLUTION happens here: the merge is
+    * [[graft.operators.Upsert.upsertEvolve]] over prior buckets read
+    * under the recorded schema, so a delta carrying NEW columns
+    * widens the snapshot (old rows read back NULL) and a delta missing
+    * an old column nulls it on the rows it replaces — the ADD COLUMN
+    * semantics every table format provides, with type changes refused
+    * loudly.
+    */
   private def applyDelta(spark: org.apache.spark.sql.SparkSession,
                          h: Head, delta: DataFrame, key: String,
                          orderCols: Seq[String], nBuckets: Int,
@@ -1249,13 +1229,12 @@ object Loader {
       // resurrect through the rewrite, and the rewrite PURGES the
       // touched buckets' tombstones (their files are replaced)
       val priorDv = h.dv(spark)
-      // prior files read under the manifest's RECORDED schema when one
-      // exists: (a) no per-commit footer pass, (b) columns dropped by
-      // dropColumn stay dropped (a mergeSchema read would resurrect
-      // them from old files on the very next upsert), (c) narrow-era
-      // files upcast to the recorded widened type, (d) renamed columns
-      // read era-by-era under their physical names. Legacy pre-schema
-      // manifests keep the mergeSchema fallback. All [[eraReadLive]].
+      // prior files read under the manifest's RECORDED schema: (a) no
+      // per-commit footer pass, (b) columns dropped by dropColumn stay
+      // dropped (a mergeSchema read would resurrect them from old files
+      // on the very next upsert), (c) narrow-era files upcast to the
+      // recorded widened type, (d) renamed columns read era-by-era
+      // under their physical names. All [[eraReadLive]].
       val merged = h.man match {
         case Some(pm) if priorBuckets.nonEmpty =>
           graft.operators.Upsert.upsertEvolve(
@@ -1348,20 +1327,10 @@ object Loader {
     // readSnapshot would read the UNTOUCHED buckets' long files with
     // an int-specified schema (fail or corrupt). So same-name fields
     // take the WIDER of merged vs prior along Upsert.widened's
-    // lossless lattice. A pre-schema legacy manifest falls back to one
-    // mergeSchema footer pass over the prior snapshot.
+    // lossless lattice.
     val mergedSchema = org.apache.spark.sql.types.StructType(
       merged.schema.filterNot(_.name == BucketCol))
-    val priorSchema = h.man.flatMap { pm =>
-      pm.schema.orElse {
-        val pdirs = holderDirs(h.base, pm)
-        if (pdirs.isEmpty) None
-        else Some(org.apache.spark.sql.types.StructType(
-          spark.read.option("mergeSchema", "true").parquet(pdirs: _*)
-            .schema.filterNot(_.name == BucketCol)))
-      }
-    }
-    val recordedSchema = priorSchema.fold(mergedSchema) { ps =>
+    val recordedSchema = h.man.map(_.schema).fold(mergedSchema) { ps =>
       val priorByName = ps.map(f => f.name -> f).toMap
       val have = mergedSchema.map(_.name).toSet
       val monotone = mergedSchema.map { f =>
@@ -1389,7 +1358,7 @@ object Loader {
       // dies with the full rewrite)
       Staged(
         Manifest(priorMap ++ touched.map(_ -> h.next), nBuckets, txn,
-          Some(recordedSchema),
+          recordedSchema,
           renames = h.man.map(_.renames).getOrElse(Nil),
           extras = h.man.map(_.extras).getOrElse(Nil)
             .filter(e => priorMap.contains(e._1) &&
@@ -1419,8 +1388,6 @@ object Loader {
     val man = h.man.getOrElse(sys.error(
       "upsertBatch: no committed layout under " + baseDir +
       " — seed the table with streamUpsertSink first"))
-    require(man.nBuckets >= 1,
-      s"upsertBatch: layout $baseDir carries no bucket count")
     applyDelta(spark, h, delta, key, orderCols, man.nBuckets,
       maintain, txn = -1L)
   }
@@ -1470,12 +1437,7 @@ object Loader {
     val man = h.man.getOrElse(sys.error(
       "mergeInto: no committed layout under " + baseDir +
       " — seed the table with streamUpsertSink first"))
-    val snapSchema = man.schema.getOrElse {
-      org.apache.spark.sql.types.StructType(
-        spark.read.option("mergeSchema", "true")
-          .parquet(holderDirs(baseDir, man): _*)
-          .schema.filterNot(_.name == BucketCol))
-    }
+    val snapSchema = man.schema
     require(source.columns.toSet == snapSchema.fieldNames.toSet,
       s"mergeInto: source columns (${source.columns.sorted.mkString(",")}) " +
       s"must equal the snapshot's (${snapSchema.fieldNames.sorted
@@ -1530,15 +1492,16 @@ object Loader {
     * update_postimage} and `_commit_version`.
     *
     * READ-SIDE derivation, O(churn) not O(table): each step diffs
-    * ONLY the buckets whose manifest pointer changed at that commit
-    * (copy-on-write means everything else is bit-identical), plus the
-    * step's NEW deletion-vector tombstones (a DV commit changes no
-    * bucket pointer — its deletes are read back from exactly the
-    * tombstoned files' buckets). Rows of a rewritten bucket that did
-    * not change produce no events (prev/cur null-safe struct
-    * comparison). Layout migrations ([[rebucket]]: nBuckets changes)
-    * rewrite every file while changing no visible row — those steps
-    * are skipped outright instead of paying a full-table self-diff.
+    * the live rows of ONLY the buckets that changed at that commit —
+    * its base pointer, its merge-on-read appendices or its
+    * deletion-vector tombstones differ (copy-on-write means every
+    * other bucket is bit-identical) — and that one diff yields every
+    * event, deletion-vector deletes and restores included. Rows of a
+    * changed bucket that did not change produce no events (prev/cur
+    * null-safe struct comparison). Layout migrations ([[rebucket]]:
+    * nBuckets changes) rewrite every file while changing no visible
+    * row — those steps are skipped outright instead of paying a
+    * full-table self-diff.
     * Schema evolution across the range is handled per era (each side
     * reads under its own manifest schema; events union by name,
     * missing columns null). A write-time CDF file would avoid the
@@ -1549,7 +1512,8 @@ object Loader {
     *
     * `key` is the layout's upsert key (manifests do not record it).
     * Bounded driver work per step: two manifest reads + the changed
-    * bucket set; all data work is distributed.
+    * bucket set; all data work is distributed. Each version's
+    * deletion vectors are read once per window.
     */
   def tableChanges(spark: org.apache.spark.sql.SparkSession,
                    baseDir: String, key: String,
@@ -1574,200 +1538,99 @@ object Loader {
           s"$baseDir were reclaimed by vacuumSnapshots mid-window")
       if (live.isEmpty)
         spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          man.schema.getOrElse(sys.error(
-            "tableChanges: legacy pre-schema manifest")))
+          new java.util.ArrayList[org.apache.spark.sql.Row](), man.schema)
       else eraReadLive(spark, fs, baseDir, man,
         buckets.filter(b => man.buckets.contains(b) ||
           man.extras.exists(_._1 == b)), dv)
     }
     def extrasOf(man: Manifest): Map[Int, Set[Long]] =
       man.extras.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    // each version's DV set read ONCE for the whole window (adjacent
-    // steps share a version: step n's cur is step n+1's prev — the
-    // per-step readDv pair re-listed every _dv dir twice), and — while
-    // a set is within the [[DvBroadcastMaxBytes]] driver bound that
-    // applyDv already enforces for its broadcast — its (file, pos)
-    // rows are collected ONCE and the per-step diffs (removed-bucket
-    // detection, new-tombstone extraction, changed-bucket filtering)
-    // run as driver set algebra instead of a persist + two collect
-    // jobs PER STEP. Sets past the bound keep the distributed
-    // anti-join path below, so the 100-TB story is unchanged.
+    // each version's DV set read ONCE for the whole window: adjacent
+    // steps share a version (step n's cur is step n+1's prev)
     val dvByVer: Map[Long, Option[DvSet]] =
       (fromSeq to toSeq).map(v =>
         v -> readDv(spark, fs, s"$baseDir/v$v")).toMap
-    val dvRowsCache =
-      scala.collection.mutable.HashMap.empty[Long, Set[(String, Long)]]
-    def dvRowsOf(seq: Long, d: DvSet): Set[(String, Long)] =
-      dvRowsCache.getOrElseUpdate(seq,
-        d.df.select(col("file"), col("pos")).collect()
-          .map(r => (r.getString(0), r.getLong(1))).toSet)
-    def bucketOfFile(f: String): Int =
-      BucketDir.findFirstMatchIn(f).getOrElse(sys.error(
-        s"tableChanges: DV file entry without a bucket dir: $f"))
-        .group(1).toInt
+    // the buckets of the tombstones present in exactly one of the two
+    // sets — added by a DV delete or an update, or removed by a restore
+    // or a rewrite: one plan over both sets, whatever their size
+    def dvChangedBuckets(prev: Option[DvSet],
+                         cur: Option[DvSet]): Set[Int] =
+      Seq(prev, cur).zipWithIndex.collect { case (Some(d), i) =>
+        d.df.select(col("file"), col("pos"), lit(i).as("__side"))
+      }.reduceOption(_ union _).fold(Set.empty[Int])(tagged =>
+        tagged.groupBy(col("file"), col("pos"))
+          .agg(min(col("__side")).as("__lo"), max(col("__side")).as("__hi"))
+          .filter(col("__lo") === col("__hi"))
+          .select(pathBucket(col("file"))).distinct()
+          .collect().map(_.getInt(0)).toSet)
     val steps = (fromSeq + 1 to toSeq).map { seq =>
       val manPrev = readManifest(fs, s"$baseDir/v${seq - 1}")
       val manCur = readManifest(fs, s"$baseDir/v$seq")
       val dvPrev = dvByVer(seq - 1)
       val dvCur = dvByVer(seq)
-      val dvSmall = (dvPrev ++ dvCur)
-        .forall(_.bytes <= DvBroadcastMaxBytes)
       if (manCur.nBuckets != manPrev.nBuckets) {
         // layout migration: every file rewritten, no visible row change
         None
       } else {
         // a bucket changed at this step when its base pointer differs
         // (a rewrite points it at this commit; a RESTORE points it
-        // BACK at an older version — pointer INEQUALITY catches both),
-        // it vanished/appeared, its merge-on-read extras set changed
-        // (an updateWhereVectors commit moves no pointer — its churn
-        // is the appendix plus tombstones, diffed as one live-vs-live
-        // bucket comparison below), or tombstones were REMOVED from it
-        // (a restore un-deleting rows — the resurrected rows must
-        // surface as inserts, which only the live-vs-live diff sees)
+        // BACK at an older version — pointer INEQUALITY catches both;
+        // so does a bucket that vanished or appeared), its merge-on-read
+        // extras set changed, or its tombstone set changed. Every event
+        // of the step comes from one live-vs-live diff of those buckets:
+        // a new tombstone is a delete, a removed one an insert, and an
+        // update commit's appendix plus tombstones a pre/post pair.
         val exPrev = extrasOf(manPrev); val exCur = extrasOf(manCur)
-        def dvBucketsOf(df: DataFrame): Set[Int] =
-          df.select(pathBucket(col("file")).as("b"))
-            .distinct().collect().map(_.getInt(0)).toSet
-        val dvRemoved: Set[Int] =
-          if (dvSmall) {
-            val p = dvPrev.map(dvRowsOf(seq - 1, _)).getOrElse(Set.empty)
-            val c = dvCur.map(dvRowsOf(seq, _)).getOrElse(Set.empty)
-            (p diff c).map(e => bucketOfFile(e._1))
-          } else (dvPrev, dvCur) match {
-            case (None, _) => Set.empty
-            case (Some(p), None) => dvBucketsOf(p.df)
-            case (Some(p), Some(c)) => dvBucketsOf(p.df.join(
-              c.df.select(col("file").as("cf"), col("pos").as("cp")),
-              col("file") === col("cf") && col("pos") === col("cp"),
-              "left_anti"))
-          }
         val changed = ((manPrev.buckets.keySet ++ manCur.buckets.keySet)
-          .filter(b => manPrev.buckets.get(b) != manCur.buckets.get(b))
-          ++ dvRemoved ++
+          .filter(b => manPrev.buckets.get(b) != manCur.buckets.get(b)) ++
           (exPrev.keySet ++ exCur.keySet).filter(b =>
             exPrev.getOrElse(b, Set.empty) !=
-              exCur.getOrElse(b, Set.empty))).toSeq.sorted
-        val cols = manCur.schema.orElse(manPrev.schema).getOrElse(
-          sys.error("tableChanges: legacy pre-schema manifest"))
-          .fieldNames.toIndexedSeq
-        val bucketDiff =
-          if (changed.isEmpty) None
-          else {
-            // align eras across a RENAME COLUMN boundary: the prev
-            // side reads under ITS manifest's names; renames recorded
-            // AT this step project them to the cur side's names so
-            // the by-name diff compares the same logical column
-            val prev0 = readVersionBuckets(manPrev, changed, dvPrev)
-            val prev = manCur.renames.filter(_._1 == seq)
-              .foldLeft(prev0) { case (df, (_, o, n)) =>
-                df.withColumnRenamed(o, n) }
-            val cur = readVersionBuckets(manCur, changed, dvCur)
-            val pCols = prev.columns.toIndexedSeq
-            val cCols = cur.columns.toIndexedSeq
-            val all = (pCols ++ cCols).distinct
-            def side(df: DataFrame, have: Seq[String], p: String) =
-              df.select(all.map(c =>
-                (if (have.contains(c)) col(c)
-                 else lit(null)).as(s"$p$c")): _*)
-            val j = side(prev, pCols, "p_")
-              .join(side(cur, cCols, "c_"),
-                col(s"p_$key") === col(s"c_$key"), "full_outer")
-            val pStruct = struct(all.map(c => col(s"p_$c")): _*)
-            val cStruct = struct(all.map(c => col(s"c_$c")): _*)
-            val isIns = col(s"p_$key").isNull
-            val isDel = col(s"c_$key").isNull
-            val isUpd = !isIns && !isDel && !(pStruct <=> cStruct)
-            val evts = j
-              .withColumn("__types",
-                when(isIns, array(lit("insert")))
-                .when(isDel, array(lit("delete")))
-                .when(isUpd, array(lit("update_preimage"),
-                                   lit("update_postimage")))
-                .otherwise(array()))
-              .withColumn("_change_type", explode(col("__types")))
-            Some(evts.select(all.map(c =>
-              when(col("_change_type").isin("delete", "update_preimage"),
-                col(s"p_$c")).otherwise(col(s"c_$c")).as(c)) :+
-              col("_change_type"): _*))
-          }
-        // NEW tombstones this step whose bucket did NOT change: pure
-        // deletes, read back from exactly the tombstoned files (a
-        // rewritten bucket's tombstones were purged, and a CHANGED
-        // bucket's new tombstones — an update commit's pre-images —
-        // are already represented by the live-vs-live diff above, so
-        // re-reporting them here would double-count)
-        val changedSet = changed.toSet
-        val dvDiff = if (dvSmall) {
-          // driver set algebra over the already-collected rows: zero
-          // jobs when the step adds no unchanged-bucket tombstones,
-          // one broadcast local relation when it does
-          val p = dvPrev.map(dvRowsOf(seq - 1, _)).getOrElse(Set.empty)
-          val c = dvCur.map(dvRowsOf(seq, _)).getOrElse(Set.empty)
-          val nd = (c diff p).toSeq
-            .filter(e => !changedSet.contains(bucketOfFile(e._1)))
-            .sorted // a Set's iteration order is not a plan order
-          if (nd.isEmpty) None
-          else {
-            val bs = nd.map(e => bucketOfFile(e._1)).distinct.sorted
-            // read raw (no DV filter): the tombstoned row itself —
-            // through eraRead so extras files and renamed eras
-            // resolve like any other read
-            val scan = eraRead(spark, fs, baseDir, manCur, bs,
-              withPos = true)
-            import spark.implicits._
-            Some(scan.join(broadcast(nd.toDF("__dv_f", "__dv_p")),
-                Seq("__dv_f", "__dv_p"))
-              .drop("__dv_f", "__dv_p")
-              .withColumn("_change_type", lit("delete")))
-          }
-        } else {
-          val newDv = (dvPrev, dvCur) match {
-            case (_, None) => None
-            case (None, Some(c)) => Some(c.df)
-            case (Some(p), Some(c)) => Some(c.df.join(p.df.select(
-              col("file").as("pf"), col("pos").as("pp")),
-              col("file") === col("pf") && col("pos") === col("pp"),
-              "left_anti"))
-          }
-          newDv.flatMap { nd =>
-            val ndP = nd.withColumn("__b", pathBucket(col("file")))
-              .filter(!col("__b").isin(changedSet.toSeq: _*))
-              .persist()
-            try {
-              val bs = ndP.select(col("__b"))
-                .distinct().collect().map(_.getInt(0)).toSeq
-              if (bs.isEmpty) None
-              else {
-                // read raw (no DV filter): the tombstoned row itself —
-                // through eraRead so extras files and renamed eras
-                // resolve like any other read
-                val scan = eraRead(spark, fs, baseDir, manCur, bs.sorted,
-                  withPos = true)
-                Some(scan.join(broadcast(ndP.select(
-                    col("file").as("__dv_f"), col("pos").as("__dv_p"))),
-                    Seq("__dv_f", "__dv_p"))
-                  .drop("__dv_f", "__dv_p")
-                  .withColumn("_change_type", lit("delete")))
-              }
-            } finally { ndP.unpersist(); () }
-          }
+              exCur.getOrElse(b, Set.empty)) ++
+          dvChangedBuckets(dvPrev, dvCur)).toSeq.sorted
+        Option.when(changed.nonEmpty) {
+          // align eras across a RENAME COLUMN boundary: the prev
+          // side reads under ITS manifest's names; renames recorded
+          // AT this step project them to the cur side's names so
+          // the by-name diff compares the same logical column
+          val prev0 = readVersionBuckets(manPrev, changed, dvPrev)
+          val prev = manCur.renames.filter(_._1 == seq)
+            .foldLeft(prev0) { case (df, (_, o, n)) =>
+              df.withColumnRenamed(o, n) }
+          val cur = readVersionBuckets(manCur, changed, dvCur)
+          val pCols = prev.columns.toIndexedSeq
+          val cCols = cur.columns.toIndexedSeq
+          val all = (pCols ++ cCols).distinct
+          def side(df: DataFrame, have: Seq[String], p: String) =
+            df.select(all.map(c =>
+              (if (have.contains(c)) col(c)
+               else lit(null)).as(s"$p$c")): _*)
+          val j = side(prev, pCols, "p_")
+            .join(side(cur, cCols, "c_"),
+              col(s"p_$key") === col(s"c_$key"), "full_outer")
+          val pStruct = struct(all.map(c => col(s"p_$c")): _*)
+          val cStruct = struct(all.map(c => col(s"c_$c")): _*)
+          val isIns = col(s"p_$key").isNull
+          val isDel = col(s"c_$key").isNull
+          val isUpd = !isIns && !isDel && !(pStruct <=> cStruct)
+          val evts = j
+            .withColumn("__types",
+              when(isIns, array(lit("insert")))
+              .when(isDel, array(lit("delete")))
+              .when(isUpd, array(lit("update_preimage"),
+                                 lit("update_postimage")))
+              .otherwise(array()))
+            .withColumn("_change_type", explode(col("__types")))
+          evts.select(all.map(c =>
+            when(col("_change_type").isin("delete", "update_preimage"),
+              col(s"p_$c")).otherwise(col(s"c_$c")).as(c)) :+
+            col("_change_type") :+ lit(seq).as("_commit_version"): _*)
         }
-        val stepEvents = (bucketDiff, dvDiff) match {
-          case (Some(a), Some(b)) => Some(a.unionByName(b,
-            allowMissingColumns = true))
-          case (a, b) => a.orElse(b)
-        }
-        stepEvents.map(_.withColumn("_commit_version", lit(seq)))
       }
     }.flatten
     steps.reduceOption((a, b) =>
         a.unionByName(b, allowMissingColumns = true))
       .getOrElse {
-        val man = readManifest(fs, s"$baseDir/v$toSeq")
-        val sc = man.schema.getOrElse(sys.error(
-          "tableChanges: legacy pre-schema manifest"))
+        val sc = readManifest(fs, s"$baseDir/v$toSeq").schema
         spark.createDataFrame(
           new java.util.ArrayList[org.apache.spark.sql.Row](),
           org.apache.spark.sql.types.StructType(sc
@@ -1796,9 +1659,7 @@ object Loader {
     val h = head(spark, baseDir)
     val man = h.man.getOrElse(sys.error(
       s"dropColumn: no committed layout under $baseDir"))
-    val sc = man.schema.getOrElse(sys.error(
-      "dropColumn: legacy pre-schema manifest — commit once through " +
-      "upsertBatch to record a schema first"))
+    val sc = man.schema
     require(column != key,
       s"dropColumn: $column is the layout's upsert key")
     require(sc.fieldNames.contains(column),
@@ -1807,8 +1668,8 @@ object Loader {
     // the full applicable DV set carries forward untouched — no file
     // was rewritten, so no tombstone was applied
     commit(spark, h, None)(_ => Staged(man.copy(txn = -1L,
-        schema = Some(org.apache.spark.sql.types.StructType(
-          sc.filterNot(_.name == column)))),
+        schema = org.apache.spark.sql.types.StructType(
+          sc.filterNot(_.name == column))),
       h.dv(spark).map(_.df)))
   }
 
@@ -1834,9 +1695,7 @@ object Loader {
     val h = head(spark, baseDir)
     val man = h.man.getOrElse(sys.error(
       s"renameColumn: no committed layout under $baseDir"))
-    val sc = man.schema.getOrElse(sys.error(
-      "renameColumn: legacy pre-schema manifest — commit once through " +
-      "upsertBatch to record a schema first"))
+    val sc = man.schema
     require(sc.fieldNames.contains(oldName),
       s"renameColumn: no column '$oldName' in " +
       s"(${sc.fieldNames.mkString(", ")})")
@@ -1850,8 +1709,8 @@ object Loader {
       "renameColumn: column names must be non-empty and whitespace-free")
     // no file was rewritten — tombstones carry forward untouched
     commit(spark, h, None)(_ => Staged(man.copy(txn = -1L,
-        schema = Some(org.apache.spark.sql.types.StructType(sc.map(f =>
-          if (f.name == oldName) f.copy(name = newName) else f))),
+        schema = org.apache.spark.sql.types.StructType(sc.map(f =>
+          if (f.name == oldName) f.copy(name = newName) else f)),
         renames = man.renames :+ ((h.next, oldName, newName))),
       h.dv(spark).map(_.df)))
   }
@@ -1917,11 +1776,6 @@ object Loader {
     val h = head(spark, baseDir)
     val fs = h.fs
     val man = h.man.getOrElse(return None)
-    def dataFiles(dir: String): Int =
-      fs.listStatus(new org.apache.hadoop.fs.Path(dir)).count { st =>
-        val n = st.getPath.getName
-        !n.startsWith("_") && !n.startsWith(".") && st.isFile
-      }
     // a bucket is compaction-worthy when its dir fragments into
     // multiple files OR it carries merge-on-read debt of either kind:
     // deletion-vector tombstones or extras appendices — compaction is
@@ -1939,7 +1793,9 @@ object Loader {
       // restoring the single-scan fast path and letting the rename
       // log prune below
       man.renames.exists(_._1 > v) ||
-      dataFiles(s"$baseDir/v$v/$BucketCol=$b") > 1
+      graft.plans.Zones.partFiles(fs,
+        new org.apache.hadoop.fs.Path(s"$baseDir/v$v/$BucketCol=$b"))
+        .lengthCompare(1) > 0
     }
     if (fragmented.isEmpty) return None
     val compacted = fragmented.map(_._1).toSet
@@ -2063,7 +1919,7 @@ object Loader {
         "commit an empty snapshot (drop the table instead)")
       // touched buckets' tombstones are physically applied by the
       // rewrite (or the bucket emptied); the rest carry forward
-      Staged(Manifest(buckets, man.nBuckets, -1L, Some(snapSchema),
+      Staged(Manifest(buckets, man.nBuckets, -1L, snapSchema,
           renames = man.renames,
           extras = man.extras.filterNot(e => touched.contains(e._1))),
         dvMinusBuckets(priorDv, touched),
@@ -2176,9 +2032,7 @@ object Loader {
       "change is a delete+insert (use mergeInto)")
     val h = head(spark, baseDir)
     val man = h.man.getOrElse(return None)
-    val snapSchema = man.schema.getOrElse(sys.error(
-      "updateWhereVectors: legacy pre-schema manifest — commit once " +
-      "through upsertBatch to record a schema first"))
+    val snapSchema = man.schema
     set.keys.find(c => !snapSchema.fieldNames.contains(c)).foreach(c =>
       sys.error(s"updateWhereVectors: SET names unknown column '$c' " +
         s"(has: ${snapSchema.fieldNames.mkString(", ")})"))
@@ -2214,7 +2068,7 @@ object Loader {
           .select(col("__dv_f").as("file"), col("__dv_p").as("pos"))
         val all = priorDv.fold(newDv)(d =>
           d.df.select(col("file"), col("pos")).unionByName(newDv))
-        Staged(man.copy(txn = -1L, schema = Some(snapSchema),
+        Staged(man.copy(txn = -1L,
             extras = man.extras ++ touchedB.map(_ -> h.next)),
           Some(all.coalesce(1)), Some(written))
       }
@@ -2434,11 +2288,10 @@ object Loader {
     def freshOf(v: Long, kind: String): Option[MetaRows] =
       if (s"v$v" == vPath.getName) fresh.get(kind) else None
     // metadata lives INSIDE each version dir (published atomically
-    // with it); the pre-OCC layout kept it under `<base>/_kind/v<seq>`
-    // — resolve the in-version location first, fall back to legacy
+    // with it); a version committed without a kind has no such dir
     def metaOf(v: Long, kind: String): Option[String] =
-      Seq(s"$base/v$v/$kind", s"$base/$kind/v$v")
-        .find(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+      Some(s"$base/v$v/$kind")
+        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
     // a kind's holders: rows in memory, else dirs on disk
     def rowsOf(kind: String): Seq[org.apache.spark.sql.Row] =
       versions.flatMap(freshOf(_, kind)).flatMap(_.rows)
@@ -2465,7 +2318,8 @@ object Loader {
           val sdir = metaOf(v, "_stats").getOrElse(sys.error(
             s"registerSnapshot: version v$v of $base has no _stats " +
             "metadata (was it written with statCols maintenance?)"))
-          spark.read.parquet(sdir)
+          spark.read.parquet(graft.plans.Zones.partFiles(fs,
+            new org.apache.hadoop.fs.Path(sdir)).map(_.getPath.toString): _*)
         }(_.toDF(spark))
         partials.filter(col(BucketCol).isin(bs: _*))
       }.reduce(_ unionByName _)

@@ -6,10 +6,10 @@ import org.apache.spark.sql.streaming.Trigger
 import graft.sources.{Loader, VacuumedVersionException}
 
 /** Change-data-feed contracts ([[Loader.tableChanges]]): typed
-  * per-commit events derived read-side from exactly the churned
-  * buckets plus the step's new deletion-vector tombstones; unchanged
-  * rows of rewritten buckets emit nothing; layout migrations emit
-  * nothing; a vacuumed window fails typed.
+  * per-commit events derived read-side from one live-vs-live diff of
+  * exactly the buckets whose pointer, appendices or tombstones changed;
+  * unchanged rows of rewritten buckets emit nothing; layout migrations
+  * emit nothing; a vacuumed window fails typed.
   */
 class ChangeFeedSpec extends SparkSpec {
   import spark.implicits._
@@ -127,6 +127,24 @@ class ChangeFeedSpec extends SparkSpec {
       .as[(String, Long, Long)].collect().toSet
     assert(ev3 === Set(("update_preimage", 10L, 1000L),
       ("update_postimage", 10L, 1234L)))
+  }
+
+  test("a DV delete of an updated key emits exactly one delete " +
+       "carrying the post-image values") {
+    val base = Files.createTempDirectory("graft-cf4").toString
+    val sink = seedSink(base)
+    // v1: merge-on-read UPDATE of users 1..3 (+9) — appendix images
+    assert(Loader.updateWhereVectors(spark, sink,
+      col("user_id") <= 3L, Map("cents" -> (col("cents") + 9L)),
+      key = "user_id").map(_._2) === Some(3L))
+    // v2: DV-tombstone user 2, whose live row is its appendix image
+    assert(Loader.deleteWhereVectors(spark, sink,
+      col("user_id") === 2L).map(_._2) === Some(1L))
+    val ev = Loader.tableChanges(spark, sink, "user_id", 1L, 2L)
+      .select(col("_commit_version"), col("_change_type"),
+        col("user_id"), col("cents"))
+      .as[(Long, String, Long, Long)].collect().toSeq
+    assert(ev === Seq((2L, "delete", 2L, 209L)))
   }
 
   test("a RESTORE emits honest change events: un-deleted rows insert, " +

@@ -241,7 +241,7 @@ class SchemaLifecycleSpec extends SparkSpec {
   }
 
   test("commitTimestamps are strictly monotone; timestampAsOf resolves " +
-       "boundaries; legacy manifests fall back to file mtime") {
+       "boundaries; a manifest without #ts or #schema is refused") {
     val base = Files.createTempDirectory("graft-ts").toString
     val sink = seedSink(base)
     Loader.upsertBatch(spark, sink,
@@ -262,19 +262,30 @@ class SchemaLifecycleSpec extends SparkSpec {
     intercept[graft.sources.VacuumedVersionException] {
       Loader.timestampAsOf(spark, sink, times(0)._2 - 1)
     }
-    // legacy fallback: strip v1's #ts line — resolution degrades to
-    // the manifest file's mtime, repaired monotone by the running max
+    // a manifest that lacks its commit time or its schema is refused,
+    // naming the manifest, rather than read under a guessed layout
     val mf = Paths.get(s"$sink/v1/graft_manifest")
     val txt = new String(Files.readAllBytes(mf), "UTF-8")
-    Files.write(mf, txt.linesIterator
-      .filterNot(_.startsWith("#ts")).mkString("", "\n", "\n")
-      .getBytes("UTF-8"))
-    // the local FS keeps a sidecar checksum; the manual rewrite above
-    // must drop it or the read fails ChecksumException
-    Files.deleteIfExists(Paths.get(s"$sink/v1/.graft_manifest.crc"))
-    val legacy = Loader.commitTimestamps(spark, sink)
-    assert(legacy.map(_._1) === Seq(0L, 1L, 2L))
-    assert(legacy.sliding(2).forall(p => p(0)._2 <= p(1)._2))
+    def strip(prefix: String): Unit = {
+      Files.write(mf, txt.linesIterator
+        .filterNot(_.startsWith(prefix)).mkString("", "\n", "\n")
+        .getBytes("UTF-8"))
+      // the local FS keeps a sidecar checksum; the manual rewrite above
+      // must drop it or the read fails ChecksumException
+      Files.deleteIfExists(Paths.get(s"$sink/v1/.graft_manifest.crc"))
+    }
+    strip("#ts")
+    val noTs = intercept[IllegalArgumentException] {
+      Loader.commitTimestamps(spark, sink)
+    }
+    assert(noTs.getMessage.contains(s"$sink/v1/graft_manifest") &&
+      noTs.getMessage.contains("#ts"), noTs.getMessage)
+    strip("#schema")
+    val noSchema = intercept[IllegalArgumentException] {
+      Loader.readSnapshot(spark, s"$sink/v1")
+    }
+    assert(noSchema.getMessage.contains(s"$sink/v1/graft_manifest") &&
+      noSchema.getMessage.contains("#schema"), noSchema.getMessage)
   }
 
   test("time-based retention vacuum protects retained versions' " +

@@ -8,19 +8,9 @@ import org.scalatest.funsuite.AnyFunSuite
   */
 object SparkTestSession {
   lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .appName("graft-test")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
+    val s = Graft.builder("local[4]", "graft-test", "4")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft-wh").toString)
-      .config("spark.sql.shuffle.partitions", "4")
-      // the same class-cache size as Graft.session: the cache is JVM-global
-      // and sized by the first session that generates code
-      .config("spark.sql.codegen.cache.maxEntries", Graft.CodegenCacheEntries)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     s.sparkContext.setLogLevel("ERROR")
     s
