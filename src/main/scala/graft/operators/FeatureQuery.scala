@@ -6,17 +6,19 @@ import java.sql.Timestamp
 
 /** The reference's query surface — `SQLQuery` (`main.py:177-258`): three
   * filter/aggregate "features" over a joined transaction frame plus the
-  * fold-join assembly. Two implementations:
+  * fold-join assembly. Two layers:
   *
-  *  - [[totalBefore]]/[[totalDuring]]/[[txnCount]]/[[assemble]] — faithful
+  *  - [[totalBefore]]/[[totalDuring]]/[[txnCount]]/[[assemble]] — the
   *    per-feature operators, matching the reference API shape one-to-one.
-  *  - [[fusedFeatures]] — the Spark-first plan: ONE scan + ONE shuffle with
-  *    conditional aggregation replaces three scans, three shuffles and two
-  *    extra joins. At 100 TB the faithful shape re-reads the joined fact
-  *    table three times (the reference dodges that only by materializing
-  *    everything in RAM, `main.py:296-298`); the fused shape is
-  *    semantically identical (proved by the oracle: the DuckDB SQL is the
-  *    3-CTE faithful form) and ~3× cheaper.
+  *  - [[householdFeatures]] and [[fusedFeatures]] — the plans the pipeline
+  *    runs: all three features come out of ONE aggregate over the joined
+  *    frame (one scan, one shuffle), the shared-aggregate plan of LMFAO
+  *    (SIGMOD 2019). The per-feature form would scan and shuffle the
+  *    joined frame three times and join the results twice. A household
+  *    survives iff it has a row in each window — the inner fold-join's key
+  *    survival, kept by presence counts, not by non-null sums. The two
+  *    differ only in the window sums: [[householdFeatures]] float-sums and
+  *    rounds like [[totalBefore]]; [[fusedFeatures]] sums exact decimals.
   *
   * Boundary semantics pinned by the reference (`main.py:30-31,197,220`):
   * "before" is strictly `date < start`; "during" is inclusive
@@ -52,12 +54,11 @@ object FeatureQuery {
                key: String): DataFrame =
     Processor.foldJoin(demographics +: features, key).orderBy(col(key))
 
-  /** Faithful end-to-end pipeline (`main.py:284-330`): join transactions to
-    * the key mapping, then three feature aggregations, then assembly.
-    * `persist` caches the shared joined frame (SURVEY.md §7.3-10) — the
-    * behavioral equivalent of the reference's eager materialization. The
-    * caller owns that cache entry: [[graft.pipeline.HouseholdPipeline.run]]
-    * drops it after its write.
+  /** The end-to-end feature table (`main.py:284-330`): join transactions
+    * to the key mapping, aggregate the three features in one pass, inner
+    * join demographics, order by household. Values equal
+    * [[assemble]] of [[totalBefore]], [[totalDuring]] and [[txnCount]]
+    * over the same joined frame.
     */
   def householdFeatures(demographics: DataFrame, mapping: DataFrame,
                         transactions: DataFrame, joinKey: String,
@@ -66,33 +67,50 @@ object FeatureQuery {
       : DataFrame = {
     val joined = Processor.toTimestampCol(
       Processor.join(transactions, mapping, joinKey, "inner"), dateCol)
-      .persist()
-    val f2 = totalBefore(joined, householdKey, dateCol, amountCol, start)
-    val f3 = totalDuring(joined, householdKey, dateCol, amountCol, start, end)
-    val f4 = txnCount(joined, householdKey, amountCol)
-    assemble(demographics, Seq(f2, f3, f4), householdKey)
+    val feats = windowedFeatures(joined, householdKey, dateCol, amountCol,
+      lit(start), lit(end), c => bround(sum(c), 2),
+      "total_amount_before_campaign", "total_amount_during_campaign",
+      "total_transactions")
+    Processor.join(demographics, feats, householdKey)
+      .orderBy(col(householdKey))
   }
 
-  /** Spark-first fused plan: single shuffle, conditional aggregation.
-    * A group's windowed sum is NULL iff it had no row in that window, so
-    * filtering both sums non-null reproduces exactly the inner fold-join's
-    * key-survival semantics. Sums are exact decimal (order-independent
-    * across partitions) surfaced as double.
+  /** The three features in one aggregate, sums exact: each amount is cast
+    * to DECIMAL(18,2) before summing (order-independent across
+    * partitions), the sum surfaced as double.
     */
   def fusedFeatures(txns: DataFrame, key: String, dateCol: String,
                     amountCol: String, start: Column, end: Column,
                     beforeName: String = "total_amount_before_campaign",
                     duringName: String = "total_amount_during_campaign",
-                    countName: String = "total_transactions"): DataFrame = {
-    val amtDec: Column = col(amountCol).cast("decimal(18,2)")
+                    countName: String = "total_transactions"): DataFrame =
+    windowedFeatures(txns, key, dateCol, amountCol, start, end,
+      c => sum(c.cast("decimal(18,2)")).cast("double"),
+      beforeName, duringName, countName)
+
+  /** One `groupBy(key)`: `total` of the amounts in each window, the
+    * non-null amount count, and a group kept only when both windows
+    * hold a row. A window whose rows all have NULL amounts still keeps
+    * its group (with a NULL total), as the inner fold-join of the
+    * per-feature frames does; a NULL date falls in neither window.
+    */
+  private def windowedFeatures(txns: DataFrame, key: String,
+                               dateCol: String, amountCol: String,
+                               start: Column, end: Column,
+                               total: Column => Column, beforeName: String,
+                               duringName: String, countName: String)
+      : DataFrame = {
+    val before = col(dateCol) < start
+    val during = col(dateCol).between(start, end)
     txns
       .groupBy(col(key))
       .agg(
-        sum(when(col(dateCol) < start, amtDec)).cast("double")
-          .as(beforeName),
-        sum(when(col(dateCol).between(start, end), amtDec))
-          .cast("double").as(duringName),
-        count(col(amountCol)).as(countName))
-      .filter(col(beforeName).isNotNull && col(duringName).isNotNull)
+        total(when(before, col(amountCol))).as(beforeName),
+        total(when(during, col(amountCol))).as(duringName),
+        count(col(amountCol)).as(countName),
+        count(when(before, 1)).as("__before_rows"),
+        count(when(during, 1)).as("__during_rows"))
+      .filter(col("__before_rows") > 0 && col("__during_rows") > 0)
+      .drop("__before_rows", "__during_rows")
   }
 }

@@ -10,12 +10,13 @@ import graft.sources.{Extractor, Loader}
   * `main.py:25-27,75` + the golden output); `individual_id` is forced to
   * string exactly as the reference does with its dtype override.
   *
-  * Two plans:
-  *  - `run` — the faithful shape (three feature aggregates off a persisted
-  *    joined frame, fold-join assembly), matching the reference
-  *    operator-for-operator;
-  *  - `runFused` — the scale shape (single conditional-aggregation shuffle;
-  *    see FeatureQuery.fusedFeatures) with identical output on 2-dp money.
+  * Two plans, each one scan of every input, one aggregate for the three
+  * features and one write; the final order by household is applied in
+  * the single-file sink ([[graft.sources.Loader.writeCsvSingle]]):
+  *  - `run` — the reference's sums (float, rounded to 2 dp; see
+  *    FeatureQuery.householdFeatures);
+  *  - `runFused` — exact decimal sums (see FeatureQuery.fusedFeatures),
+  *    identical output on 2-dp money.
   */
 object HouseholdPipeline {
 
@@ -59,11 +60,7 @@ object HouseholdPipeline {
   def run(spark: SparkSession, demPath: String, hhPath: String,
           transPath: String, outPath: String): Boolean = {
     val out = features(spark, demPath, hhPath, transPath, fused = false)
-    // the persisted join must not outlive the run: file-source plans
-    // compare equal by path, so a later run over rewritten inputs would
-    // read this run's cached rows
-    try Loader.writeCsvSingle(out, outPath)
-    finally org.apache.spark.sql.graftbridge.Bridge.uncacheReads(out)
+    Loader.writeCsvSingle(out, outPath)
   }
 
   def runFused(spark: SparkSession, demPath: String, hhPath: String,

@@ -462,26 +462,31 @@ object Zones {
   }
 
   /** The rows of the metadata tables at `dirs` (one Spark scan of
-    * their [[partFiles]]; none when they hold none) projected onto
-    * `cols`, followed by `rows`. A table written before column tags
-    * existed reads `col_tag` as NULL.
+    * their [[partFiles]] under `schema`, so no job infers it from
+    * Parquet footers; none when they hold none), followed by `rows`. A
+    * table written before column tags existed reads `col_tag` as NULL.
     */
   private def metadataRows(spark: SparkSession, dirs: Seq[String],
-                           cols: Seq[String], rows: Seq[Row]): Seq[Row] = {
+                           schema: StructType, rows: Seq[Row]): Seq[Row] = {
     val parts = dirs.flatMap { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       partFiles(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
     }
     if (parts.isEmpty) rows
-    else {
-      val raw = spark.read.parquet(parts.map(_.getPath.toString): _*)
-      val untagged = !raw.schema.fieldNames.contains("col_tag")
-      raw.select(cols.map(c =>
-          if (c == "col_tag" && untagged) lit(null).cast("string").as(c)
-          else col(c)): _*)
-        .collect().toSeq ++ rows
-    }
+    else spark.read.schema(schema)
+      .parquet(parts.map(_.getPath.toString): _*).collect().toSeq ++ rows
   }
+
+  // the columns the loaders below read of each analyzer's output, in
+  // its column order
+  private val ZoneRowSchema = StructType.fromDDL(
+    "file STRING, col_name STRING, min_repr STRING, max_repr STRING, " +
+    "col_tag STRING")
+  private val DictRowSchema = StructType.fromDDL(
+    "file STRING, col_name STRING, dict_repr ARRAY<STRING>, col_tag STRING")
+  private val BloomRowSchema = StructType.fromDDL(
+    "file STRING, col_name STRING, num_bits INT, num_hashes INT, w INT, " +
+    "word BIGINT, col_tag STRING")
 
   /** The part files of a parquet dir: its files whose names start with
     * neither `_` nor `.` (no commit markers, no checksums). A reader of
@@ -506,8 +511,7 @@ object Zones {
       : (Map[String, Map[String, ZoneRegistry.BloomSketch]],
          Map[String, String]) = {
     // one row per (file, col, nonzero word) — metadata-sized collect
-    val rows = metadataRows(spark, bloomDirs, Seq("file", "col_name",
-      "num_bits", "num_hashes", "w", "word", "col_tag"), fresh)
+    val rows = metadataRows(spark, bloomDirs, BloomRowSchema, fresh)
     val blooms = rows
       .groupBy(r => ZoneRegistry.fileKey(
         rebasedKey(rebaseTo)(r.getString(0))))
@@ -526,8 +530,7 @@ object Zones {
       : (Map[String, Map[String, Set[String]]], Map[String, String]) = {
     // one row per (file, col) with a ≤maxDict array — the same bounded
     // driver fetch as the min/max manifest load
-    val rows = metadataRows(spark, dictDirs,
-      Seq("file", "col_name", "dict_repr", "col_tag"), fresh)
+    val rows = metadataRows(spark, dictDirs, DictRowSchema, fresh)
     val dicts = rows.groupBy(r => ZoneRegistry.fileKey(
       rebasedKey(rebaseTo)(r.getString(0))))
       .map { case (f, rs) =>
@@ -540,8 +543,7 @@ object Zones {
   private def loadManifest(spark: SparkSession, metaDirs: Seq[String],
                            fresh: Seq[Row], rebaseTo: Option[String])
       : ZoneRegistry.ZoneManifest = {
-    val rows = metadataRows(spark, metaDirs,
-      Seq("file", "col_name", "min_repr", "max_repr", "col_tag"), fresh)
+    val rows = metadataRows(spark, metaDirs, ZoneRowSchema, fresh)
     val files = rows.groupBy(r => ZoneRegistry.fileKey(
       rebasedKey(rebaseTo)(r.getString(0))))
       .map { case (f, rs) =>

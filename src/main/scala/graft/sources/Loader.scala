@@ -2312,14 +2312,21 @@ object Loader {
       // rows stay counted until the bucket rewrites, the same
       // declared staleness deletion vectors already have)
       val byVer = bucketHolders(man).groupBy(_._2)
+      // the analyzer's output schema over the recorded table schema (an
+      // analysis, no job): a read under it infers nothing from footers
+      lazy val statsSchema = graft.operators.StatsPlanner.analyzeWideBy(
+        spark.createDataFrame(
+          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
+          man.schema.add(BucketCol, org.apache.spark.sql.types.IntegerType)),
+        BucketCol, exprs).schema
       val wide = versions.map { v =>
         val bs = byVer(v).map(_._1).distinct
         val partials = freshOf(v, "_stats").fold {
           val sdir = metaOf(v, "_stats").getOrElse(sys.error(
             s"registerSnapshot: version v$v of $base has no _stats " +
             "metadata (was it written with statCols maintenance?)"))
-          spark.read.parquet(graft.plans.Zones.partFiles(fs,
-            new org.apache.hadoop.fs.Path(sdir)).map(_.getPath.toString): _*)
+          spark.read.schema(statsSchema).parquet(graft.plans.Zones.partFiles(
+            fs, new org.apache.hadoop.fs.Path(sdir)).map(_.getPath.toString): _*)
         }(_.toDF(spark))
         partials.filter(col(BucketCol).isin(bs: _*))
       }.reduce(_ unionByName _)
@@ -2351,6 +2358,13 @@ object Loader {
     * file). coalesce(1) serializes the final write through one task — only
     * correct for driver-scale results (the reference's own output is 22k
     * rows); large outputs should use [[writeCsvDir]].
+    * A frame whose top node is a global sort is sorted in that one task
+    * instead: the sort's range shuffle and sampling job would only order
+    * rows the coalesce then gathers anyway. The rows come out in the same
+    * order (rows whose sort keys tie may come in another order — Spark's
+    * sort is not stable either way). A sort below another operator
+    * (`orderBy(...).select(...)`) stays in the plan; coalesce(1) keeps
+    * its order.
     * The empty-result guard is part of the write, not an extra action: the
     * plan runs once, into a temp dir, and a result with no part file or a
     * header-only part file throws IllegalArgumentException without touching
@@ -2364,7 +2378,7 @@ object Loader {
         s"Loader.writeCsvSingle: expected a .csv path, got '$path'")
     val tmp = Paths.get(path + ".spark-tmp")
     try {
-      df.coalesce(1).write.mode(SaveMode.Overwrite)
+      singlePartition(df).write.mode(SaveMode.Overwrite)
         .option("header", "true").csv(tmp.toString)
       val parts = Files.list(tmp)
       val part = try parts.filter { p =>
@@ -2377,6 +2391,20 @@ object Loader {
       Files.move(part.get, Paths.get(path), StandardCopyOption.REPLACE_EXISTING)
       true
     } finally deleteTree(tmp)
+  }
+
+  /** `df` in one partition, in its order. A top-level global sort is
+    * re-planned as a partition-local sort over the unshuffled coalesce
+    * of its input. */
+  private def singlePartition(df: DataFrame): DataFrame = {
+    import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
+    df.queryExecution.analyzed match {
+      case s: Sort if s.global =>
+        org.apache.spark.sql.graftbridge.Bridge.ofRows(df.sparkSession,
+          s.copy(global = false,
+            child = Repartition(1, shuffle = false, s.child)))
+      case _ => df.coalesce(1)
+    }
   }
 
   /** True when a CSV part file holds no data row: nothing after its first

@@ -36,17 +36,4 @@ object Bridge {
       : org.apache.spark.sql.DataFrame =
     org.apache.spark.sql.classic.Dataset.ofRows(
       spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
-
-  /** Drop every cache entry that `df`'s plan reads (a frame persisted
-    * inside a pipeline) without running a job. The cache manager's
-    * plan lookup takes the classic session, hence this bridge.
-    */
-  def uncacheReads(df: org.apache.spark.sql.DataFrame): Unit = {
-    val s = df.sparkSession.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-    val cm = s.sharedState.cacheManager
-    df.queryExecution.analyzed.foreach { p =>
-      if (cm.lookupCachedData(s, p).isDefined)
-        cm.uncacheQuery(s, p, cascade = false)
-    }
-  }
 }

@@ -1,14 +1,8 @@
 package graft
 
 import java.nio.file.Files
-import scala.collection.mutable.ArrayBuffer
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.execution.QueryExecution
-import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.util.QueryExecutionListener
 import graft.sources.Loader
 
 /** The Spark jobs of one warm, maintained `upsertBatch` that rewrites
@@ -40,30 +34,6 @@ class CommitJobCountSpec extends SparkSpec {
       (id * 104729L + ver) % 100000L, s"t${id % 5}", ver))
       .toDF("id", "score", "cents", "tag", "ver")
 
-  /** Every job started (description and call site) and every file
-    * relation a query read, while installed. */
-  private final class Recorder extends SparkListener
-      with QueryExecutionListener {
-    val jobs = ArrayBuffer.empty[(Int, String, String, String)]
-    val scanned = ArrayBuffer.empty[String]
-    override def onJobStart(e: SparkListenerJobStart): Unit = synchronized {
-      val desc = Option(e.properties)
-        .flatMap(p => Option(p.getProperty("spark.job.description")))
-        .getOrElse("")
-      jobs += ((e.jobId, desc, e.stageInfos.map(_.name).distinct.mkString(","),
-        e.stageInfos.map(_.details).mkString("\n")))
-    }
-    override def onSuccess(funcName: String, qe: QueryExecution,
-                           durationNs: Long): Unit = synchronized {
-      scanned ++= qe.analyzed.collectWithSubqueries {
-        case lr: LogicalRelation => lr.relation
-      }.collect { case h: HadoopFsRelation => h.location.rootPaths }
-        .flatten.map(_.toString)
-    }
-    override def onFailure(funcName: String, qe: QueryExecution,
-                           e: Exception): Unit = ()
-  }
-
   /** A maintained table under `base`: 400 rows in 4 buckets, seeded by
     * the stream sink. */
   private def seed(base: String): String = {
@@ -85,26 +55,6 @@ class CommitJobCountSpec extends SparkSpec {
       rows((1L to 40L).map(_ * 10L) ++ (1L to 20L).map(_ + 1000L * ver), ver),
       "id", Seq("ver"), Some(maintain))
 
-  /** Runs `f` with a [[Recorder]] installed; every event it caused is
-    * delivered before the recorder comes off. */
-  private def recorded[T](f: => T): (T, Recorder) = {
-    val rec = new Recorder
-    ListenerBusAccess.drain(spark.sparkContext)
-    spark.sparkContext.addSparkListener(rec)
-    spark.listenerManager.register(rec)
-    try {
-      val t = f
-      ListenerBusAccess.drain(spark.sparkContext)
-      (t, rec)
-    } finally {
-      spark.sparkContext.removeSparkListener(rec)
-      spark.listenerManager.unregister(rec)
-    }
-  }
-
-  private def listing(rec: Recorder): String =
-    rec.jobs.map { case (id, d, site, _) => s"$id $d [$site]" }.mkString("; ")
-
   test("a warm full-bucket maintained upsert reads back none of its own " +
        "metadata and infers no Parquet schema") {
     val sink = seed(Files.createTempDirectory("graft-commit-jobs").toString)
@@ -115,7 +65,7 @@ class CommitJobCountSpec extends SparkSpec {
       org.apache.spark.sql.functions.col("id") === 5L,
       Some(maintain)).isDefined)
 
-    val (vdir, rec) = recorded(upsert(sink, 2L))
+    val (vdir, rec) = JobRecorder.recorded(spark)(upsert(sink, 2L))
     assert(new java.io.File(vdir).list()
       .count(_.startsWith("graft_bucket=")) === 4, "not a full-bucket commit")
 
@@ -123,11 +73,10 @@ class CommitJobCountSpec extends SparkSpec {
       .map(k => s"${new java.io.File(vdir).getName}/$k")
     val readBack = rec.scanned.filter(p => ownMeta.exists(p.endsWith))
     assert(readBack.isEmpty, s"read back its own metadata: $readBack")
-    val footerJobs = rec.jobs.filter(_._4.contains("DataFrameReader.parquet"))
-    assert(footerJobs.isEmpty,
-      s"${footerJobs.size} footer-inference jobs: ${listing(rec)}")
+    assert(rec.footerJobs.isEmpty,
+      s"${rec.footerJobs.size} footer-inference jobs: ${rec.listing}")
     assert(rec.jobs.size <= MaxCommitJobs,
-      s"${rec.jobs.size} jobs (bound $MaxCommitJobs): ${listing(rec)}")
+      s"${rec.jobs.size} jobs (bound $MaxCommitJobs): ${rec.listing}")
   }
 
   /** Jobs of each warm maintained verb on this table: the most seen in
@@ -148,9 +97,9 @@ class CommitJobCountSpec extends SparkSpec {
     upsert(sink, 1L)
     // the same five verbs, each on a key of its own; the first round warms
     // up, the second is counted
-    def round(k: Long): Seq[(String, Recorder)] = {
-      def jobs(verb: String)(f: => Option[Any]): (String, Recorder) = {
-        val (r, rec) = recorded(f)
+    def round(k: Long): Seq[(String, JobRecorder)] = {
+      def jobs(verb: String)(f: => Option[Any]): (String, JobRecorder) = {
+        val (r, rec) = JobRecorder.recorded(spark)(f)
         assert(r.isDefined, s"$verb committed nothing")
         verb -> rec
       }
@@ -172,7 +121,7 @@ class CommitJobCountSpec extends SparkSpec {
     counted.foreach { case (verb, rec) =>
       assert(rec.jobs.size <= MaxVerbJobs(verb),
         s"$verb ran ${rec.jobs.size} jobs (bound ${MaxVerbJobs(verb)}): " +
-        listing(rec))
+        rec.listing)
     }
   }
 }

@@ -14,7 +14,9 @@ import graft.sources.Loader
   * equal, field for field, the one [[Loader.registerSnapshot]] builds
   * from disk on a fresh driver; and each of the version's metadata dirs
   * must hold exactly the rows the public analyzers compute over that
-  * version's own data files.
+  * version's own data files. The from-disk registration reads those
+  * dirs under their known schemas, so it infers none from Parquet
+  * footers.
   */
 class CommitRegistrySpec extends SparkSpec {
   import spark.implicits._
@@ -51,6 +53,12 @@ class CommitRegistrySpec extends SparkSpec {
     df.collect().toSeq.map(_.toSeq).groupBy(identity)
       .map { case (k, v) => k -> v.size }
 
+  /** Jobs of one from-disk [[Loader.registerSnapshot]] on this table: 5
+    * in every case below, metadata collects and the stats merge. Reading
+    * the metadata dirs without their schema added a footer-inference job
+    * per read: 9–10. */
+  private val MaxRegisterJobs = 5
+
   /** Run `verb` on empty registries, then check what it registered
     * against a from-disk registration and its metadata dirs against the
     * public analyzers. */
@@ -62,7 +70,12 @@ class CommitRegistrySpec extends SparkSpec {
     assert(vdir !== before, s"$what published no version")
     val fresh = registries
     clearRegistries()
-    Loader.registerSnapshot(spark, vdir, maintain)
+    val (_, rec) = JobRecorder.recorded(spark)(
+      Loader.registerSnapshot(spark, vdir, maintain))
+    assert(rec.footerJobs.isEmpty,
+      s"$what: ${rec.footerJobs.size} footer-inference jobs: ${rec.listing}")
+    assert(rec.jobs.size <= MaxRegisterJobs,
+      s"$what: ${rec.jobs.size} jobs (bound $MaxRegisterJobs): ${rec.listing}")
     val disk = registries
     assert(fresh._1.size === 1 && fresh._2.size === 1, what)
     assert(fresh._1 === disk._1, s"$what: zone registry differs")

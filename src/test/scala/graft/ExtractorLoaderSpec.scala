@@ -1,6 +1,8 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types._
 import graft.sources.{Extractor, Loader}
 
@@ -93,6 +95,46 @@ class ExtractorLoaderSpec extends SparkSpec {
     assert(Loader.writeCsvSingle(df, out))
     assert(rows.value == 1000L)
     assert(Files.readAllLines(Paths.get(out)).size == 1001)
+  }
+
+  /** A 4-partition frame with NULLs in its first sort key and unique
+    * (k, v) pairs, so every ordering of it below is total. */
+  private def unordered = spark.range(0, 240, 1, 4).select(
+      expr("CASE WHEN id % 7 = 0 THEN NULL ELSE id % 5 END").as("k"),
+      ($"id" * 37 % 240).as("v"), ($"id" % 3).cast("string").as("s"))
+
+  /** The bytes of `df`'s own plan, its global sort included, written
+    * through `coalesce(1)` as one part file. */
+  private def coalescedBytes(df: DataFrame): Array[Byte] = {
+    val dir = s"$tmpDir/coalesced"
+    df.coalesce(1).write.option("header", "true").csv(dir)
+    val part = new java.io.File(dir).listFiles()
+      .filter(f => f.getName.startsWith("part-") && f.getName.endsWith(".csv"))
+    assert(part.length == 1)
+    Files.readAllBytes(part.head.toPath)
+  }
+
+  test("writeCsvSingle sorts a top-level orderBy in its one task, same bytes") {
+    val sorted = unordered.orderBy(col("k").desc_nulls_last, col("v"))
+    val out = s"$tmpDir/sorted.csv"
+    val (ok, rec) = JobRecorder.recorded(spark)(Loader.writeCsvSingle(sorted, out))
+    assert(ok)
+    assert(Files.readAllBytes(Paths.get(out)).sameElements(coalescedBytes(sorted)))
+    val physical = rec.queries.map(_.executedPlan.toString).mkString("\n")
+    assert(!physical.contains("rangepartitioning"), physical)
+    val lines = Files.readAllLines(Paths.get(out))
+    assert(lines.size == 241 && lines.get(1).startsWith("4,") &&
+      lines.get(240).startsWith(","))
+  }
+
+  test("writeCsvSingle keeps the order of a sort below the top node") {
+    val df = unordered.orderBy(col("v").desc).select(col("v"), col("s"))
+    val out = s"$tmpDir/projected.csv"
+    assert(Loader.writeCsvSingle(df, out))
+    val lines = Files.readAllLines(Paths.get(out))
+    assert(lines.get(0) == "v,s")
+    assert(lines.subList(1, lines.size).toArray.toSeq.map(
+      _.toString.takeWhile(_ != ',').toLong) == (239L to 0L by -1L))
   }
 
   test("parquet + json extractors read with projection") {

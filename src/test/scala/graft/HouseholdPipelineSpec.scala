@@ -1,7 +1,11 @@
 package graft
 
 import java.nio.file.{Files, Paths}
+import org.apache.spark.sql.catalyst.plans.logical.{Aggregate, Join}
+import org.apache.spark.sql.execution.columnar.InMemoryRelation
+import graft.operators.{FeatureQuery, Processor}
 import graft.pipeline.HouseholdPipeline
+import graft.sources.Extractor
 
 /** End-to-end reference-parity run: three reference-shaped CSVs in, one CSV
   * out; golden values hand-computed (the integration analogue of
@@ -97,5 +101,73 @@ class HouseholdPipelineSpec extends SparkSpec {
     val lines = Files.readAllLines(Paths.get(out2))
     assert(lines.subList(1, lines.size()).toArray.toSeq == Seq(
       "1,2,0,0 to 50,30-39,101 to 200,CA,22.25,5.0,4", golden(1)))
+  }
+
+  test("a household whose before-window amounts are all NULL survives " +
+       "run and runFused; a NULL date counts only in total_transactions") {
+    val dir = Files.createTempDirectory("graft-hh").toString
+    val (dem, hh, _) = writeFixtures(dir)
+    // hh4 again, plus hh5 (i7): its one before-window row has no amount,
+    // one row has no date
+    Files.writeString(Paths.get(hh), Files.readString(Paths.get(hh)) + "5,i7\n")
+    val trans = s"$dir/nulls.csv"
+    Files.writeString(Paths.get(trans),
+      """individual_id,date,transaction_amount
+        |i4,2021-01-01 00:00:00,4.5
+        |i4,2021-09-13 23:59:59,6.25
+        |i7,2021-09-02 10:00:00,
+        |i7,2021-09-08 10:00:00,3.5
+        |i7,,1.25
+        |""".stripMargin)
+    val expected = Seq(golden(1), "5,4,1,101 to 150,40-49,201 to 500,AZ,,3.5,2")
+    for ((name, runIt) <- Seq[(String, String => Boolean)](
+        "run" -> (HouseholdPipeline.run(spark, dem, hh, trans, _)),
+        "runFused" -> (HouseholdPipeline.runFused(spark, dem, hh, trans, _)))) {
+      val out = s"$dir/$name.csv"
+      assert(runIt(out), name)
+      val lines = Files.readAllLines(Paths.get(out))
+      assert(lines.subList(1, lines.size()).toArray.toSeq == expected, name)
+    }
+    // the one-aggregate plan equals the per-feature fold-join
+    val d = Extractor.readCsv(spark, dem, HouseholdPipeline.demographicsSchema)
+    val m = Extractor.readCsv(spark, hh, HouseholdPipeline.hhIndSchema)
+    val t = Extractor.readCsv(spark, trans, HouseholdPipeline.transactionsSchema)
+    val start = Processor.parseTimestampLiteral(HouseholdPipeline.CampaignStart)
+    val end = Processor.parseTimestampLiteral(HouseholdPipeline.CampaignEnd)
+    val joined = Processor.toTimestampCol(
+      Processor.join(t, m, "individual_id"), "date")
+    val perFeature = FeatureQuery.assemble(d, Seq(
+      FeatureQuery.totalBefore(joined, "hhid", "date", "transaction_amount", start),
+      FeatureQuery.totalDuring(joined, "hhid", "date", "transaction_amount",
+        start, end),
+      FeatureQuery.txnCount(joined, "hhid", "transaction_amount")), "hhid")
+    val shared = FeatureQuery.householdFeatures(d, m, t, "individual_id",
+      "hhid", "date", "transaction_amount", start, end)
+    assert(shared.columns.toSeq == perFeature.columns.toSeq)
+    assert(shared.collect().toSeq == perFeature.collect().toSeq)
+  }
+
+  /** Jobs of one `run` pass over the fixtures: the two dimension
+    * broadcasts, the aggregate's shuffle stage and the write. The
+    * three-aggregate fold-join over a persisted join ran 13. */
+  private val MaxRunJobs = 4
+
+  test("one run pass: at most 4 jobs, one aggregate over the joined " +
+       "input, no cached relation, no range exchange") {
+    val dir = Files.createTempDirectory("graft-hh").toString
+    val (dem, hh, trans) = writeFixtures(dir)
+    val (ok, rec) = JobRecorder.recorded(spark)(
+      HouseholdPipeline.run(spark, dem, hh, trans, s"$dir/budget.csv"))
+    assert(ok)
+    assert(rec.jobs.size <= MaxRunJobs,
+      s"${rec.jobs.size} jobs (bound $MaxRunJobs): ${rec.listing}")
+    val plans = rec.queries.toSeq.map(_.optimizedPlan)
+    val aggs = plans.flatMap(_.collect { case a: Aggregate => a })
+    assert(aggs.size == 1, plans.mkString("\n"))
+    assert(aggs.head.child.exists(_.isInstanceOf[Join]), aggs.head)
+    assert(plans.forall(_.collect { case r: InMemoryRelation => r }.isEmpty))
+    val physical = rec.queries.map(_.executedPlan.toString).mkString("\n")
+    assert(!physical.contains("rangepartitioning"), physical)
+    assert(!physical.contains("InMemoryTableScan"), physical)
   }
 }

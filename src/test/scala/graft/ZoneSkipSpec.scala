@@ -74,6 +74,21 @@ class ZoneSkipSpec extends SparkSpec {
     } finally ZoneRegistry.clear()
   }
 
+  test("a metadata table written before column tags registers untagged " +
+       "and still prunes") {
+    val (table, meta) = layout()
+    try {
+      val untagged = s"$meta-untagged"
+      spark.read.parquet(meta).drop("col_tag").write.parquet(untagged)
+      ZoneRegistry.clear()
+      Zones.registerFromMetadata(spark, table, untagged)
+      val Seq(manifest) = ZoneRegistry.entries.values.toSeq
+      assert(manifest.tags.isEmpty && manifest.files.size == 4)
+      val files = scannedFiles(spark.read.parquet(table).filter(col("k") >= 60))
+      assert(files.length == 2, files.toString)
+    } finally ZoneRegistry.clear()
+  }
+
   test("a window intersecting no zone yields an empty frame, not a throw") {
     val (table, _) = layout()
     try {
