@@ -93,7 +93,7 @@ object Expressions {
     * for MinHash permutations and SimHash token hashing. Public-domain
     * algorithm (Fowler–Noll–Vo).
     */
-  @inline private[functions] def fnv1a64(s: UTF8String, seed: Long): Long = {
+  @inline private[graft] def fnv1a64(s: UTF8String, seed: Long): Long = {
     var h = 0xcbf29ce484222325L ^ seed
     val bytes = s.getBytes
     var i = 0

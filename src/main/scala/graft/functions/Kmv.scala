@@ -59,6 +59,18 @@ object Kmv {
     out.toSeq
   }
 
+  /** The unbiased KMV estimate of a bottom-`k` sketch: its size below k
+    * distinct hashes, else (k-1)·2^64 / u_k with u_k the k-th smallest
+    * hash read unsigned. The driver-side twin of the SQL form
+    * [[graft.Queries83.ndvEstimate]], which the DuckDB oracles replay;
+    * the two are pinned equal. */
+  private[graft] def ndvEstimate(sketch: Seq[Long], k: Int): Long =
+    if (sketch.size < k) sketch.size.toLong
+    else {
+      val u = BigInt(sketch(k - 1))
+      ((BigInt(k - 1) << 64) / (if (u < 0) u + (BigInt(1) << 64) else u)).toLong
+    }
+
   /** Buffer: the bottom-k distinct hashes, unsigned-ascending. */
   class SketchAgg(k: Int) extends Aggregator[Long, Seq[Long], Seq[Long]] {
     require(k >= 2, s"kmv: k must be >= 2, got $k")

@@ -143,7 +143,7 @@ object Zones {
     * comparison order [[ZoneSkipRule]] may use (see
     * [[ZoneRegistry.ZoneManifest]]).
     */
-  private[plans] def tagOf(dt: org.apache.spark.sql.types.DataType)
+  private[graft] def tagOf(dt: org.apache.spark.sql.types.DataType)
       : String = {
     import org.apache.spark.sql.types._
     dt match {
@@ -155,22 +155,12 @@ object Zones {
   }
 
   /** `fileCol` defaults to the scan-time `input_file_name()`; a caller
-    * that has already CAPTURED the file key as a real column (e.g. a
-    * commit path running several analyzers over one cached read —
-    * `input_file_name()` is empty over an InMemoryRelation) passes
+    * that has already CAPTURED the file key as a real column
+    * (`input_file_name()` is empty over an InMemoryRelation) passes
     * that column instead. Output is identical either way.
     */
   def analyzeFiles(df: DataFrame, cols: Seq[String],
                    fileCol: org.apache.spark.sql.Column = input_file_name())
-      : DataFrame =
-    zonesUnsorted(df, cols, fileCol).orderBy(col("file"), col("col_name"))
-
-  /** [[analyzeFiles]] without its global sort — for a caller that
-    * collects the driver-sized result and orders it there (a commit's
-    * maintenance), sparing the sort's sampling job and range shuffle.
-    */
-  private[graft] def zonesUnsorted(df: DataFrame, cols: Seq[String],
-                                   fileCol: org.apache.spark.sql.Column)
       : DataFrame = {
     require(cols.nonEmpty, "Zones.analyzeFiles: no columns")
     // min/max in the column's NATIVE type, rendered after — a string
@@ -190,6 +180,7 @@ object Zones {
     wide.select(col("file"), explode(expr(rows)).as("z"))
       .select(col("file"), col("z.col_name"), col("z.min_repr"),
         col("z.max_repr"), col("z.col_tag"))
+      .orderBy(col("file"), col("col_name"))
   }
 
   /** Per-file DICTIONARY manifest of `df` over `cols`: for every file
@@ -219,15 +210,7 @@ object Zones {
   def analyzeDictFiles(df: DataFrame, cols: Seq[String],
                        maxDict: Int = 256,
                        fileCol: org.apache.spark.sql.Column =
-                         input_file_name()): DataFrame =
-    dictsUnsorted(df, cols, maxDict, fileCol)
-      .orderBy(col("file"), col("col_name"))
-
-  /** [[analyzeDictFiles]] without its global sort (see [[zonesUnsorted]]). */
-  private[graft] def dictsUnsorted(df: DataFrame, cols: Seq[String],
-                                   maxDict: Int,
-                                   fileCol: org.apache.spark.sql.Column)
-      : DataFrame = {
+                         input_file_name()): DataFrame = {
     require(cols.nonEmpty, "Zones.analyzeDictFiles: no columns")
     require(maxDict >= 1, "Zones.analyzeDictFiles: bad maxDict")
     val capped = udaf(new CappedSetAgg(maxDict))
@@ -243,7 +226,7 @@ object Zones {
         .filter(col("dict_repr").isNotNull)
         .select(col("file"), lit(c).as("col_name"), col("dict_repr"),
           lit(tagOf(df.schema(c).dataType)).as("col_tag"))
-    }.reduce(_ unionByName _)
+    }.reduce(_ unionByName _).orderBy(col("file"), col("col_name"))
   }
 
   /** Size-capped exact distinct set: a typed, MERGEABLE aggregate whose
@@ -286,21 +269,14 @@ object Zones {
         .ExpressionEncoder[Option[Seq[String]]]()
   }
 
-  /** Driver-side twin of the `fnv_hash` expression — the probe hashing
-    * [[ZoneRegistry.BloomSketch.mightContain]] runs must agree bit-for-
-    * bit with the authoring hashing [[analyzeBloomFiles]] ran in Spark.
+  /** The `fnv_hash` expression's FNV-1a of a driver string — the probe
+    * hashing [[ZoneRegistry.BloomSketch.mightContain]] runs must agree
+    * bit-for-bit with the authoring hashing [[analyzeBloomFiles]] ran in
+    * Spark, so both call [[graft.functions.Expressions.fnv1a64]].
     */
-  private[graft] def fnvString(s: String, seed: Long): Long = {
-    var h = 0xcbf29ce484222325L ^ seed
-    val bytes = s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
-    var i = 0
-    while (i < bytes.length) {
-      h ^= (bytes(i) & 0xffL)
-      h *= 0x100000001b3L
-      i += 1
-    }
-    h
-  }
+  private[graft] def fnvString(s: String, seed: Long): Long =
+    graft.functions.Expressions.fnv1a64(
+      org.apache.spark.unsafe.types.UTF8String.fromString(s), seed)
 
   /** Per-file BLOOM manifest of `df` over `cols`: one row per
     * (file, column, nonzero bitset word), `numBits` bits and
@@ -323,15 +299,7 @@ object Zones {
                         numBits: Int = 1 << 16,
                         numHashes: Int = 5,
                         fileCol: org.apache.spark.sql.Column =
-                          input_file_name()): DataFrame =
-    bloomsUnsorted(df, cols, numBits, numHashes, fileCol)
-      .orderBy(col("file"), col("col_name"), col("w"))
-
-  /** [[analyzeBloomFiles]] without its global sort (see [[zonesUnsorted]]). */
-  private[graft] def bloomsUnsorted(df: DataFrame, cols: Seq[String],
-                                    numBits: Int, numHashes: Int,
-                                    fileCol: org.apache.spark.sql.Column)
-      : DataFrame = {
+                          input_file_name()): DataFrame = {
     require(cols.nonEmpty, "Zones.analyzeBloomFiles: no columns")
     require(numBits >= 64 && numBits % 64 == 0,
       "Zones.analyzeBloomFiles: numBits must be a positive multiple of 64")
@@ -372,7 +340,7 @@ object Zones {
           lit(numBits).as("num_bits"), lit(numHashes).as("num_hashes"),
           col("w"), col("word"),
           lit(tagOf(df.schema(c).dataType)).as("col_tag"))
-    }.reduce(_ unionByName _)
+    }.reduce(_ unionByName _).orderBy(col("file"), col("col_name"), col("w"))
   }
 
   /** Persist a zone manifest as the table's parquet metadata table. */
@@ -478,13 +446,13 @@ object Zones {
   }
 
   // the columns the loaders below read of each analyzer's output, in
-  // its column order
-  private val ZoneRowSchema = StructType.fromDDL(
+  // its column order (also the layouts a commit writes its metadata in)
+  private[graft] val ZoneRowSchema = StructType.fromDDL(
     "file STRING, col_name STRING, min_repr STRING, max_repr STRING, " +
     "col_tag STRING")
-  private val DictRowSchema = StructType.fromDDL(
+  private[graft] val DictRowSchema = StructType.fromDDL(
     "file STRING, col_name STRING, dict_repr ARRAY<STRING>, col_tag STRING")
-  private val BloomRowSchema = StructType.fromDDL(
+  private[graft] val BloomRowSchema = StructType.fromDDL(
     "file STRING, col_name STRING, num_bits INT, num_hashes INT, w INT, " +
     "word BIGINT, col_tag STRING")
 

@@ -570,23 +570,31 @@ object Loader {
       versions.lastOption.map(v => readManifest(fs, s"$baseDir/v$v")))
   }
 
+  /** What [[writeBuckets]] wrote: the frame's schema (data columns plus
+    * the int bucket column) and, when the write maintained metadata, the
+    * per-file partials its tasks folded ([[MetaFold]]). */
+  private final case class Written(
+      schema: org.apache.spark.sql.types.StructType,
+      partials: Seq[MetaFold.FilePartial])
+
   /** What a verb's stage function leaves in the attempt dir, and what
     * the commit path must add: the new manifest (its `ts` is stamped by
     * [[commit]]), the `_dv` set the version carries (the complete
     * applicable set — see the DV note above [[dvSuffix]]), and the
-    * schema of the bucket data the stage wrote, if it wrote any
-    * ([[writeBuckets]]'s result — what the maintenance reads it under).
+    * bucket data the stage wrote, if it wrote any ([[writeBuckets]]'s
+    * result — what the maintenance metadata is built from).
     */
   private final case class Staged(
       manifest: Manifest,
       dv: Option[DataFrame],
-      written: Option[org.apache.spark.sql.types.StructType] = None)
+      written: Option[Written] = None)
 
   /** The one commit path of every snapshot-table verb. `stage` writes
     * the verb's data files into a private attempt dir
     * (`_attempt/<uuid>`: racing writers never scribble on each other's
     * files); then, inside the same dir, this writes the maintenance
-    * metadata over ONLY the files the stage wrote ([[writeMaintenance]]),
+    * metadata of ONLY the files the stage wrote, from the partials the
+    * write tasks folded ([[writeMaintenance]]: driver work, no job),
     * the `_dv` set, and the manifest with its strictly monotone commit
     * time ([[nextCommitTs]] against the head), and publishes the whole
     * dir as slot `v<h.next>` in ONE atomic no-overwrite rename — the
@@ -603,10 +611,11 @@ object Loader {
     * `v<seq>` appears atomically complete or not at all.
     *
     * After the publish the driver registries are refreshed for the new
-    * version — from the metadata rows just computed when the stage
-    * wrote data (a commit never reads back what it wrote), from disk
-    * when it wrote none, and not at all without `maintain`. Returns the
-    * committed version dir.
+    * version — from the metadata rows just built when the stage wrote
+    * data (a commit never reads back what it wrote), from disk when it
+    * wrote none, and not at all without `maintain`; holder versions
+    * other than the new one are read from disk ([[registerSnapshot]]).
+    * Returns the committed version dir.
     */
   private def commit(spark: org.apache.spark.sql.SparkSession, h: Head,
                      maintain: Option[Maintain])
@@ -621,7 +630,7 @@ object Loader {
         val staged = stage(attempt.toString)
         val fresh = (for (mt <- maintain; w <- staged.written)
           yield writeMaintenance(spark, mt, attempt.toString, next, w))
-          .getOrElse(Map.empty[String, MetaRows])
+          .getOrElse(Map.empty[String, MetaFold.MetaRows])
         staged.dv.foreach(_.write.mode(SaveMode.Overwrite)
           .parquet(s"$attempt/$DvDirName"))
         writeManifest(fs, attempt.toString,
@@ -1253,8 +1262,11 @@ object Loader {
     * column; each bucket's rows land in one task, are sorted by the
     * declared within-bucket file order, and roll to a new file at
     * `maxRecordsPerFile`, so every rolled file covers a contiguous range
-    * of that order — tight zones within the bucket. Returns the schema
-    * of the frame written (data columns plus the bucket column).
+    * of that order — tight zones within the bucket. With any metadata
+    * kind maintained, the write goes through [[FoldingParquetFormat]]:
+    * each write task folds its files' zones, stats, dictionaries and
+    * Blooms as it writes them. Returns the schema of the frame written
+    * (data columns plus the bucket column) and those partials.
     *
     * The file order: clusterBy sorts one dimension tight; zorderBy sorts
     * by the 16-bit-per-dim Morton interleave of TWO dimensions (linear
@@ -1269,8 +1281,7 @@ object Loader {
     * required partition ordering is already satisfied (no re-sort).
     */
   private def writeBuckets(df: DataFrame, attempt: String,
-                           maintain: Option[Maintain])
-      : org.apache.spark.sql.types.StructType = {
+                           maintain: Option[Maintain]): Written = {
     import org.apache.spark.sql.functions.{broadcast, col, expr,
       max => fmax, min => fmin}
     val bucketed = df.repartition(col(BucketCol))
@@ -1290,11 +1301,13 @@ object Loader {
       case None => maintain.flatMap(_.clusterBy).fold(bucketed)(
         c => bucketed.sortWithinPartitions(col(BucketCol), col(c)))
     }
-    val w = sorted.write.mode(SaveMode.Overwrite)
-    maintain.flatMap(_.maxRecordsPerFile)
-      .fold(w)(m => w.option("maxRecordsPerFile", m.toString))
-      .partitionBy(BucketCol).parquet(attempt)
-    sorted.schema
+    val plain = sorted.write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
+    val w = maintain.flatMap(_.maxRecordsPerFile)
+      .fold(plain)(m => plain.option("maxRecordsPerFile", m.toString))
+    Written(sorted.schema, maintain.filter(MetaFold.maintains).fold {
+      w.parquet(attempt); Seq.empty[MetaFold.FilePartial]
+    }(mt => MetaFold.folding(df.sparkSession, mt)(opts =>
+      w.format(MetaFold.Format).options(opts).save(attempt))))
   }
 
   /** Commit of every bucket-REWRITING transaction with a keyed
@@ -2076,191 +2089,88 @@ object Loader {
     } finally { matched.unpersist(); () }
   }
 
-  /** One maintenance kind's metadata rows as a commit computed them:
-    * the analyzer's schema and its rows, sorted — exactly the content
-    * of the version's `_zones` / `_stats` / `_dicts` / `_blooms` dir.
-    * Driver-sized by construction: ≤ files × columns zone and dict
-    * rows, ≤ bloomBits/64 words per file and column, one stats row per
-    * bucket — the rows registration collects anyway.
-    */
-  private final case class MetaRows(
-      schema: org.apache.spark.sql.types.StructType,
-      rows: Seq[org.apache.spark.sql.Row]) {
-    def toDF(spark: org.apache.spark.sql.SparkSession): DataFrame = {
-      import scala.jdk.CollectionConverters._
-      spark.createDataFrame(rows.asJava, schema)
-    }
-  }
-
-  /** One commit's maintenance metadata, from one pass over ONLY the
-    * files the commit wrote (the staged `attemptDir`) — history is
-    * never rescanned: per-file zone rows, per-bucket mergeable wide
-    * stats, per-file dictionaries and Blooms. Each kind's aggregate is
-    * collected once, sorted on the driver (so the metadata files are
-    * deterministic without a global sort's sampling job and range
-    * shuffle), and written from those rows as one part file INSIDE the
+  /** One commit's maintenance metadata, built on the driver from the
+    * partials the write tasks folded ([[writeBuckets]] through
+    * [[MetaFold]]) — no job reads the attempt back, history is never
+    * rescanned: per-file zone rows, per-bucket mergeable wide stats
+    * (each bucket's file partials merged by the `mergeWide` algebra),
+    * per-file dictionaries and Blooms. Only files in the attempt's
+    * listing count; a listed file without a partial throws, before the
+    * publish, so the commit deletes its attempt. Each kind's rows are
+    * keyed by the path its file WILL have once the attempt lands on its
+    * commit slot (`finalDir`), sorted by file and column (stats by
+    * bucket), and written from the driver as one part file INSIDE the
     * attempt (underscore dirs are invisible to Spark data listings), so
     * the publish rename commits data + metadata + manifest in one
     * atomic step. The rows are returned, keyed by metadata dir name:
     * the commit registers its published version from them
-    * ([[registerSnapshot]]) instead of reading them back.
-    *
-    * `written` is the schema of the frame the commit wrote (data
-    * columns plus the int bucket column); the attempt is read under it,
-    * so the read needs no footer-inference job. File-keyed metadata
-    * (zones, dicts, Blooms) is analyzed while the files still live at
-    * the attempt path, so the `file` keys are rewritten to the path
-    * the files WILL have once the attempt lands on its commit slot
-    * (`finalDir`) — the registered keys then match the committed
-    * listing exactly.
+    * ([[registerSnapshot]]).
     */
   private def writeMaintenance(spark: org.apache.spark.sql.SparkSession,
                                mt: Maintain, attemptDir: String,
-                               finalDir: String,
-                               written: org.apache.spark.sql.types.StructType)
-      : Map[String, MetaRows] = {
-    import org.apache.spark.sql.Row
-    import org.apache.spark.sql.functions.{col, input_file_name, lit,
-      regexp_replace}
-    val nKinds = Seq(mt.zoneCols, mt.statCols, mt.dictCols, mt.bloomCols)
-      .count(_.nonEmpty)
-    if (nKinds == 0) return Map.empty
-    // one read feeds every kind: the file key is captured as a REAL
-    // column BEFORE caching (input_file_name() is empty over an
-    // InMemoryRelation — that asymmetry is why the analyzers take the
-    // pre-captured column), the commit-churn-sized input is cached for
-    // the duration of the maintenance, and released before returning.
-    // Single-kind commits skip the cache: nothing is reused. The cache
-    // holds ONLY the union of analyzed columns (+ bucket + file key) —
-    // a full-width cache of a wide table would scan columns no
-    // analyzer reads.
-    val needed = ((mt.zoneCols ++ mt.statCols ++ mt.dictCols ++
-      mt.bloomCols) :+ BucketCol).distinct
-    val raw = spark.read
-      .schema(org.apache.spark.sql.types.StructType(needed.map(written(_))))
-      .parquet(attemptDir)
-      .withColumn("__gfile", input_file_name())
-      .select(("__gfile" +: needed).map(col): _*)
-    val newVer =
-      if (nKinds >= 2) raw.persist(
-        org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      else raw
-    val fkey = col("__gfile")
-    val aPath = new org.apache.hadoop.fs.Path(attemptDir)
-      .toUri.getPath
-    val fPath = new org.apache.hadoop.fs.Path(finalDir).toUri.getPath
-    def rekey(df: DataFrame): DataFrame =
-      df.withColumn("file", regexp_replace(col("file"),
-        lit(java.util.regex.Pattern.quote(aPath)),
-        lit(java.util.regex.Matcher.quoteReplacement(fPath))))
-    val byFileCol = Ordering.by((r: Row) => (r.getString(0), r.getString(1)))
-    try {
-      // the ≤4 kinds are INDEPENDENT (collect, then write) pairs over
-      // the one cached input, each to its own metadata dir — submitted
-      // concurrently (optimization guide §2.6) so each job's
-      // scheduling + commit tail overlaps the next job's work instead
-      // of serializing 4 × (plan + schedule + commit) floors on
-      // commit-churn-sized data. Concurrent first touch of the cache
-      // is safe: the block manager's per-block get-or-compute lock
-      // makes exactly one task compute each cached partition, so the
-      // cache BUILD itself spreads across the concurrent jobs. All
-      // kinds are awaited before the commit proceeds (a half-flying
-      // write must never outlive the attempt), and the first failure
-      // is rethrown after every kind has settled.
-      def kind(dir: String, order: Ordering[Row])(analyzed: => DataFrame)
-          : () => (String, MetaRows) =
-        labeledTask(spark, dir.stripPrefix("_")) {
-          val df = analyzed
-          val m = MetaRows(df.schema, df.collect().toSeq.sorted(order))
-          m.toDF(spark).coalesce(1).write.mode(SaveMode.Overwrite)
-            .parquet(s"$attemptDir/$dir")
-          dir -> m
-        }
-      val kinds = Seq(
-        Option.when(mt.zoneCols.nonEmpty)(kind("_zones", byFileCol) {
-          rekey(graft.plans.Zones.zonesUnsorted(newVer, mt.zoneCols,
-            fkey))
-        }),
-        Option.when(mt.statCols.nonEmpty)(kind("_stats",
-            Ordering.by((r: Row) => r.getInt(0))) {
-          graft.operators.StatsPlanner.analyzeWideBy(
-            newVer, BucketCol, mt.statCols.map(c => c -> c))
-        }),
-        Option.when(mt.dictCols.nonEmpty)(kind("_dicts", byFileCol) {
-          rekey(graft.plans.Zones.dictsUnsorted(newVer, mt.dictCols,
-            mt.dictMax, fkey))
-        }),
-        Option.when(mt.bloomCols.nonEmpty)(kind("_blooms",
-            Ordering.by((r: Row) =>
-              (r.getString(0), r.getString(1), r.getInt(4)))) {
-          rekey(graft.plans.Zones.bloomsUnsorted(newVer, mt.bloomCols,
-            mt.bloomBits, mt.bloomHashes, fkey))
-        })).flatten
-      runAllConcurrent(kinds).toMap
-    } finally { if (nKinds >= 2) { newVer.unpersist(); () } }
+                               finalDir: String, written: Written)
+      : Map[String, MetaFold.MetaRows] = {
+    if (!MetaFold.maintains(mt)) return Map.empty
+    val fs = fsFor(attemptDir, spark)
+    val byKey = written.partials.map(p => p.key -> p).toMap
+    val files = fs.listStatus(new org.apache.hadoop.fs.Path(attemptDir)).toSeq
+      .filter(_.getPath.getName.startsWith(s"$BucketCol="))
+      .flatMap(d => graft.plans.Zones.partFiles(fs, d.getPath))
+      .map(st => MetaFold.keyOf(st.getPath)).sorted
+      .map { k =>
+        (fs.makeQualified(new org.apache.hadoop.fs.Path(s"$finalDir/$k"))
+           .toUri.toString,
+         BucketDir.findFirstMatchIn(k).get.group(1).toInt,
+         byKey.getOrElse(k, throw new IllegalStateException(
+           s"writeMaintenance: no metadata partial for written file $k " +
+           s"under $attemptDir")))
+      }
+    val kinds = MetaFold.metaRows(mt, written.schema,
+      statsSchema(spark, written.schema, mt.statCols), files)
+    kinds.foreach { case (dir, m) =>
+      MetaFold.writeRows(spark, s"$attemptDir/$dir", m)
+    }
+    kinds.toMap
   }
 
-  // shared daemon pool for the concurrent metadata actions above and
-  // in registerSnapshot — sized to the maintenance kind count (4), not
-  // a tunable: the point is overlapping a handful of independent tiny
-  // jobs' scheduling floors (guide §2.6), not parallelism for data
-  private lazy val maintPool = java.util.concurrent.Executors
-    .newFixedThreadPool(4, (r: Runnable) => {
-      val t = new Thread(r, "graft-maintenance")
-      t.setDaemon(true)
-      t
-    })
+  /** The `_stats` layout over a table schema that carries the bucket
+    * column: [[graft.operators.StatsPlanner.analyzeWideBy]]'s output
+    * schema, from an analysis (no job). */
+  private def statsSchema(spark: org.apache.spark.sql.SparkSession,
+                          schema: org.apache.spark.sql.types.StructType,
+                          cols: Seq[String])
+      : org.apache.spark.sql.types.StructType =
+    graft.operators.StatsPlanner.analyzeWideBy(spark.createDataFrame(
+        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema),
+      BucketCol, cols.map(c => c -> c)).schema
 
-  /** Wrap a pool task so its jobs carry a readable description and
-    * call site (guide §1.5). Both are thread-local; setting them per
-    * task also clears the stale call site a pool thread inherits from
-    * whatever thread happened to create it (InheritableThreadLocal).
-    */
-  private def labeledTask[T](spark: org.apache.spark.sql.SparkSession,
-                             tag: String)(f: => T): () => T = () => {
-    spark.sparkContext.setJobDescription(s"maintenance: $tag")
-    spark.sparkContext.setCallSite(s"maintenance: $tag")
+  /** Run `f` with its jobs described and called `maintenance: <tag>`,
+    * then restore the caller's description and call site. */
+  private def labeled[T](spark: org.apache.spark.sql.SparkSession,
+                         tag: String)(f: => T): T = {
+    val sc = spark.sparkContext
+    val keys = Seq("spark.job.description", "callSite.short", "callSite.long")
+    val prior = keys.map(sc.getLocalProperty)
+    sc.setJobDescription(s"maintenance: $tag")
+    sc.setCallSite(s"maintenance: $tag")
     try f
-    finally {
-      spark.sparkContext.setJobDescription(null)
-      spark.sparkContext.clearCallSite()
-    }
+    finally keys.zip(prior).foreach { case (k, v) => sc.setLocalProperty(k, v) }
   }
-
-  /** Run independent actions concurrently on [[maintPool]], await ALL
-    * of them, then rethrow the first failure (if any); results in
-    * action order. One action runs inline — nothing to overlap.
-    */
-  private def runAllConcurrent[T](actions: Seq[() => T]): Seq[T] =
-    if (actions.lengthCompare(1) <= 0) actions.map(_.apply())
-    else {
-      val futs = actions.map(a =>
-        maintPool.submit(new java.util.concurrent.Callable[T] {
-          def call(): T = a()
-        }))
-      val done = futs.map(f =>
-        try Right(f.get())
-        catch {
-          case e: java.util.concurrent.ExecutionException =>
-            Left(e.getCause)
-        })
-      done.collectFirst { case Left(e) => throw e }
-      done.collect { case Right(t) => t }
-    }
 
   /** Refresh the driver-side stats/zone registries for a committed
     * snapshot version from its DURABLE maintenance metadata — the step
     * a restarted driver (or a reader session that never ran the
     * stream) calls to make `readSnapshot(versionDir)` plans zone-prune
     * and broadcast from measured statistics. Bounded driver work: one
-    * manifest read, one scan of ≤ #live-version stats rows (one per
-    * bucket), one scan of the referenced zone metadata tables — never
-    * the data.
+    * manifest read, one scan of the holder versions' stats rows (≤ one
+    * per bucket), one scan per kind of the referenced zone, dictionary
+    * and Bloom tables — never the data.
     *
     * Current-stats resolution: bucket `b`'s stats row lives in
     * `_stats/v<version holding b>` — exactly the copy-on-write rule the
-    * data files follow — and the merged result equals a full re-ANALYZE
-    * of the resolved snapshot bit-for-bit (the q211 merge algebra).
+    * data files follow — and the rows merge on the driver by the
+    * `mergeWide` algebra ([[MetaFold.tableStats]]), which equals a full
+    * re-ANALYZE of the resolved snapshot bit-for-bit (q211's proof).
     * Zone rows are file-keyed, so rows for superseded files are simply
     * never consulted.
     */
@@ -2270,14 +2180,15 @@ object Loader {
 
   /** [[registerSnapshot]] for the version a commit just published:
     * `fresh` holds that version's own metadata rows as
-    * [[writeMaintenance]] computed them (keyed by metadata dir name),
-    * and they stand in for its dirs — a commit never reads back the
+    * [[writeMaintenance]] built them (keyed by metadata dir name), and
+    * they stand in for its dirs — a commit never reads back the
     * metadata it wrote. Holding versions other than `versionDir` are
-    * read from disk as usual; the registered result is identical.
+    * read from disk, and both kinds of stats rows go through the same
+    * driver merge; the registered result is identical.
     */
   private def registerSnapshot(spark: org.apache.spark.sql.SparkSession,
                                versionDir: String, maintain: Maintain,
-                               fresh: Map[String, MetaRows]): Unit = {
+                               fresh: Map[String, MetaFold.MetaRows]): Unit = {
     import org.apache.spark.sql.functions.col
     val fs = fsFor(versionDir, spark)
     val vPath = new org.apache.hadoop.fs.Path(versionDir)
@@ -2285,7 +2196,7 @@ object Loader {
     val man = readManifest(fs, versionDir)
     val dirs = holderDirs(base, man)
     val versions = bucketHolders(man).map(_._2).distinct.sorted
-    def freshOf(v: Long, kind: String): Option[MetaRows] =
+    def freshOf(v: Long, kind: String): Option[MetaFold.MetaRows] =
       if (s"v$v" == vPath.getName) fresh.get(kind) else None
     // metadata lives INSIDE each version dir (published atomically
     // with it); a version committed without a kind has no such dir
@@ -2299,47 +2210,48 @@ object Loader {
       versions.filter(freshOf(_, kind).isEmpty).flatMap(metaOf(_, kind))
     def hasFresh(kind: String): Boolean =
       versions.exists(freshOf(_, kind).isDefined)
-    // the two registry refreshes below are independent (disjoint
-    // registries, disjoint metadata dirs) — overlapped like the
-    // maintenance writes (guide §2.6), each being a couple of tiny
-    // metadata-table jobs plus driver fold work
-    val loadStats = Option.when(maintain.statCols.nonEmpty)(
-        labeledTask(spark, "register stats") {
-      val exprs = maintain.statCols.map(c => c -> c)
+    if (maintain.statCols.nonEmpty) {
+      val tz = spark.sessionState.conf.sessionLocalTimeZone
+      val types = maintain.statCols.map(man.schema(_).dataType)
       // holders, not just base pointers: a bucket's stats row set is
       // its base version's partial PLUS any extras versions' appendix
-      // partials — the mergeWide algebra combines them (tombstoned
-      // rows stay counted until the bucket rewrites, the same
-      // declared staleness deletion vectors already have)
-      val byVer = bucketHolders(man).groupBy(_._2)
-      // the analyzer's output schema over the recorded table schema (an
-      // analysis, no job): a read under it infers nothing from footers
-      lazy val statsSchema = graft.operators.StatsPlanner.analyzeWideBy(
-        spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          man.schema.add(BucketCol, org.apache.spark.sql.types.IntegerType)),
-        BucketCol, exprs).schema
-      val wide = versions.map { v =>
-        val bs = byVer(v).map(_._1).distinct
-        val partials = freshOf(v, "_stats").fold {
-          val sdir = metaOf(v, "_stats").getOrElse(sys.error(
-            s"registerSnapshot: version v$v of $base has no _stats " +
-            "metadata (was it written with statCols maintenance?)"))
-          spark.read.schema(statsSchema).parquet(graft.plans.Zones.partFiles(
-            fs, new org.apache.hadoop.fs.Path(sdir)).map(_.getPath.toString): _*)
-        }(_.toDF(spark))
-        partials.filter(col(BucketCol).isin(bs: _*))
-      }.reduce(_ unionByName _)
-      val stats = graft.operators.StatsPlanner.tableStatsFromWide(
-        graft.operators.StatsPlanner.mergeWide(wide, exprs.length), exprs)
-      graft.plans.StatsRegistry.registerRoots(dirs, stats)
-    })
-    val loadZones = Option.when(maintain.zoneCols.nonEmpty ||
-        maintain.dictCols.nonEmpty || maintain.bloomCols.nonEmpty)(
-        labeledTask(spark, "register zones") {
-      val kinds = Seq("_zones", "_dicts", "_blooms")
-      val kdirs = kinds.map(dirsOf)
-      if (kdirs.exists(_.nonEmpty) || kinds.exists(hasFresh))
+      // partials — the merge combines them (tombstoned rows stay
+      // counted until the bucket rewrites, the same declared staleness
+      // deletion vectors already have)
+      val bucketsOf = bucketHolders(man).groupBy(_._2)
+        .map { case (v, bs) => v -> bs.map(_._1).toSet }
+      val inMemory = versions.flatMap(v => freshOf(v, "_stats").toSeq
+        .flatMap(m => m.rows.filter(r => bucketsOf(v).contains(r.getInt(0)))
+          .map(MetaFold.statsOf(_, m.schema, types, tz))))
+      val onDisk = versions.filter(freshOf(_, "_stats").isEmpty)
+      val loaded = if (onDisk.isEmpty) Nil else {
+        // the analyzer's output schema over the recorded table schema:
+        // a read under it infers nothing from footers; ONE scan of every
+        // such version's stats rows
+        val schema = statsSchema(spark,
+          man.schema.add(BucketCol, org.apache.spark.sql.types.IntegerType),
+          maintain.statCols)
+        labeled(spark, "register stats") {
+          onDisk.map { v =>
+            val sdir = metaOf(v, "_stats").getOrElse(sys.error(
+              s"registerSnapshot: version v$v of $base has no _stats " +
+              "metadata (was it written with statCols maintenance?)"))
+            spark.read.schema(schema).parquet(graft.plans.Zones.partFiles(
+                fs, new org.apache.hadoop.fs.Path(sdir))
+                .map(_.getPath.toString): _*)
+              .filter(col(BucketCol).isin(bucketsOf(v).toSeq: _*))
+          }.reduce(_ unionByName _).collect().toSeq
+        }.map(MetaFold.statsOf(_, schema, types, tz))
+      }
+      graft.plans.StatsRegistry.registerRoots(dirs, MetaFold.tableStats(
+        inMemory ++ loaded, maintain.statCols, types, tz))
+    }
+    val kinds = Seq("_zones", "_dicts", "_blooms")
+    val kdirs = kinds.map(dirsOf)
+    if (Seq(maintain.zoneCols, maintain.dictCols, maintain.bloomCols)
+          .exists(_.nonEmpty) &&
+        (kdirs.exists(_.nonEmpty) || kinds.exists(hasFresh)))
+      labeled(spark, "register zones") {
         // rebaseTo: metadata rows record paths as of WRITE time, but
         // this layout may since have been relocated (restored backup,
         // cloned table, renamed mount) — reinterpret the location-
@@ -2349,9 +2261,7 @@ object Loader {
           kdirs(0), kdirs(1), kdirs(2), rebaseTo = Some(base),
           zoneRows = rowsOf("_zones"), dictRows = rowsOf("_dicts"),
           bloomRows = rowsOf("_blooms"))
-    })
-    runAllConcurrent(Seq(loadStats, loadZones).flatten)
-    ()
+      }
   }
 
   /** Single-file CSV for reference parity (`main.py:277` writes exactly one

@@ -17,11 +17,14 @@ class CommitJobCountSpec extends SparkSpec {
   import spark.implicits._
 
   /** Jobs of a warm full-bucket upsert on this table shape: 8 for the
-    * merge and staged write, 4 per maintained kind (3 for the aggregate's
-    * adaptive stages over the cached commit, 1 for the one-file write),
-    * the carried-DV probe, and 2 for the stats merge. The count follows the plans, not the timing. Reading back the
-    * version's own metadata made it 38. */
-  private val MaxCommitJobs = 27
+    * merge and the staged write, whose tasks also fold the zones, stats,
+    * dictionaries and Blooms, and 1 for the carried-DV probe; the
+    * metadata files are written and the stats merged on the driver.
+    * Six runs agreed. Analyzing the written files again took 16 more
+    * jobs and merging the stats 2, so the bound was 27 (AQE stage timing
+    * moved the analysis by a job); reading back the version's own
+    * metadata made it 38. */
+  private val CommitJobs = 9
 
   private val maintain = Loader.Maintain(
     zoneCols = Seq("score"), statCols = Seq("cents", "score"),
@@ -75,21 +78,21 @@ class CommitJobCountSpec extends SparkSpec {
     assert(readBack.isEmpty, s"read back its own metadata: $readBack")
     assert(rec.footerJobs.isEmpty,
       s"${rec.footerJobs.size} footer-inference jobs: ${rec.listing}")
-    assert(rec.jobs.size <= MaxCommitJobs,
-      s"${rec.jobs.size} jobs (bound $MaxCommitJobs): ${rec.listing}")
+    assert(rec.jobs.size === CommitJobs,
+      s"${rec.jobs.size} jobs (pinned $CommitJobs): ${rec.listing}")
   }
 
-  /** Jobs of each warm maintained verb on this table: the most seen in
-    * six runs when every verb still assembled its own commit. Measured
-    * there: update vectors 32–33, compaction 24, copy-on-write delete
-    * 28–29, MERGE INTO 32–34 (AQE stage timing moves a count down by a
-    * job or two, never up). One shared commit path must add no job. The
-    * DV delete ran 16 while it re-registered the head's unchanged
-    * metadata; it commits without registration and ran 6 in each of
-    * three runs. */
-  private val MaxVerbJobs = Map("deleteWhereVectors" -> 6,
-    "updateWhereVectors" -> 33, "compactSnapshot" -> 24, "deleteWhere" -> 29,
-    "mergeInto" -> 34)
+  /** Jobs of each warm maintained verb on this table, equal in each of
+    * six runs now that no aggregate is left in commit maintenance: the
+    * write tasks fold the metadata, and the driver writes it. While the
+    * commit analyzed its written files (16 jobs, 3 or 4 of them for the
+    * stats as AQE stage timing fell) and merged stats in 2 more, only
+    * maxima could be pinned: update vectors 33, compaction 24,
+    * copy-on-write delete 29, MERGE INTO 34. The DV delete writes no
+    * data file and registers nothing. */
+  private val VerbJobs = Map("deleteWhereVectors" -> 6,
+    "updateWhereVectors" -> 11, "compactSnapshot" -> 6, "deleteWhere" -> 8,
+    "mergeInto" -> 13)
 
   test("every warm maintained verb runs no more jobs than its pinned count") {
     import org.apache.spark.sql.functions.col
@@ -119,8 +122,8 @@ class CommitJobCountSpec extends SparkSpec {
     round(1L)
     val counted = round(2L)
     counted.foreach { case (verb, rec) =>
-      assert(rec.jobs.size <= MaxVerbJobs(verb),
-        s"$verb ran ${rec.jobs.size} jobs (bound ${MaxVerbJobs(verb)}): " +
+      assert(rec.jobs.size === VerbJobs(verb),
+        s"$verb ran ${rec.jobs.size} jobs (pinned ${VerbJobs(verb)}): " +
         rec.listing)
     }
   }

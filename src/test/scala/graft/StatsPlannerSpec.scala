@@ -29,6 +29,21 @@ class StatsPlannerSpec extends SparkSpec {
     assert(st.estimatedBytes(sup.schema) == st.rows * 12)
   }
 
+  test("the driver-side KMV estimate equals the SQL ndvEstimate") {
+    val rnd = new scala.util.Random(11)
+    def sketch(n: Int): Seq[Long] = Seq.fill(n)(rnd.nextLong()).distinct
+      .sortWith(java.lang.Long.compareUnsigned(_, _) < 0)
+    val cases = (for (k <- Seq(2, 16, 256); n <- Seq(0, 1, k - 1, k))
+      yield k -> sketch(n)) ++ Seq(
+        3 -> Seq(1L << 40, 1L << 50, Long.MinValue + 5L), // k-th reads unsigned
+        3 -> Seq(1L << 40, 1L << 50, 1L << 60))
+    cases.foreach { case (k, sk) =>
+      val sql = spark.range(1).select(typedLit(sk).as("sk"))
+        .select(expr(graft.Queries83.ndvEstimate("sk", k))).head().getLong(0)
+      assert(graft.functions.Kmv.ndvEstimate(sk, k) === sql, s"k=$k $sk")
+    }
+  }
+
   test("decideBroadcast is the q212 oracle's arithmetic") {
     assert(StatsPlanner.decideBroadcast(1000, 10, 100) == "broadcast_right")
     assert(StatsPlanner.decideBroadcast(10, 1000, 100) == "broadcast_left")
