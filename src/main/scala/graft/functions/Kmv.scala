@@ -71,12 +71,19 @@ object Kmv {
       ((BigInt(k - 1) << 64) / (if (u < 0) u + (BigInt(1) << 64) else u)).toLong
     }
 
-  /** Buffer: the bottom-k distinct hashes, unsigned-ascending. */
-  class SketchAgg(k: Int) extends Aggregator[Long, Seq[Long], Seq[Long]] {
+  /** Buffer: the bottom-k distinct hashes, unsigned-ascending. A NULL
+    * input (the hash of a NULL value) is not a value and leaves the
+    * sketch as it is, as SQL's distinct counts skip NULL. */
+  class SketchAgg(k: Int)
+      extends Aggregator[java.lang.Long, Seq[Long], Seq[Long]] {
     require(k >= 2, s"kmv: k must be >= 2, got $k")
     override def zero: Seq[Long] = Vector.empty
 
-    override def reduce(acc: Seq[Long], h: Long): Seq[Long] = {
+    override def reduce(acc: Seq[Long], hash: java.lang.Long): Seq[Long] =
+      if (hash == null) acc else reduce(acc, hash.longValue)
+
+    /** [[reduce]] of a non-NULL hash. */
+    def reduce(acc: Seq[Long], h: Long): Seq[Long] = {
       val n = acc.size
       if (n == k && java.lang.Long.compareUnsigned(h, acc(n - 1)) >= 0) acc
       else {
@@ -107,7 +114,9 @@ object Kmv {
 
   /** Column-facing form: `kmv_sketch(k)(hashCol)` usable in `agg(...)`;
     * input must be a 64-bit hash column (e.g. [[Expressions.fnv_hash]]).
+    * NULL hashes are skipped (the input is read boxed, so a NULL is not
+    * deserialized to 0).
     */
   def kmv_sketch(k: Int)(hash: Column): Column =
-    udaf(new SketchAgg(k), Encoders.scalaLong).apply(hash)
+    udaf(new SketchAgg(k), Encoders.LONG).apply(hash)
 }

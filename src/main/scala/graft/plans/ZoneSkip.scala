@@ -364,23 +364,14 @@ object Zones {
     * not contain are simply never consulted. `dictDirs`, when given,
     * are [[analyzeDictFiles]] metadata tables merged into the
     * manifest's dictionary half.
-    *
-    * `zoneRows` / `dictRows` / `bloomRows` are metadata rows already in
-    * driver memory, laid out as the matching analyzer's output (a
-    * commit registering the version it just analyzed passes them
-    * instead of reading its own metadata back); they merge with the
-    * rows loaded from the dirs.
     */
   def registerFromMetadataRoots(spark: SparkSession, dirs: Seq[String],
                                 metaDirs: Seq[String],
                                 dictDirs: Seq[String] = Nil,
                                 bloomDirs: Seq[String] = Nil,
-                                rebaseTo: Option[String] = None,
-                                zoneRows: Seq[Row] = Nil,
-                                dictRows: Seq[Row] = Nil,
-                                bloomRows: Seq[Row] = Nil): Unit =
+                                rebaseTo: Option[String] = None): Unit =
     ZoneRegistry.registerRoots(dirs, mergedManifest(spark, metaDirs,
-      dictDirs, bloomDirs, rebaseTo, zoneRows, dictRows, bloomRows))
+      dictDirs, bloomDirs, rebaseTo))
 
   /** Reinterpret a durably-recorded file path against the table base
     * it is being REGISTERED under: metadata rows record absolute paths
@@ -417,36 +408,60 @@ object Zones {
   private def mergedManifest(spark: SparkSession, metaDirs: Seq[String],
                              dictDirs: Seq[String],
                              bloomDirs: Seq[String] = Nil,
-                             rebaseTo: Option[String] = None,
-                             zoneRows: Seq[Row] = Nil,
-                             dictRows: Seq[Row] = Nil,
-                             bloomRows: Seq[Row] = Nil)
+                             rebaseTo: Option[String] = None)
+      : ZoneRegistry.ZoneManifest =
+    manifestOf(metadataRows(spark, metaDirs, ZoneRowSchema),
+      metadataRows(spark, dictDirs, DictRowSchema),
+      metadataRows(spark, bloomDirs, BloomRowSchema), rebaseTo)
+
+  /** The manifest of metadata rows, each kind laid out as its
+    * analyzer's output ([[ZoneRowSchema]], [[DictRowSchema]],
+    * [[BloomRowSchema]]; one row per file and column, one per nonzero
+    * Bloom word — metadata-sized): a snapshot-table registration passes
+    * the rows it loaded and the ones its commit just built. Each kind
+    * groups by the rebased, URI-normalized file key; a metadata table
+    * written before column tags existed contributes no tags
+    * (parse-based behavior).
+    */
+  private[graft] def manifestOf(zoneRows: Seq[Row], dictRows: Seq[Row],
+                                bloomRows: Seq[Row],
+                                rebaseTo: Option[String] = None)
       : ZoneRegistry.ZoneManifest = {
-    val mm = loadManifest(spark, metaDirs, zoneRows, rebaseTo)
-    val (dicts, dtags) = loadDicts(spark, dictDirs, dictRows, rebaseTo)
-    val (blooms, btags) = loadBlooms(spark, bloomDirs, bloomRows, rebaseTo)
-    mm.copy(dicts = dicts, blooms = blooms,
-      tags = mm.tags ++ dtags ++ btags)
+    def byFile[T](rows: Seq[Row])(f: Seq[Row] => T): Map[String, T] =
+      rows.groupBy(r =>
+        ZoneRegistry.fileKey(rebasedKey(rebaseTo)(r.getString(0))))
+        .map { case (file, rs) => file -> f(rs) }
+    ZoneRegistry.ZoneManifest(
+      files = byFile(zoneRows)(_.map(r =>
+        r.getString(1) -> (r.getString(2), r.getString(3))).toMap),
+      tags = tagsOf(zoneRows, 4) ++ tagsOf(dictRows, 3) ++
+        tagsOf(bloomRows, 6),
+      dicts = byFile(dictRows)(_.map(r =>
+        r.getString(1) -> r.getSeq[String](2).toSet).toMap),
+      blooms = byFile(bloomRows)(_.groupBy(_.getString(1)).map {
+        case (c, ws) => c -> ZoneRegistry.BloomSketch(ws.head.getInt(2),
+          ws.head.getInt(3), ws.map(r => r.getInt(4) -> r.getLong(5)).toMap)
+      }))
   }
 
-  /** The rows of the metadata tables at `dirs` (one Spark scan of
-    * their [[partFiles]] under `schema`, so no job infers it from
-    * Parquet footers; none when they hold none), followed by `rows`. A
-    * table written before column tags existed reads `col_tag` as NULL.
+  /** The rows of the metadata tables at `dirs`: one Spark scan of their
+    * [[partFiles]] under `schema`, so no job infers it from Parquet
+    * footers; none when they hold none. A table written before column
+    * tags existed reads `col_tag` as NULL.
     */
   private def metadataRows(spark: SparkSession, dirs: Seq[String],
-                           schema: StructType, rows: Seq[Row]): Seq[Row] = {
+                           schema: StructType): Seq[Row] = {
     val parts = dirs.flatMap { d =>
       val p = new org.apache.hadoop.fs.Path(d)
       partFiles(p.getFileSystem(spark.sessionState.newHadoopConf()), p)
     }
-    if (parts.isEmpty) rows
+    if (parts.isEmpty) Nil
     else spark.read.schema(schema)
-      .parquet(parts.map(_.getPath.toString): _*).collect().toSeq ++ rows
+      .parquet(parts.map(_.getPath.toString): _*).collect().toSeq
   }
 
-  // the columns the loaders below read of each analyzer's output, in
-  // its column order (also the layouts a commit writes its metadata in)
+  // the columns manifestOf reads of each analyzer's output, in its
+  // column order (also the layouts a commit writes its metadata in)
   private[graft] val ZoneRowSchema = StructType.fromDDL(
     "file STRING, col_name STRING, min_repr STRING, max_repr STRING, " +
     "col_tag STRING")
@@ -469,57 +484,6 @@ object Zones {
       val n = st.getPath.getName
       st.isFile && !n.startsWith("_") && !n.startsWith(".")
     }
-
-  // each loader below groups its kind's rows — loaded from dirs and/or
-  // passed in memory, in the analyzer's column order — by the rebased,
-  // URI-normalized file key; a metadata table written before column
-  // tags existed contributes no tags (parse-based behavior)
-  private def loadBlooms(spark: SparkSession, bloomDirs: Seq[String],
-                         fresh: Seq[Row], rebaseTo: Option[String])
-      : (Map[String, Map[String, ZoneRegistry.BloomSketch]],
-         Map[String, String]) = {
-    // one row per (file, col, nonzero word) — metadata-sized collect
-    val rows = metadataRows(spark, bloomDirs, BloomRowSchema, fresh)
-    val blooms = rows
-      .groupBy(r => ZoneRegistry.fileKey(
-        rebasedKey(rebaseTo)(r.getString(0))))
-      .map { case (f, rs) =>
-        f -> rs.groupBy(_.getString(1)).map { case (c, ws) =>
-          c -> ZoneRegistry.BloomSketch(ws.head.getInt(2),
-            ws.head.getInt(3),
-            ws.map(r => r.getInt(4) -> r.getLong(5)).toMap)
-        }
-      }
-    (blooms, tagsOf(rows, 6))
-  }
-
-  private def loadDicts(spark: SparkSession, dictDirs: Seq[String],
-                        fresh: Seq[Row], rebaseTo: Option[String])
-      : (Map[String, Map[String, Set[String]]], Map[String, String]) = {
-    // one row per (file, col) with a ≤maxDict array — the same bounded
-    // driver fetch as the min/max manifest load
-    val rows = metadataRows(spark, dictDirs, DictRowSchema, fresh)
-    val dicts = rows.groupBy(r => ZoneRegistry.fileKey(
-      rebasedKey(rebaseTo)(r.getString(0))))
-      .map { case (f, rs) =>
-        f -> rs.map(r =>
-          r.getString(1) -> r.getSeq[String](2).toSet).toMap
-      }
-    (dicts, tagsOf(rows, 3))
-  }
-
-  private def loadManifest(spark: SparkSession, metaDirs: Seq[String],
-                           fresh: Seq[Row], rebaseTo: Option[String])
-      : ZoneRegistry.ZoneManifest = {
-    val rows = metadataRows(spark, metaDirs, ZoneRowSchema, fresh)
-    val files = rows.groupBy(r => ZoneRegistry.fileKey(
-      rebasedKey(rebaseTo)(r.getString(0))))
-      .map { case (f, rs) =>
-        f -> rs.map(r => r.getString(1) -> (r.getString(2), r.getString(3)))
-          .toMap
-      }
-    ZoneRegistry.ZoneManifest(files, tagsOf(rows, 4))
-  }
 
   /** column → type tag from the rows' tag field `i` (NULL: untagged). */
   private def tagsOf(rows: Seq[Row], i: Int): Map[String, String] =

@@ -308,7 +308,7 @@ object Loader {
 
   /** A version's deletion-vector set plus its on-disk parquet size —
     * the O(1) metadata that decides broadcast vs shuffle application
-    * (see [[applyDv]]). */
+    * (see [[dvAnti]]). */
   private[sources] final case class DvSet(df: DataFrame, bytes: Long)
 
   /** Past this many bytes of DV parquet (~millions of tombstones) the
@@ -336,9 +336,7 @@ object Loader {
     else {
       val parts = graft.plans.Zones.partFiles(fs, p)
       val df =
-        if (parts.isEmpty) spark.createDataFrame(
-          java.util.Collections.emptyList[org.apache.spark.sql.Row](),
-          DvSchema)
+        if (parts.isEmpty) emptyFrame(spark, DvSchema)
         else spark.read.schema(DvSchema)
           .parquet(parts.map(_.getPath.toString): _*)
       Some(DvSet(df, parts.map(_.getLen).sum))
@@ -360,19 +358,6 @@ object Loader {
                 else keyed
     withPos.join(right, Seq("__dv_f", "__dv_p"), "left_anti")
   }
-
-  /** Remove DV-tombstoned rows from a parquet scan of layout files:
-    * anti-join on the location-independent file suffix + in-file row
-    * position (see [[dvAnti]] for the broadcast/shuffle choice).
-    * Identity when no DV set exists.
-    */
-  private def applyDv(df: DataFrame, dv: Option[DvSet]): DataFrame =
-    dv.fold(df) { d =>
-      import org.apache.spark.sql.functions.col
-      dvAnti(df.withColumn("__dv_f", dvSuffix(col("_metadata.file_path")))
-        .withColumn("__dv_p", col("_metadata.row_index")), d)
-        .drop("__dv_f", "__dv_p")
-    }
 
   /** The carried-forward DV set after `rewritten` buckets' files were
     * rewritten (their tombstones are now physically applied). None if
@@ -518,20 +503,38 @@ object Loader {
     }
   }
 
-  /** [[eraRead]] with the version's deletion vectors already
-    * subtracted — the LIVE rows every snapshot consumer wants. The
-    * anti-join runs on per-scan-captured positions, so it composes
-    * with the rename path's union. */
+  /** [[eraRead]] with the deletion vectors `dv` already subtracted —
+    * the LIVE rows every snapshot consumer reads; no verb pairs
+    * [[eraRead]] with [[dvAnti]] itself. The anti-join runs on
+    * per-scan-captured positions, so it composes with the rename path's
+    * union. `withPos` keeps the __dv_f/__dv_p tombstone-identity
+    * columns (a probe that tombstones rows, or a rewrite that takes
+    * each row's bucket from its source file). */
   private def eraReadLive(spark: org.apache.spark.sql.SparkSession,
                           fs: org.apache.hadoop.fs.FileSystem,
                           base: String, man: Manifest,
                           buckets: Seq[Int], dv: Option[DvSet],
                           target: Option[org.apache.spark.sql.types
-                            .StructType] = None): DataFrame = {
+                            .StructType] = None,
+                          withPos: Boolean = false): DataFrame = {
     val r = eraRead(spark, fs, base, man, buckets,
-      withPos = dv.nonEmpty, target)
-    dv.fold(r)(d => dvAnti(r, d).drop("__dv_f", "__dv_p"))
+      withPos = withPos || dv.nonEmpty, target)
+    val live = dv.fold(r)(dvAnti(r, _))
+    if (withPos || dv.isEmpty) live else live.drop("__dv_f", "__dv_p")
   }
+
+  /** An empty frame of `schema`. */
+  private def emptyFrame(spark: org.apache.spark.sql.SparkSession,
+                         schema: org.apache.spark.sql.types.StructType)
+      : DataFrame =
+    spark.createDataFrame(
+      java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema)
+
+  /** The distinct values of the int bucket column `bucket` of `df`,
+    * ascending: one small collect, bounded by the bucket count. */
+  private def bucketsIn(df: DataFrame,
+                        bucket: org.apache.spark.sql.Column): IndexedSeq[Int] =
+    df.select(bucket).distinct().collect().map(_.getInt(0)).sorted.toIndexedSeq
 
   private def fsFor(path: String,
                     spark: org.apache.spark.sql.SparkSession) =
@@ -560,6 +563,18 @@ object Loader {
     /** The latest version's deletion vectors. */
     def dv(spark: org.apache.spark.sql.SparkSession): Option[DvSet] =
       man.flatMap(_ => readDv(spark, fs, dir))
+    /** The latest manifest of a table `verb` needs one of. */
+    def layout(verb: String): Manifest = {
+      require(man.nonEmpty, s"$verb: no committed layout under $base — " +
+        "seed the table with streamUpsertSink first")
+      man.get
+    }
+    /** The manifest of committed version `v`. */
+    def at(v: Long): Manifest =
+      if (v == seq) man.get else readManifest(fs, s"$base/v$v")
+    /** Every committed version with its manifest, ascending: the
+      * version log (one manifest read per version). */
+    def log: Seq[(Long, Manifest)] = versions.map(v => v -> at(v))
   }
 
   private def head(spark: org.apache.spark.sql.SparkSession,
@@ -571,10 +586,12 @@ object Loader {
   }
 
   /** What [[writeBuckets]] wrote: the frame's schema (data columns plus
-    * the int bucket column) and, when the write maintained metadata, the
-    * per-file partials its tasks folded ([[MetaFold]]). */
+    * the int bucket column), the buckets it wrote a dir for (a bucket
+    * with no row writes none) and, when the write maintained metadata,
+    * the per-file partials its tasks folded ([[MetaFold]]). */
   private final case class Written(
       schema: org.apache.spark.sql.types.StructType,
+      buckets: Set[Int],
       partials: Seq[MetaFold.FilePartial])
 
   /** What a verb's stage function leaves in the attempt dir, and what
@@ -743,18 +760,22 @@ object Loader {
       renames.toList, extras.toList)
   }
 
-  /** Committed (manifest-present) version ids under `baseDir`, sorted. */
-  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
-                                baseDir: String): Seq[Long] = {
-    val basePath = new org.apache.hadoop.fs.Path(baseDir)
-    (if (fs.exists(basePath)) fs.listStatus(basePath).toSeq else Seq.empty)
+  /** The version ids of the `v<seq>` dirs listed under `baseDir`
+    * (none when it does not exist): one listing. */
+  private def listedVersions(fs: org.apache.hadoop.fs.FileSystem,
+                             baseDir: String): Seq[Long] = {
+    (try fs.listStatus(new org.apache.hadoop.fs.Path(baseDir)).toSeq
+     catch { case _: java.io.FileNotFoundException => Nil })
       .map(_.getPath.getName)
       .filter(_.startsWith("v"))
       .flatMap(_.drop(1).toLongOption)
-      .filter(j => fs.exists(new org.apache.hadoop.fs.Path(
-        s"$baseDir/v$j", ManifestName)))
-      .sorted
   }
+
+  /** Committed (manifest-present) version ids under `baseDir`, sorted. */
+  private def committedVersions(fs: org.apache.hadoop.fs.FileSystem,
+                                baseDir: String): Seq[Long] =
+    listedVersions(fs, baseDir).filter(j => fs.exists(
+      new org.apache.hadoop.fs.Path(s"$baseDir/v$j", ManifestName))).sorted
 
   /** The layout's bucket of a key column: FNV-1a of the key's canonical
     * string rendering, mod `n`. Deliberately the engine's own hash, not
@@ -770,6 +791,22 @@ object Loader {
     pmod(graft.functions.Expressions.fnv_hash(
       coalesce(col(key).cast("string"), lit(""))), lit(nBuckets.toLong))
       .cast("int")
+  }
+
+  /** The typed refusal of a read of `man` (of `buckets` only, when
+    * given) — what `what` names — when vacuum reclaimed a holder dir it
+    * needs: the one retention check of [[readSnapshot]],
+    * [[restoreSnapshot]], [[snapshotVersionsDetailed]] and
+    * [[tableChanges]]. One exists() per holder dir. */
+  private def reclaimed(fs: org.apache.hadoop.fs.FileSystem, base: String,
+                        man: Manifest, what: String,
+                        buckets: Option[Set[Int]] = None)
+      : Option[VacuumedVersionException] = {
+    val gone = holderDirs(base, man, buckets)
+      .filterNot(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
+    gone.headOption.map(g => new VacuumedVersionException(
+      s"$what references ${gone.length} bucket dir(s) reclaimed by " +
+      s"vacuumSnapshots (first: $g) — it is no longer fully readable"))
   }
 
   /** Resolve a [[streamUpsertSink]] version directory through its
@@ -792,8 +829,7 @@ object Loader {
         "vacuumSnapshots (retention is the vacuum cadence; " +
         "snapshotVersionsDetailed lists what is still readable)")
     val man = readManifest(fs, versionDir)
-    val dirs = holderDirs(base, man)
-    require(dirs.nonEmpty,
+    require(man.buckets.nonEmpty,
       s"readSnapshot: $versionDir has an empty manifest")
     // a SURVIVING manifest can still reference a bucket whose holding
     // version was vacuumed (it was live for the CURRENT manifest, not
@@ -810,22 +846,10 @@ object Loader {
     // latest.
     val thisSeq = new org.apache.hadoop.fs.Path(versionDir).getName
       .stripPrefix("v").toLongOption
-    val latestListed = fs.listStatus(
-        new org.apache.hadoop.fs.Path(base)).toSeq
-      .map(_.getPath.getName)
-      .filter(_.startsWith("v"))
-      .flatMap(_.drop(1).toLongOption)
-      .maxOption
-    val isLatest = thisSeq.isDefined && thisSeq == latestListed
-    if (!isLatest) {
-      val gone = dirs.filterNot(d =>
-        fs.exists(new org.apache.hadoop.fs.Path(d)))
-      if (gone.nonEmpty)
-        throw new VacuumedVersionException(
-          s"readSnapshot: $versionDir references ${gone.length} bucket " +
-          s"dir(s) reclaimed by vacuumSnapshots (first: ${gone.head}) " +
-          "— this historical version is no longer fully readable")
-    }
+    val latestListed = listedVersions(fs, base).maxOption
+    if (thisSeq.isEmpty || thisSeq != latestListed)
+      reclaimed(fs, base, man, s"readSnapshot: $versionDir")
+        .foreach(throw _)
     // schema evolution means bucket files can span eras: the manifest's
     // recorded schema reads them uniformly (files that predate a column
     // null-fill it) with NO footer pass; renamed layouts read
@@ -848,11 +872,8 @@ object Loader {
     * read per committed version.
     */
   def snapshotVersions(spark: org.apache.spark.sql.SparkSession,
-                       baseDir: String): Seq[(Long, Long)] = {
-    val fs = fsFor(baseDir, spark)
-    committedVersions(fs, baseDir).map(v =>
-      v -> readManifest(fs, s"$baseDir/v$v").txn)
-  }
+                       baseDir: String): Seq[(Long, Long)] =
+    head(spark, baseDir).log.map { case (v, m) => v -> m.txn }
 
   /** [[snapshotVersions]] plus the RETENTION verdict per version:
     * (seq, txn, readable) where readable means every bucket dir the
@@ -867,14 +888,9 @@ object Loader {
   def snapshotVersionsDetailed(spark: org.apache.spark.sql.SparkSession,
                                baseDir: String)
       : Seq[(Long, Long, Boolean)] = {
-    val fs = fsFor(baseDir, spark)
-    committedVersions(fs, baseDir).map { v =>
-      val man = readManifest(fs, s"$baseDir/v$v")
-      val readable = bucketHolders(man).forall { case (b, mv) =>
-        fs.exists(new org.apache.hadoop.fs.Path(
-          s"$baseDir/v$mv/$BucketCol=$b"))
-      }
-      (v, man.txn, readable)
+    val h = head(spark, baseDir)
+    h.log.map { case (v, m) =>
+      (v, m.txn, reclaimed(h.fs, baseDir, m, s"v$v").isEmpty)
     }
   }
 
@@ -885,11 +901,8 @@ object Loader {
     * per committed version.
     */
   def commitTimestamps(spark: org.apache.spark.sql.SparkSession,
-                       baseDir: String): Seq[(Long, Long)] = {
-    val fs = fsFor(baseDir, spark)
-    committedVersions(fs, baseDir).map(v =>
-      v -> readManifest(fs, s"$baseDir/v$v").ts)
-  }
+                       baseDir: String): Seq[(Long, Long)] =
+    head(spark, baseDir).log.map { case (v, m) => v -> m.ts }
 
   /** Resolve a wall-clock timestamp to the snapshot version current AS
     * OF that instant — the `TIMESTAMP AS OF` verb every table format
@@ -907,9 +920,9 @@ object Loader {
     */
   def timestampAsOf(spark: org.apache.spark.sql.SparkSession,
                     baseDir: String, tsMillis: Long): String = {
-    val times = commitTimestamps(spark, baseDir)
-    require(times.nonEmpty,
-      s"timestampAsOf: no committed layout under $baseDir")
+    val h = head(spark, baseDir)
+    h.layout("timestampAsOf")
+    val times = h.log.map { case (v, m) => v -> m.ts }
     times.filter(_._2 <= tsMillis).lastOption match {
       case Some((v, _)) => s"$baseDir/v$v"
       case None =>
@@ -942,22 +955,16 @@ object Loader {
   def restoreSnapshot(spark: org.apache.spark.sql.SparkSession,
                       baseDir: String, toSeq: Long): String = {
     val h = head(spark, baseDir)
-    if (h.man.isEmpty)
-      sys.error(s"restoreSnapshot: no committed layout under $baseDir")
+    h.layout("restoreSnapshot")
     require(toSeq != h.seq,
       s"restoreSnapshot: v$toSeq is already the latest version")
     if (!h.versions.contains(toSeq))
       throw new VacuumedVersionException(
         s"restoreSnapshot: version v$toSeq of $baseDir is not " +
         "committed or was reclaimed by vacuumSnapshots")
-    val man = readManifest(h.fs, s"$baseDir/v$toSeq")
-    val gone = holderDirs(baseDir, man).filterNot(d =>
-      h.fs.exists(new org.apache.hadoop.fs.Path(d)))
-    if (gone.nonEmpty)
-      throw new VacuumedVersionException(
-        s"restoreSnapshot: v$toSeq references ${gone.length} bucket " +
-        s"dir(s) reclaimed by vacuumSnapshots (first: ${gone.head}) " +
-        "— the target is no longer fully readable")
+    val man = h.at(toSeq)
+    reclaimed(h.fs, baseDir, man, s"restoreSnapshot: v$toSeq")
+      .foreach(throw _)
     // the restored ERA's tombstone set defines its live rows; the commit
     // time stays monotone against the CURRENT head
     commit(spark, h, None)(_ => Staged(man.copy(txn = -1L),
@@ -976,13 +983,9 @@ object Loader {
     */
   def describeHistory(spark: org.apache.spark.sql.SparkSession,
                       baseDir: String): DataFrame = {
-    val fs = fsFor(baseDir, spark)
-    val vs = committedVersions(fs, baseDir)
-    val latest = vs.lastOption
-      .map(v => bucketHolders(readManifest(fs, s"$baseDir/v$v")))
-      .getOrElse(Nil)
-    val rows = vs.map { v =>
-      val man = readManifest(fs, s"$baseDir/v$v")
+    val h = head(spark, baseDir)
+    val latest = h.man.map(bucketHolders).getOrElse(Nil)
+    val rows = h.log.map { case (v, man) =>
       // merge-on-read appendices count as written/current holders too
       (v, man.txn, if (man.txn < 0) 1L else 0L,
         bucketHolders(man).count(_._2 == v).toLong,
@@ -1021,21 +1024,19 @@ object Loader {
   def vacuumSnapshots(spark: org.apache.spark.sql.SparkSession,
                       baseDir: String,
                       retainAfterTs: Option[Long] = None): Seq[Long] = {
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir)
-    committed.lastOption match {
+    val h = head(spark, baseDir)
+    val fs = h.fs
+    h.versions.lastOption match {
       case None => Seq.empty
       case Some(current) =>
         val retained: Seq[Long] = retainAfterTs match {
           case None => Seq(current)
           case Some(cut) =>
-            (commitTimestamps(spark, baseDir)
-              .filter(_._2 >= cut).map(_._1) :+ current).distinct
+            (h.log.filter(_._2.ts >= cut).map(_._1) :+ current).distinct
         }
-        val live = retained.flatMap(v =>
-          bucketHolders(readManifest(fs, s"$baseDir/v$v")).map(_._2))
+        val live = retained.flatMap(v => bucketHolders(h.at(v)).map(_._2))
           .toSet ++ retained
-        val dead = committed.filterNot(live.contains)
+        val dead = h.versions.filterNot(live.contains)
         // in-version maintenance metadata dies with the version dir
         dead.foreach(v =>
           fs.delete(new org.apache.hadoop.fs.Path(s"$baseDir/v$v"), true))
@@ -1115,8 +1116,7 @@ object Loader {
         // Data txns are the stream's strictly increasing batch ids, so
         // one data version decides; maintenance commits (txn -1,
         // compaction) in between are skipped over.
-        val lastData = h.versions.reverseIterator
-          .map(v => v -> readManifest(h.fs, s"$baseDir/v$v"))
+        val lastData = h.versions.reverseIterator.map(v => v -> h.at(v))
           .find(_._2.txn >= 0)
         lastData.filter(_._2.txn == id) match {
           case Some((v, _)) =>
@@ -1223,8 +1223,7 @@ object Loader {
       // exception, not an untyped AnalysisException at count() time.
       checkGate(spark, delta, maintain, "applyDelta")
       // the buckets this delta touches: bounded by nBuckets
-      val touched = latest.select(col(BucketCol)).distinct()
-        .collect().map(_.getInt(0)).sorted
+      val touched = bucketsIn(latest, col(BucketCol))
       // durable prior-version lookup (see restart contract): the
       // latest committed manifest IS the current state — data or
       // maintenance commit alike. The commit lands on the slot after
@@ -1251,7 +1250,7 @@ object Loader {
             batchData, key)
         case _ => batchData
       }
-      stageAndPublish(spark, h, merged, touched.toIndexedSeq, priorMap,
+      stageAndPublish(spark, h, merged, touched, priorMap,
         priorDv, nBuckets, key, maintain, txn)
     } finally { latest.unpersist(); () }
   }
@@ -1304,10 +1303,15 @@ object Loader {
     val plain = sorted.write.mode(SaveMode.Overwrite).partitionBy(BucketCol)
     val w = maintain.flatMap(_.maxRecordsPerFile)
       .fold(plain)(m => plain.option("maxRecordsPerFile", m.toString))
-    Written(sorted.schema, maintain.filter(MetaFold.maintains).fold {
+    val partials = maintain.filter(MetaFold.maintains).fold {
       w.parquet(attempt); Seq.empty[MetaFold.FilePartial]
     }(mt => MetaFold.folding(df.sparkSession, mt)(opts =>
-      w.format(MetaFold.Format).options(opts).save(attempt))))
+      w.format(MetaFold.Format).options(opts).save(attempt)))
+    // the attempt holds nothing but this write's bucket dirs yet
+    Written(sorted.schema, fsFor(attempt, df.sparkSession)
+      .listStatus(new org.apache.hadoop.fs.Path(attempt))
+      .map(_.getPath.getName).filter(_.startsWith(s"$BucketCol="))
+      .map(_.stripPrefix(s"$BucketCol=").toInt).toSet, partials)
   }
 
   /** Commit of every bucket-REWRITING transaction with a keyed
@@ -1362,22 +1366,59 @@ object Loader {
       val written = writeBuckets(
         merged.withColumn(BucketCol, bucketOf(key, nBuckets)), attempt,
         maintain)
-      // touched buckets live at this slot, untouched buckets keep
-      // pointing at their current version. Copy-forward state rides
-      // along: the rename log, and the extras appendices and deletion
-      // vectors of UNTOUCHED buckets (a rewritten bucket's appendices
-      // and tombstones are physically merged; priorMap membership
-      // guards the rebucket case, where every old-modulus appendix
-      // dies with the full rewrite)
-      Staged(
-        Manifest(priorMap ++ touched.map(_ -> h.next), nBuckets, txn,
-          recordedSchema,
-          renames = h.man.map(_.renames).getOrElse(Nil),
-          extras = h.man.map(_.extras).getOrElse(Nil)
-            .filter(e => priorMap.contains(e._1) &&
-                         !touched.contains(e._1))),
-        dvMinusBuckets(priorDv, touched.toSet), Some(written))
+      // a touched bucket left without rows (a MERGE that deletes all of
+      // them) wrote no dir: it leaves the manifest
+      rewriteStaged(h, priorMap, priorDv, written.buckets,
+        touched.toSet -- written.buckets, nBuckets, txn, recordedSchema,
+        Some(written))
     }
+  }
+
+  /** The manifest rule of every bucket rewrite: the `rewritten` buckets
+    * point at this commit's slot and the `dropped` (emptied) ones leave
+    * the layout; both lose their extras appendices and tombstones,
+    * which the rewrite applied physically. Every other bucket of
+    * `prior` keeps its pointer, appendices and tombstones, and the
+    * rename log carries over. `prior` is empty for a rebucket: its full
+    * rewrite under a new modulus carries no appendix forward. */
+  private def rewriteStaged(h: Head, prior: Map[Int, Long],
+                            priorDv: Option[DvSet], rewritten: Set[Int],
+                            dropped: Set[Int], nBuckets: Int, txn: Long,
+                            schema: org.apache.spark.sql.types.StructType,
+                            written: Option[Written]): Staged = {
+    val gone = rewritten ++ dropped
+    val buckets = (prior -- dropped) ++ rewritten.map(_ -> h.next)
+    require(buckets.nonEmpty, s"every row of ${h.base} would be gone — " +
+      "refusing to commit an empty snapshot (drop the table instead)")
+    Staged(Manifest(buckets, nBuckets, txn, schema,
+        renames = h.man.map(_.renames).getOrElse(Nil),
+        extras = h.man.map(_.extras).getOrElse(Nil)
+          .filter(e => prior.contains(e._1) && !gone(e._1))),
+      dvMinusBuckets(priorDv, gone), written)
+  }
+
+  /** The bucket-rewrite stage of [[compactSnapshot]] and
+    * [[deleteWhere]]: the head's live rows of `buckets` (read under
+    * `target`, tombstones applied, extras appendices folded in), each
+    * row's bucket taken from its source file path — no key column is
+    * needed — and those `keep` passes written in ONE partitioned write
+    * under the declared file order ([[writeBuckets]]). A bucket with no
+    * row left writes no dir, and each caller decides from
+    * [[Written.buckets]] what an emptied bucket becomes. */
+  private def rewriteBuckets(spark: org.apache.spark.sql.SparkSession,
+                             h: Head, priorDv: Option[DvSet],
+                             buckets: Set[Int], attempt: String,
+                             maintain: Option[Maintain],
+                             target: Option[org.apache.spark.sql.types
+                               .StructType] = None,
+                             keep: Option[org.apache.spark.sql.Column] = None)
+      : Written = {
+    import org.apache.spark.sql.functions.col
+    val live = eraReadLive(spark, h.fs, h.base, h.man.get,
+        buckets.toSeq.sorted, priorDv, target, withPos = true)
+      .withColumn(BucketCol, pathBucket(col("__dv_f")))
+      .drop("__dv_f", "__dv_p")
+    writeBuckets(keep.fold(live)(live.filter), attempt, maintain)
   }
 
   /** BATCH writer for a [[streamUpsertSink]] layout — stream and batch
@@ -1398,11 +1439,8 @@ object Loader {
     require(!delta.isStreaming, "upsertBatch: streaming input — use " +
       "streamUpsertSink")
     val h = head(spark, baseDir)
-    val man = h.man.getOrElse(sys.error(
-      "upsertBatch: no committed layout under " + baseDir +
-      " — seed the table with streamUpsertSink first"))
-    applyDelta(spark, h, delta, key, orderCols, man.nBuckets,
-      maintain, txn = -1L)
+    applyDelta(spark, h, delta, key, orderCols,
+      h.layout("upsertBatch").nBuckets, maintain, txn = -1L)
   }
 
   /** SQL MERGE INTO for the snapshot sink — the general conditional
@@ -1447,9 +1485,7 @@ object Loader {
     import org.apache.spark.sql.functions._
     require(!source.isStreaming, "mergeInto: streaming source")
     val h = head(spark, baseDir)
-    val man = h.man.getOrElse(sys.error(
-      "mergeInto: no committed layout under " + baseDir +
-      " — seed the table with streamUpsertSink first"))
+    val man = h.layout("mergeInto")
     val snapSchema = man.schema
     require(source.columns.toSet == snapSchema.fieldNames.toSet,
       s"mergeInto: source columns (${source.columns.sorted.mkString(",")}) " +
@@ -1463,15 +1499,12 @@ object Loader {
         s"mergeInto: the source has multiple rows for one $key — " +
         "ambiguous MATCHED actions (the standard's cardinality " +
         "violation); de-duplicate the source first")
-      val touched = src
-        .select(bucketOf(key, man.nBuckets).as("__b"))
-        .distinct().collect().map(_.getInt(0)).sorted.toIndexedSeq
+      val touched = bucketsIn(src, bucketOf(key, man.nBuckets))
       val priorBuckets = touched.filter(man.buckets.contains)
       val priorDv = h.dv(spark)
       val dataCols = snapSchema.fieldNames.toIndexedSeq
       val target =
-        if (priorBuckets.isEmpty) spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), snapSchema)
+        if (priorBuckets.isEmpty) emptyFrame(spark, snapSchema)
         else eraReadLive(spark, h.fs, baseDir, man, priorBuckets, priorDv,
           target = Some(snapSchema))
       val t = target.select(dataCols.map(c => col(c).as(s"t_$c")): _*)
@@ -1534,35 +1567,30 @@ object Loader {
     import org.apache.spark.sql.functions._
     require(fromSeq < toSeq,
       s"tableChanges: fromSeq $fromSeq must precede toSeq $toSeq")
-    val fs = fsFor(baseDir, spark)
-    val committed = committedVersions(fs, baseDir).toSet
-    ((fromSeq to toSeq) filterNot committed).headOption.foreach(v =>
+    val h = head(spark, baseDir)
+    val fs = h.fs
+    ((fromSeq to toSeq) filterNot h.versions.toSet).headOption.foreach(v =>
       throw new VacuumedVersionException(
         s"tableChanges: version v$v of $baseDir is not committed or " +
         "was reclaimed by vacuumSnapshots — the change window is gone"))
-    def readVersionBuckets(man: Manifest, buckets: Seq[Int],
-                           dv: Option[DvSet]): DataFrame = {
-      val dirs = holderDirs(baseDir, man, Some(buckets.toSet))
-      val live = dirs.filter(d =>
-        fs.exists(new org.apache.hadoop.fs.Path(d)))
-      if (live.size != dirs.size)
-        throw new VacuumedVersionException(
-          s"tableChanges: ${dirs.size - live.size} bucket dir(s) of " +
-          s"$baseDir were reclaimed by vacuumSnapshots mid-window")
-      if (live.isEmpty)
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](), man.schema)
-      else eraReadLive(spark, fs, baseDir, man,
-        buckets.filter(b => man.buckets.contains(b) ||
-          man.extras.exists(_._1 == b)), dv)
+    // each version's manifest and DV set read ONCE for the whole
+    // window: adjacent steps share a version (step n's cur is step
+    // n+1's prev)
+    val manByVer = (fromSeq to toSeq).map(v => v -> h.at(v)).toMap
+    val dvByVer = (fromSeq to toSeq).map(v =>
+      v -> readDv(spark, fs, s"$baseDir/v$v")).toMap
+    // the live rows of version `v`'s `buckets` (none it holds: empty)
+    def readVersionBuckets(v: Long, buckets: Seq[Int]): DataFrame = {
+      val man = manByVer(v)
+      reclaimed(fs, baseDir, man, s"tableChanges: v$v of $baseDir",
+        Some(buckets.toSet)).foreach(throw _)
+      val held = buckets.filter(b => man.buckets.contains(b) ||
+        man.extras.exists(_._1 == b))
+      if (held.isEmpty) emptyFrame(spark, man.schema)
+      else eraReadLive(spark, fs, baseDir, man, held, dvByVer(v))
     }
     def extrasOf(man: Manifest): Map[Int, Set[Long]] =
       man.extras.groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
-    // each version's DV set read ONCE for the whole window: adjacent
-    // steps share a version (step n's cur is step n+1's prev)
-    val dvByVer: Map[Long, Option[DvSet]] =
-      (fromSeq to toSeq).map(v =>
-        v -> readDv(spark, fs, s"$baseDir/v$v")).toMap
     // the buckets of the tombstones present in exactly one of the two
     // sets — added by a DV delete or an update, or removed by a restore
     // or a rewrite: one plan over both sets, whatever their size
@@ -1571,16 +1599,12 @@ object Loader {
       Seq(prev, cur).zipWithIndex.collect { case (Some(d), i) =>
         d.df.select(col("file"), col("pos"), lit(i).as("__side"))
       }.reduceOption(_ union _).fold(Set.empty[Int])(tagged =>
-        tagged.groupBy(col("file"), col("pos"))
+        bucketsIn(tagged.groupBy(col("file"), col("pos"))
           .agg(min(col("__side")).as("__lo"), max(col("__side")).as("__hi"))
-          .filter(col("__lo") === col("__hi"))
-          .select(pathBucket(col("file"))).distinct()
-          .collect().map(_.getInt(0)).toSet)
+          .filter(col("__lo") === col("__hi")), pathBucket(col("file"))).toSet)
     val steps = (fromSeq + 1 to toSeq).map { seq =>
-      val manPrev = readManifest(fs, s"$baseDir/v${seq - 1}")
-      val manCur = readManifest(fs, s"$baseDir/v$seq")
-      val dvPrev = dvByVer(seq - 1)
-      val dvCur = dvByVer(seq)
+      val manPrev = manByVer(seq - 1)
+      val manCur = manByVer(seq)
       if (manCur.nBuckets != manPrev.nBuckets) {
         // layout migration: every file rewritten, no visible row change
         None
@@ -1599,17 +1623,17 @@ object Loader {
           (exPrev.keySet ++ exCur.keySet).filter(b =>
             exPrev.getOrElse(b, Set.empty) !=
               exCur.getOrElse(b, Set.empty)) ++
-          dvChangedBuckets(dvPrev, dvCur)).toSeq.sorted
+          dvChangedBuckets(dvByVer(seq - 1), dvByVer(seq))).toSeq.sorted
         Option.when(changed.nonEmpty) {
           // align eras across a RENAME COLUMN boundary: the prev
           // side reads under ITS manifest's names; renames recorded
           // AT this step project them to the cur side's names so
           // the by-name diff compares the same logical column
-          val prev0 = readVersionBuckets(manPrev, changed, dvPrev)
+          val prev0 = readVersionBuckets(seq - 1, changed)
           val prev = manCur.renames.filter(_._1 == seq)
             .foldLeft(prev0) { case (df, (_, o, n)) =>
               df.withColumnRenamed(o, n) }
-          val cur = readVersionBuckets(manCur, changed, dvCur)
+          val cur = readVersionBuckets(seq, changed)
           val pCols = prev.columns.toIndexedSeq
           val cCols = cur.columns.toIndexedSeq
           val all = (pCols ++ cCols).distinct
@@ -1642,16 +1666,10 @@ object Loader {
     }.flatten
     steps.reduceOption((a, b) =>
         a.unionByName(b, allowMissingColumns = true))
-      .getOrElse {
-        val sc = readManifest(fs, s"$baseDir/v$toSeq").schema
-        spark.createDataFrame(
-          new java.util.ArrayList[org.apache.spark.sql.Row](),
-          org.apache.spark.sql.types.StructType(sc
-            :+ org.apache.spark.sql.types.StructField("_change_type",
-              org.apache.spark.sql.types.StringType)
-            :+ org.apache.spark.sql.types.StructField("_commit_version",
-              org.apache.spark.sql.types.LongType, nullable = false)))
-      }
+      .getOrElse(emptyFrame(spark, manByVer(toSeq).schema
+        .add("_change_type", org.apache.spark.sql.types.StringType)
+        .add("_commit_version", org.apache.spark.sql.types.LongType,
+          nullable = false)))
   }
 
   /** Metadata-only ALTER TABLE DROP COLUMN for the snapshot sink —
@@ -1670,8 +1688,7 @@ object Loader {
   def dropColumn(spark: org.apache.spark.sql.SparkSession,
                  baseDir: String, column: String, key: String): String = {
     val h = head(spark, baseDir)
-    val man = h.man.getOrElse(sys.error(
-      s"dropColumn: no committed layout under $baseDir"))
+    val man = h.layout("dropColumn")
     val sc = man.schema
     require(column != key,
       s"dropColumn: $column is the layout's upsert key")
@@ -1706,8 +1723,7 @@ object Loader {
                    baseDir: String, oldName: String,
                    newName: String): String = {
     val h = head(spark, baseDir)
-    val man = h.man.getOrElse(sys.error(
-      s"renameColumn: no committed layout under $baseDir"))
+    val man = h.layout("renameColumn")
     val sc = man.schema
     require(sc.fieldNames.contains(oldName),
       s"renameColumn: no column '$oldName' in " +
@@ -1746,17 +1762,14 @@ object Loader {
                baseDir: String, newBuckets: Int, key: String,
                maintain: Option[Maintain] = None): String = {
     val h = head(spark, baseDir)
-    val man = h.man.getOrElse(sys.error(
-      s"rebucket: no committed layout under $baseDir"))
+    val man = h.layout("rebucket")
     require(newBuckets >= 1, s"rebucket: $newBuckets < 1")
     require(newBuckets != man.nBuckets,
       s"rebucket: layout already has $newBuckets buckets")
     // the live snapshot (DV-applied), full rewrite
     val merged = readSnapshot(spark, h.dir)
-    val touched = merged
-      .select(bucketOf(key, newBuckets).as("__b"))
-      .distinct().collect().map(_.getInt(0)).sorted.toIndexedSeq
-    stageAndPublish(spark, h, merged, touched, priorMap = Map.empty,
+    stageAndPublish(spark, h, merged,
+      bucketsIn(merged, bucketOf(key, newBuckets)), priorMap = Map.empty,
       priorDv = None, nBuckets = newBuckets, key = key,
       maintain = maintain, txn = -1L)
   }
@@ -1795,8 +1808,7 @@ object Loader {
     // exactly where both get physically applied and purged
     val priorDv = h.dv(spark)
     val dvBuckets: Set[Int] = priorDv.fold(Set.empty[Int])(d =>
-      d.df.select(pathBucket(col("file")).as("b"))
-        .distinct().collect().map(_.getInt(0)).toSet)
+      bucketsIn(d.df, pathBucket(col("file"))).toSet)
     val extraBuckets = man.extras.map(_._1).toSet
     val fragmented = man.buckets.toSeq.sorted.filter { case (b, v) =>
       dvBuckets.contains(b) || extraBuckets.contains(b) ||
@@ -1819,35 +1831,27 @@ object Loader {
       // PHYSICALLY purged here, renamed columns land under their
       // CURRENT physical name, extras appendices fold in, tombstones
       // apply (compaction is where merge-on-read debt of every kind gets
-      // discharged); each row's bucket id comes from its source file
-      // path. writeBuckets re-applies the declared layout (clusterBy OR
-      // the Morton zorderBy) — compaction must not trade fragmentation
-      // for a destroyed sort order.
-      val scan = eraRead(spark, fs, baseDir, man, fragmented.map(_._1),
-        withPos = true)
-      val written = writeBuckets(priorDv.fold(scan)(dvAnti(scan, _))
-        .withColumn(BucketCol, pathBucket(col("__dv_f")))
-        .drop("__dv_f", "__dv_p"), attempt, maintain)
-      // a bucket whose live rows were ALL tombstoned writes no partition
-      // dir, but its manifest pointer below still references this slot —
-      // materialize the empty dir
-      compacted.foreach(b =>
+      // discharged). writeBuckets re-applies the declared layout
+      // (clusterBy OR the Morton zorderBy) — compaction must not trade
+      // fragmentation for a destroyed sort order.
+      val written =
+        rewriteBuckets(spark, h, priorDv, compacted, attempt, maintain)
+      // a bucket whose live rows were ALL tombstoned wrote no dir, but
+      // it stays in the layout at this slot — materialize the empty dir
+      (compacted -- written.buckets).foreach(b =>
         fs.mkdirs(new org.apache.hadoop.fs.Path(s"$attempt/$BucketCol=$b")))
-      val newBuckets = man.buckets ++ compacted.map(_ -> h.next)
-      val newExtras = man.extras.filterNot(e => compacted.contains(e._1))
+      // compaction never evolves the schema; every DV'd bucket was
+      // rewritten, so the carried DV set is empty by construction
+      val staged = rewriteStaged(h, man.buckets, priorDv, compacted,
+        Set.empty, man.nBuckets, -1L, man.schema, Some(written))
       // prune rename-log entries no surviving era needs: an era at
       // holding version v consults renames with seq > v, so once every
       // holder postdates a rename it is dead weight (historical
       // manifests keep their own logs — time travel is untouched)
-      val minHolder = (newBuckets.values ++ newExtras.map(_._2))
-        .foldLeft(h.next)(math.min)
-      // compaction never evolves the schema; every DV'd bucket was
-      // rewritten, so the carried set is empty by construction — the
-      // call stays for the invariant
-      Staged(Manifest(newBuckets, man.nBuckets, -1L, man.schema,
-          renames = man.renames.filter(_._1 > minHolder),
-          extras = newExtras),
-        dvMinusBuckets(priorDv, compacted), Some(written))
+      val m = staged.manifest
+      val minHolder = bucketHolders(m).map(_._2).foldLeft(h.next)(math.min)
+      staged.copy(manifest =
+        m.copy(renames = m.renames.filter(_._1 > minHolder)))
     })
   }
 
@@ -1889,12 +1893,11 @@ object Loader {
     // scan's _metadata BEFORE any join (input_file_name() refuses
     // multi-source plans, and a join's projection hides the struct).
     val priorDv = h.dv(spark)
-    val probe0 = eraRead(spark, h.fs, baseDir, man,
-      man.buckets.keys.toSeq, withPos = true)
+    val probe = eraReadLive(spark, h.fs, baseDir, man,
+      man.buckets.keys.toSeq, priorDv, withPos = true)
     val snapSchema = org.apache.spark.sql.types.StructType(
-      probe0.schema.filterNot(f =>
+      probe.schema.filterNot(f =>
         f.name == "__dv_f" || f.name == "__dv_p"))
-    val probe = priorDv.fold(probe0)(dvAnti(probe0, _))
     val touchedFiles = probe.filter(cond)
       .select(col("__dv_f").as("f"))
       .groupBy(col("f")).agg(cnt(lit(1)).as("n"))
@@ -1910,33 +1913,15 @@ object Loader {
     // SQL DELETE: remove iff cond is TRUE — NULL keeps the row
     val keepCond = not(coalesce(cond, lit(false)))
     val next = commit(spark, h, maintain) { attempt =>
-      // ONE partitioned write for every touched bucket; each row's
-      // bucket id comes from its source file path — no key column is
-      // needed. The SNAPSHOT schema, not the file schema: a predicate
-      // may name a column this bucket's era predates (reads back NULL);
-      // extras appendices fold in and are purged by the rewrite.
-      val scan = eraRead(spark, h.fs, baseDir, man, touched.toSeq.sorted,
-        withPos = true, target = Some(snapSchema))
-      val written = writeBuckets(priorDv.fold(scan)(dvAnti(scan, _))
-        .withColumn(BucketCol, pathBucket(col("__dv_f")))
-        .drop("__dv_f", "__dv_p")
-        .filter(keepCond), attempt, maintain)
-      // a touched bucket whose survivors all matched writes NO partition
-      // dir — it leaves the manifest (emptied)
-      val rewritten = touched.filter(b => h.fs.exists(
-        new org.apache.hadoop.fs.Path(s"$attempt/$BucketCol=$b")))
-      val buckets = (man.buckets -- (touched -- rewritten)) ++
-        rewritten.map(_ -> h.next).toMap
-      require(buckets.nonEmpty,
-        s"deleteWhere: every row of $baseDir matched — refusing to " +
-        "commit an empty snapshot (drop the table instead)")
-      // touched buckets' tombstones are physically applied by the
-      // rewrite (or the bucket emptied); the rest carry forward
-      Staged(Manifest(buckets, man.nBuckets, -1L, snapSchema,
-          renames = man.renames,
-          extras = man.extras.filterNot(e => touched.contains(e._1))),
-        dvMinusBuckets(priorDv, touched),
-        Option.when(rewritten.nonEmpty)(written))
+      // The SNAPSHOT schema, not the file schema: a predicate may name
+      // a column this bucket's era predates (reads back NULL)
+      val written = rewriteBuckets(spark, h, priorDv, touched, attempt,
+        maintain, Some(snapSchema), Some(keepCond))
+      // a touched bucket whose survivors all matched wrote no dir — it
+      // leaves the manifest (emptied)
+      rewriteStaged(h, man.buckets, priorDv, written.buckets,
+        touched -- written.buckets, man.nBuckets, -1L, snapSchema,
+        Option.when(written.buckets.nonEmpty)(written))
     }
     Some((next, deleted))
   }
@@ -1976,13 +1961,12 @@ object Loader {
     // probe LIVE rows only: an already-tombstoned row must not be
     // tombstoned twice (the union below stays duplicate-free because
     // a (file, pos) can appear in at most one of the two sets).
-    // eraRead captures _metadata positions per scan BEFORE the
-    // anti-join, and folds in any extras appendices — a post-update
-    // image living in an extra file is tombstonable like any row.
-    val scan0 = eraRead(spark, h.fs, baseDir, man,
-      man.buckets.keys.toSeq, withPos = true)
-    val live = priorDv.fold(scan0)(dvAnti(scan0, _))
-    val newDv = live.filter(coalesce(cond, lit(false)))
+    // Positions are captured per scan BEFORE the anti-join, and extras
+    // appendices fold in — a post-update image living in an extra file
+    // is tombstonable like any row.
+    def live(dv: Option[DvSet]): DataFrame = eraReadLive(spark, h.fs,
+      baseDir, man, man.buckets.keys.toSeq, dv, withPos = true)
+    val newDv = live(priorDv).filter(coalesce(cond, lit(false)))
       .select(col("__dv_f").as("file"), col("__dv_p").as("pos"))
       .persist()
     try {
@@ -1995,8 +1979,8 @@ object Loader {
       // size rides the prior's verdict (the new tombstones are
       // churn-sized): past the broadcast bound the probe anti-joins
       // by shuffle like every reader would.
-      require(!dvAnti(scan0, DvSet(all,
-          priorDv.map(_.bytes).getOrElse(0L))).isEmpty,
+      require(!live(Some(DvSet(all,
+          priorDv.map(_.bytes).getOrElse(0L)))).isEmpty,
         s"deleteWhereVectors: every row of $baseDir matched — " +
         "refusing to tombstone the whole table (drop it instead)")
       Some((commit(spark, h, None)(_ =>
@@ -2051,10 +2035,9 @@ object Loader {
         s"(has: ${snapSchema.fieldNames.mkString(", ")})"))
     val priorDv = h.dv(spark)
     // live rows with tombstone identity (extras-aware, rename-aware)
-    val scanPos = eraRead(spark, h.fs, baseDir, man,
-      man.buckets.keys.toSeq, withPos = true)
-    val live = priorDv.fold(scanPos)(dvAnti(scanPos, _))
-    val matched = live.filter(coalesce(cond, lit(false))).persist()
+    val matched = eraReadLive(spark, h.fs, baseDir, man,
+      man.buckets.keys.toSeq, priorDv, withPos = true)
+      .filter(coalesce(cond, lit(false))).persist()
     try {
       val nUpd = matched.count()
       if (nUpd == 0L) return None
@@ -2071,11 +2054,7 @@ object Loader {
         val written = writeBuckets(
           updated.withColumn(BucketCol, bucketOf(key, man.nBuckets)),
           attempt, maintain)
-        val touchedB = h.fs.listStatus(
-            new org.apache.hadoop.fs.Path(attempt)).toSeq
-          .map(_.getPath.getName)
-          .filter(_.startsWith(s"$BucketCol="))
-          .map(_.stripPrefix(s"$BucketCol=").toInt).sorted
+        val touchedB = written.buckets.toSeq.sorted
         // tombstone the pre-images: prior set ∪ matched positions
         val newDv = matched
           .select(col("__dv_f").as("file"), col("__dv_p").as("pos"))
@@ -2113,9 +2092,9 @@ object Loader {
     if (!MetaFold.maintains(mt)) return Map.empty
     val fs = fsFor(attemptDir, spark)
     val byKey = written.partials.map(p => p.key -> p).toMap
-    val files = fs.listStatus(new org.apache.hadoop.fs.Path(attemptDir)).toSeq
-      .filter(_.getPath.getName.startsWith(s"$BucketCol="))
-      .flatMap(d => graft.plans.Zones.partFiles(fs, d.getPath))
+    val files = written.buckets.toSeq.flatMap(b => graft.plans.Zones
+        .partFiles(fs, new org.apache.hadoop.fs.Path(
+          s"$attemptDir/$BucketCol=$b")))
       .map(st => MetaFold.keyOf(st.getPath)).sorted
       .map { k =>
         (fs.makeQualified(new org.apache.hadoop.fs.Path(s"$finalDir/$k"))
@@ -2140,8 +2119,7 @@ object Loader {
                           schema: org.apache.spark.sql.types.StructType,
                           cols: Seq[String])
       : org.apache.spark.sql.types.StructType =
-    graft.operators.StatsPlanner.analyzeWideBy(spark.createDataFrame(
-        java.util.Collections.emptyList[org.apache.spark.sql.Row](), schema),
+    graft.operators.StatsPlanner.analyzeWideBy(emptyFrame(spark, schema),
       BucketCol, cols.map(c => c -> c)).schema
 
   /** Run `f` with its jobs described and called `maintenance: <tag>`,
@@ -2190,78 +2168,79 @@ object Loader {
                                versionDir: String, maintain: Maintain,
                                fresh: Map[String, MetaFold.MetaRows]): Unit = {
     import org.apache.spark.sql.functions.col
+    import graft.plans.Zones
     val fs = fsFor(versionDir, spark)
     val vPath = new org.apache.hadoop.fs.Path(versionDir)
     val base = vPath.getParent.toString
     val man = readManifest(fs, versionDir)
     val dirs = holderDirs(base, man)
-    val versions = bucketHolders(man).map(_._2).distinct.sorted
-    def freshOf(v: Long, kind: String): Option[MetaFold.MetaRows] =
-      if (s"v$v" == vPath.getName) fresh.get(kind) else None
-    // metadata lives INSIDE each version dir (published atomically
-    // with it); a version committed without a kind has no such dir
-    def metaOf(v: Long, kind: String): Option[String] =
-      Some(s"$base/v$v/$kind")
-        .filter(d => fs.exists(new org.apache.hadoop.fs.Path(d)))
-    // a kind's holders: rows in memory, else dirs on disk
-    def rowsOf(kind: String): Seq[org.apache.spark.sql.Row] =
-      versions.flatMap(freshOf(_, kind)).flatMap(_.rows)
-    def dirsOf(kind: String): Seq[String] =
-      versions.filter(freshOf(_, kind).isEmpty).flatMap(metaOf(_, kind))
-    def hasFresh(kind: String): Boolean =
-      versions.exists(freshOf(_, kind).isDefined)
+    // holders, not just base pointers: a bucket's metadata is its base
+    // version's PLUS any extras versions' appendix rows (tombstoned rows
+    // stay counted until the bucket rewrites, the same declared
+    // staleness deletion vectors already have)
+    val bucketsOf = bucketHolders(man).groupBy(_._2)
+      .map { case (v, bs) => v -> bs.map(_._1).toSet }
+    val self = bucketsOf.keys.find(v => s"v$v" == vPath.getName)
+    // one kind's rows over the holder versions: the published version's
+    // own from `fresh` (a commit never reads back what it wrote), the
+    // others' in ONE collect of their metadata dirs (inside each version
+    // dir, published atomically with it) under `schema`, which infers
+    // nothing from footers. A file-keyed kind is one scan, and a version
+    // committed without it contributes nothing; a per-bucket kind
+    // (`perBucket`) scans each version for the buckets it holds, and
+    // every holder must have it.
+    def rowsOf(kind: String, schema: org.apache.spark.sql.types.StructType,
+               tag: String,
+               perBucket: Option[Long => org.apache.spark.sql.Column] = None)
+        : Seq[org.apache.spark.sql.Row] = {
+      val own = self.flatMap(_ => fresh.get(kind))
+      val disk = bucketsOf.keys.toSeq.sorted
+        .filterNot(v => own.nonEmpty && self.contains(v))
+        .map(v => v -> new org.apache.hadoop.fs.Path(s"$base/v$v/$kind"))
+        .filter { case (v, d) =>
+          fs.exists(d) || perBucket.fold(false)(_ => sys.error(
+            s"registerSnapshot: version v$v of $base has no $kind metadata " +
+            "(was it written with that maintenance?)"))
+        }
+        .map { case (v, d) =>
+          v -> Zones.partFiles(fs, d).map(_.getPath.toString) }
+      def scan(parts: Seq[String]) =
+        spark.read.schema(schema).parquet(parts: _*)
+      own.toSeq.flatMap(_.rows) ++ (
+        if (disk.forall(_._2.isEmpty)) Nil
+        else labeled(spark, tag)(perBucket.fold(scan(disk.flatMap(_._2))) { f =>
+          disk.map { case (v, ps) => scan(ps).filter(f(v)) }
+            .reduce(_ unionByName _)
+        }.collect().toSeq))
+    }
     if (maintain.statCols.nonEmpty) {
       val tz = spark.sessionState.conf.sessionLocalTimeZone
       val types = maintain.statCols.map(man.schema(_).dataType)
-      // holders, not just base pointers: a bucket's stats row set is
-      // its base version's partial PLUS any extras versions' appendix
-      // partials — the merge combines them (tombstoned rows stay
-      // counted until the bucket rewrites, the same declared staleness
-      // deletion vectors already have)
-      val bucketsOf = bucketHolders(man).groupBy(_._2)
-        .map { case (v, bs) => v -> bs.map(_._1).toSet }
-      val inMemory = versions.flatMap(v => freshOf(v, "_stats").toSeq
-        .flatMap(m => m.rows.filter(r => bucketsOf(v).contains(r.getInt(0)))
-          .map(MetaFold.statsOf(_, m.schema, types, tz))))
-      val onDisk = versions.filter(freshOf(_, "_stats").isEmpty)
-      val loaded = if (onDisk.isEmpty) Nil else {
-        // the analyzer's output schema over the recorded table schema:
-        // a read under it infers nothing from footers; ONE scan of every
-        // such version's stats rows
-        val schema = statsSchema(spark,
+      // the analyzer's output schema over the recorded table schema;
+      // each bucket's rows merge on the driver
+      val rows = rowsOf("_stats", statsSchema(spark,
           man.schema.add(BucketCol, org.apache.spark.sql.types.IntegerType),
-          maintain.statCols)
-        labeled(spark, "register stats") {
-          onDisk.map { v =>
-            val sdir = metaOf(v, "_stats").getOrElse(sys.error(
-              s"registerSnapshot: version v$v of $base has no _stats " +
-              "metadata (was it written with statCols maintenance?)"))
-            spark.read.schema(schema).parquet(graft.plans.Zones.partFiles(
-                fs, new org.apache.hadoop.fs.Path(sdir))
-                .map(_.getPath.toString): _*)
-              .filter(col(BucketCol).isin(bucketsOf(v).toSeq: _*))
-          }.reduce(_ unionByName _).collect().toSeq
-        }.map(MetaFold.statsOf(_, schema, types, tz))
-      }
+          maintain.statCols), "register stats",
+        Some(v => col(BucketCol).isin(bucketsOf(v).toSeq: _*)))
       graft.plans.StatsRegistry.registerRoots(dirs, MetaFold.tableStats(
-        inMemory ++ loaded, maintain.statCols, types, tz))
+        rows.map(MetaFold.statsOf(_, types, tz)), maintain.statCols, types,
+        tz))
     }
-    val kinds = Seq("_zones", "_dicts", "_blooms")
-    val kdirs = kinds.map(dirsOf)
     if (Seq(maintain.zoneCols, maintain.dictCols, maintain.bloomCols)
-          .exists(_.nonEmpty) &&
-        (kdirs.exists(_.nonEmpty) || kinds.exists(hasFresh)))
-      labeled(spark, "register zones") {
-        // rebaseTo: metadata rows record paths as of WRITE time, but
-        // this layout may since have been relocated (restored backup,
-        // cloned table, renamed mount) — reinterpret the location-
-        // independent v<seq>/... suffix against the base being
-        // registered, so a moved table's zones/dicts/Blooms still prune
-        graft.plans.Zones.registerFromMetadataRoots(spark, dirs,
-          kdirs(0), kdirs(1), kdirs(2), rebaseTo = Some(base),
-          zoneRows = rowsOf("_zones"), dictRows = rowsOf("_dicts"),
-          bloomRows = rowsOf("_blooms"))
-      }
+          .exists(_.nonEmpty)) {
+      val tag = "register zones"
+      val zones = rowsOf("_zones", Zones.ZoneRowSchema, tag)
+      val dicts = rowsOf("_dicts", Zones.DictRowSchema, tag)
+      val blooms = rowsOf("_blooms", Zones.BloomRowSchema, tag)
+      // rebaseTo: metadata rows record paths as of WRITE time, but this
+      // layout may since have been relocated (restored backup, cloned
+      // table, renamed mount) — reinterpret the location-independent
+      // v<seq>/... suffix against the base being registered, so a moved
+      // table's zones/dicts/Blooms still prune
+      if (Seq(zones, dicts, blooms).exists(_.nonEmpty))
+        graft.plans.ZoneRegistry.registerRoots(dirs,
+          Zones.manifestOf(zones, dicts, blooms, rebaseTo = Some(base)))
+    }
   }
 
   /** Single-file CSV for reference parity (`main.py:277` writes exactly one

@@ -5,7 +5,7 @@ import org.apache.hadoop.mapreduce.{Job, TaskAttemptContext, TaskAttemptID}
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
-import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, Literal}
+import org.apache.spark.sql.catalyst.expressions.{BoundReference, Cast, GenericRowWithSchema, Literal}
 import org.apache.spark.sql.catalyst.util.TypeUtils
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
@@ -169,9 +169,8 @@ private[sources] object MetaFold {
   }
 
   /** The stats kind's aggregates of one column: count, min, max and the
-    * KMV sketch of `mix64(fnv_hash(CAST(c AS STRING)))`. A NULL enters
-    * the sketch as 0, as the sketch aggregator's primitive-long input
-    * deserializes it. */
+    * KMV sketch of `mix64(fnv_hash(CAST(c AS STRING)))`; a NULL is not
+    * a distinct value and stays out of the sketch. */
   private final class StatFold(col: Int, colType: DataType, tz: String)
       extends Bounds(col, colType) {
     private val str = renderer(col, colType, tz)
@@ -181,9 +180,11 @@ private[sources] object MetaFold {
     override def add(r: InternalRow): Unit = {
       super.add(r)
       val s = str(r)
-      if (s != null) nonNull += 1
-      sketch = agg.reduce(sketch,
-        if (s == null) 0L else Expressions.splitmix64(Expressions.fnv1a64(s, 0L)))
+      if (s != null) {
+        nonNull += 1
+        sketch = agg.reduce(sketch,
+          Expressions.splitmix64(Expressions.fnv1a64(s, 0L)))
+      }
     }
     def result: ColPart = ColPart(nonNull, min, max, sketch)
   }
@@ -245,23 +246,24 @@ private[sources] object MetaFold {
     })
 
   /** A `_stats` row (bucket, n_total, then nn/mn/mx/sk per column) of a
-    * bucket's partial. */
-  def statsRow(bucket: Int, p: StatsPart, types: Seq[DataType]): Row =
-    Row.fromSeq(Seq[Any](bucket, p.rows) ++ p.cols.zip(types).flatMap {
-      case (c, dt) =>
+    * bucket's partial, laid out by `schema` and carrying it, like a row
+    * read back from a `_stats` dir. */
+  def statsRow(bucket: Int, p: StatsPart, types: Seq[DataType],
+               schema: StructType): Row =
+    new GenericRowWithSchema((Seq[Any](bucket, p.rows) ++
+      p.cols.zip(types).flatMap { case (c, dt) =>
         val toScala = CatalystTypeConverters.createToScalaConverter(dt)
         Seq(c.nonNull, toScala(c.min), toScala(c.max), c.sketch)
-    })
+      }).toArray, schema)
 
-  /** The partial of a `_stats` row laid out by `schema`, its min/max
-    * cast to `types` (a row written before a type widening). */
-  def statsOf(r: Row, schema: StructType, types: Seq[DataType],
-              tz: String): StatsPart =
+  /** The partial of a `_stats` row (which carries its layout), its
+    * min/max cast to `types` (a row written before a type widening). */
+  def statsOf(r: Row, types: Seq[DataType], tz: String): StatsPart =
     StatsPart(r.getLong(1), types.indices.map { i =>
       val o = 2 + 4 * i
       def native(j: Int): Any = {
         val v = CatalystTypeConverters.convertToCatalyst(r.get(j))
-        val from = schema(j).dataType
+        val from = r.schema(j).dataType
         if (from == types(i)) v
         else Cast(Literal(v, from), types(i), Some(tz)).eval()
       }
@@ -300,14 +302,15 @@ private[sources] object MetaFold {
         r <- rows(f, p, c, i)
       } yield r)
     val types = mt.statCols.map(written(_).dataType)
+    lazy val stats = statsSchema
     Seq(
       Option.when(mt.zoneCols.nonEmpty)("_zones" ->
         perFile(mt.zoneCols, Zones.ZoneRowSchema) { (f, p, c, i) =>
           Seq(Row(f, c, p.zones(i)._1, p.zones(i)._2, tag(c)))
         }),
-      Option.when(mt.statCols.nonEmpty)("_stats" -> MetaRows(statsSchema,
+      Option.when(mt.statCols.nonEmpty)("_stats" -> MetaRows(stats,
         files.groupBy(_._2).toSeq.sortBy(_._1).map { case (b, fs) =>
-          statsRow(b, fs.map(_._3.stats).reduce(merge(types)), types)
+          statsRow(b, fs.map(_._3.stats).reduce(merge(types)), types, stats)
         })),
       Option.when(mt.dictCols.nonEmpty)("_dicts" ->
         perFile(mt.dictCols, Zones.DictRowSchema) { (f, p, c, i) =>

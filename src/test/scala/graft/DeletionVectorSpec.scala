@@ -109,6 +109,35 @@ class DeletionVectorSpec extends SparkSpec {
     assert(attempts.isEmpty, attempts.mkString(","))
   }
 
+  test("compaction of a bucket whose every live row is tombstoned keeps " +
+       "it as an empty dir; the step emits no change event") {
+    val base = Files.createTempDirectory("graft-dv-empty").toString
+    val sink = seedSink(base)
+    // the users of one bucket, read off the seed version's file paths
+    val byBucket = Loader.readSnapshot(spark, latestDir(sink))
+      .select(col("user_id"),
+        regexp_extract(input_file_name(), "graft_bucket=([0-9]+)", 1)
+          .as("b"))
+      .as[(Long, String)].collect().groupBy(_._2)
+    assert(byBucket.size === 4)
+    val (b, members) = byBucket.minBy(_._1)
+    val gone = members.map(_._1).toSet
+    val model = snap(sink) -- gone
+    val Some((vDel, deleted)) = Loader.deleteWhereVectors(spark, sink,
+      col("user_id").isin(gone.toSeq: _*))
+    assert(deleted === gone.size.toLong && snap(sink) === model)
+    val Some(vc) = Loader.compactSnapshot(spark, sink)
+    assert(snap(sink) === model)
+    // the emptied bucket stays in the layout as an empty dir of its own
+    val dir = new java.io.File(s"$vc/graft_bucket=$b")
+    assert(dir.isDirectory && dir.list().forall(_.startsWith(".")))
+    assert(!new java.io.File(s"$vc/_dv").exists())
+    def seqOf(d: String) = new java.io.File(d).getName.drop(1).toLong
+    assert(Loader.tableChanges(spark, sink, "user_id", seqOf(vDel),
+      seqOf(vc)).isEmpty)
+    assert(Loader.compactSnapshot(spark, sink).isEmpty)
+  }
+
   test("second DV delete composes; already-tombstoned rows are not " +
        "re-counted") {
     val base = Files.createTempDirectory("graft-dv2").toString

@@ -94,6 +94,33 @@ class MergeIntoSpec extends SparkSpec {
     assert(snap(sink)(1L) === 1L)
   }
 
+  test("a MERGE that deletes every row of one bucket drops the bucket " +
+       "from the layout; deleting every row of the table refuses") {
+    val base = Files.createTempDirectory("graft-mg-empty").toString
+    val sink = seedSink(base)
+    // the rows of one bucket, read off the seed version's file paths
+    val byBucket = Loader.readSnapshot(spark, s"$sink/v0")
+      .select(col("user_id"), col("ts"), col("cents"),
+        regexp_extract(input_file_name(), "graft_bucket=([0-9]+)", 1)
+          .as("b"))
+      .as[(Long, java.sql.Timestamp, Long, String)].collect().groupBy(_._4)
+    val (b, members) = byBucket.minBy(_._1)
+    val gone = members.map(_._1).toSet
+    val model = snap(sink) -- gone
+    val v = Loader.mergeInto(spark, sink,
+      members.map(m => (m._1, m._2, m._3)).toSeq.toDF("user_id", "ts", "cents"),
+      "user_id", deleteWhen = Some(lit(true)))
+    assert(snap(sink) === model)
+    assert(!new java.io.File(s"$v/graft_bucket=$b").exists())
+    val all = snap(sink).toSeq.map { case (u, c) => (u, ts0, c) }
+      .toDF("user_id", "ts", "cents")
+    assert(intercept[IllegalArgumentException] {
+      Loader.mergeInto(spark, sink, all, "user_id",
+        deleteWhen = Some(lit(true)))
+    }.getMessage.contains("refusing"))
+    assert(snap(sink) === model)
+  }
+
   test("cardinality violation, schema mismatch, and CHECK all refuse " +
        "typed with no slot consumed") {
     val base = Files.createTempDirectory("graft-mg3").toString

@@ -288,6 +288,37 @@ class SchemaLifecycleSpec extends SparkSpec {
       noSchema.getMessage.contains("#schema"), noSchema.getMessage)
   }
 
+  test("snapshotVersionsDetailed: a listed version is readable exactly " +
+       "when readSnapshot of it succeeds") {
+    val base = Files.createTempDirectory("graft-svd").toString
+    val sink = seedSink(base)
+    // two users in different buckets, read off the seed's file paths
+    val bucketOf = Loader.readSnapshot(spark, latestDir(sink))
+      .select(col("user_id"),
+        regexp_extract(input_file_name(), "graft_bucket=([0-9]+)", 1))
+      .as[(Long, String)].collect().toMap
+    val u1 = 1L
+    val u2 = bucketOf.keys.toSeq.sorted.find(u => bucketOf(u) != bucketOf(u1))
+      .getOrElse(fail("every user in one bucket"))
+    def bump(u: Long, cents: Long): Unit =
+      Loader.upsertBatch(spark, sink, Seq((u, cents)).toDF("user_id", "cents"),
+        key = "user_id", orderCols = Seq("user_id"))
+    // v1 holds u1's bucket; v2 holds u2's and still points at v1 for
+    // u1's; v3 rewrites u1's bucket again, so v1 is no longer live
+    bump(u1, 1L); bump(u2, 2L); bump(u1, 3L)
+    assert(Loader.vacuumSnapshots(spark, sink) === Seq(1L))
+    val detail = Loader.snapshotVersionsDetailed(spark, sink)
+    assert(detail.map(_._1) === Seq(0L, 2L, 3L))
+    assert(detail.map(_._3) === Seq(true, false, true))
+    detail.foreach { case (v, _, readable) =>
+      val read = scala.util.Try(
+        Loader.readSnapshot(spark, s"$sink/v$v").count())
+      assert(read.isSuccess === readable, s"v$v: $read")
+      read.failed.foreach(e =>
+        assert(e.isInstanceOf[graft.sources.VacuumedVersionException], e))
+    }
+  }
+
   test("time-based retention vacuum protects retained versions' " +
        "holder closures; outside the window reads fail typed") {
     val base = Files.createTempDirectory("graft-rv").toString

@@ -44,6 +44,15 @@ class StatsPlannerSpec extends SparkSpec {
     }
   }
 
+  test("a NULL does not enter the KMV sketch: {1, 2, NULL} has ndv 2") {
+    import spark.implicits._
+    val df = Seq(Some(1L), Some(2L), None).toDF("v")
+    val r = StatsPlanner.analyze(df, Seq("v" -> "v"))
+      .select(col("n_nulls"), col("k_used"), col("ndv_est"))
+      .as[(Long, Long, Long)].head()
+    assert(r === ((1L, 2L, 2L)))
+  }
+
   test("decideBroadcast is the q212 oracle's arithmetic") {
     assert(StatsPlanner.decideBroadcast(1000, 10, 100) == "broadcast_right")
     assert(StatsPlanner.decideBroadcast(10, 1000, 100) == "broadcast_left")
